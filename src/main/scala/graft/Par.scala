@@ -8,8 +8,13 @@ package graft
   * freed under FIFO scheduling). Results — and therefore every
   * gate/oracle value — are byte-identical to the sequential map; only
   * the job overlap changes. Width 3: enough to fill a tail, not enough
-  * to thrash execution memory. Exceptions propagate unchanged (Await
-  * rethrows the first failure).
+  * to thrash execution memory.
+  *
+  * Fail fast: the FIRST member to fail (in time, not in order) ends
+  * the map — members still queued never start, running ones are
+  * interrupted, and that failure is rethrown unchanged. Waiting for
+  * the remaining members in order would spend their whole runtime
+  * before reporting a failure already known.
   *
   * The single shared helper behind SparkEntry.parOrdered and
   * Erasure's member overlap (round-14 advice: two verbatim copies
@@ -18,19 +23,33 @@ private[graft] object Par {
   def ordered[A, B](xs: Seq[A])(f: A => B): Seq[B] =
     if (xs.lengthCompare(2) < 0) xs.map(f)
     else {
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(3, xs.length))
+      import java.util.concurrent.{Callable, ExecutorCompletionService, Executors}
+      import java.util.concurrent.atomic.AtomicReference
+      // force strictness: a lazy Seq (Stream/view/LazyList) would
+      // otherwise submit each member only when iterated (round-14
+      // advice)
+      val members = xs.toVector
+      val pool = Executors.newFixedThreadPool(math.min(3, members.length))
+      val done = new ExecutorCompletionService[Unit](pool)
+      val out = new Array[Any](members.length)
+      val failure = new AtomicReference[Throwable]()
       try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutor(pool)
-        // force strictness BEFORE awaiting: a lazy Seq (Stream/view/
-        // LazyList) would otherwise create each Future only when Await
-        // reaches it, silently serializing the work this helper exists
-        // to overlap (round-14 advice)
-        val fs = xs.toVector.map(x => Future(f(x)))
-        fs.map(Await.result(_, Duration.Inf))
+        members.zipWithIndex.foreach { case (x, i) =>
+          done.submit(new Callable[Unit] {
+            // a member dequeued after a failure never runs f
+            def call(): Unit = if (failure.get == null) {
+              try out(i) = f(x) catch { case t: Throwable =>
+                failure.compareAndSet(null, t); throw t
+              }
+            }
+          })
+        }
+        members.indices.foreach { _ =>
+          done.take()
+          val t = failure.get
+          if (t != null) { pool.shutdownNow(); throw t }
+        }
+        out.toSeq.asInstanceOf[Seq[B]]
       } finally pool.shutdown()
     }
 }

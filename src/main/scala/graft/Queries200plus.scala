@@ -324,8 +324,8 @@ private[graft] object Queries200plus {
     // across the delete (zero rewrite, the 100 TB erasure lever vs the
     // copy-on-write partition rewrite of q234) — and EVERY read face
     // serves the deletion: the hash-gated aggregate goes through the
-    // unified spark.table() resolution (DV anti-join implicit in the
-    // plan), gate_count pins the log-answered COUNT (physical stats
+    // unified spark.table() resolution (the scan-side DV filter
+    // implicit in the plan), gate_count pins the log-answered COUNT (physical stats
     // minus per-file DV counts == the scan truth), gate_gone pins
     // subject absence.
     "q237_dv_erasure" -> ((s, dir) => {
@@ -1352,7 +1352,7 @@ private[graft] object Queries200plus {
     // per-member deletion-vector commits — zero data files rewritten
     // anywhere, gate-pinned — and ONE group flip publishes the erasure
     // everywhere at once; the reads go through group-pinned unified
-    // tables, so the DV anti-join and the group version pinning
+    // tables, so the scan-side DV filter and the group version pinning
     // compose in the same spark.table() plan.
     "q240_dv_group_erasure" -> ((s, dir) => {
       import graft.operators.Erasure

@@ -290,15 +290,8 @@ object Compaction {
     // live files a live DV references: their leaves carry merge-on-read
     // debt and qualify regardless of fragmentation
     val dvs = Manifest.dvsAt(sess, path, v0)
-    val dvFiles: Set[String] =
-      if (dvs.isEmpty) Set.empty
-      else {
-        val liveSet = live.toSet
-        sess.read.parquet(dvs.map(d =>
-            new org.apache.hadoop.fs.Path(rootP, d).toString): _*)
-          .select("file").distinct().collect()
-          .map(_.getString(0)).filter(liveSet).toSet
-      }
+    val dvFiles = graft.sources.DeletionVectors
+      .filesWithDeletes(sess, path, dvs).filter(live.toSet)
     val selected = byLeaf.filter { case (leaf, fls) =>
       inScope(leaf) && (fls.size > budgets(leaf) || fls.exists(dvFiles))
     }

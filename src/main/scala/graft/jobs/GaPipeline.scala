@@ -133,7 +133,11 @@ object GaPipeline {
       col("geo_region").as("geoNetwork_region"),
       col("geo_metro").as("geoNetwork_metro"),
       col("geo_city").as("geoNetwork_city"),
-      col("geo_city_id").cast("int").as("geoNetwork_cityId"),
+      // a non-bot geo-lookup miss carries GeoIp's '(not set)' marker:
+      // the INT column exports NULL for it (as latitude/longitude do);
+      // any other non-integer id still fails the ANSI cast loudly
+      when(col("geo_city_id") =!= "(not set)",
+        col("geo_city_id").cast("int")).as("geoNetwork_cityId"),
       col("geo_network_domain").as("geoNetwork_networkDomain"),
       col("geo_latitude").as("geoNetwork_latitude"),
       col("geo_longitude").as("geoNetwork_longitude"),

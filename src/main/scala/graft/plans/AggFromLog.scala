@@ -157,11 +157,12 @@ case class AggFromLog(spark: SparkSession) extends Rule[LogicalPlan] {
     }
     // merge-on-read guard: a version carrying deletion vectors cannot
     // fold from PHYSICAL per-file stats (deleted rows would count).
-    // Structurally unreachable today — the resolution rule wraps a
-    // DV'd relation in the anti-join, which descend() refuses — but a
-    // directly-constructed pinned index must decline too, never fold
-    // a stale truth. One O(files) manifest text read, only on plans
-    // that already matched every other gate.
+    // The resolution rule's DV filter is a plain Filter descend()
+    // walks through (its `_metadata` references then fail the
+    // partition-column gate below), and a directly-constructed pinned
+    // index carries no filter at all — so this check is the decline
+    // that never folds a stale truth. One O(files) manifest text
+    // read, only on plans that already matched every other gate.
     if (Manifest.dvsAt(spark, m.root.toString, m.version).nonEmpty)
       return None
     val resolver = spark.sessionState.analyzer.resolver

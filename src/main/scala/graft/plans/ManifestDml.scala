@@ -47,8 +47,8 @@ case class ManifestDmlResolution(spark: SparkSession)
 
   /** The manifest-marked catalog entry under a DML target, if any —
     * the resolution rule may already have pinned the relation (and
-    * DV-wrapped it: a Project over a join whose INNER relation keeps
-    * the marker-stripped copy), so collect the one still marked. */
+    * DV-wrapped it: a Project over the DV filter over the pinned
+    * relation), so collect the one still marked. */
   private def manifestTarget(plan: LogicalPlan): Option[CatalogTable] =
     plan.collectFirst {
       case LogicalRelation(_, _, Some(tbl), _, _)

@@ -429,18 +429,13 @@ object ManifestTableResolution {
     val mapped = Manifest.hasColumnMapping(effSchema)
     if (dvs.isEmpty && !mapped) lr
     else {
-      val base = org.apache.spark.sql.GraftDatasetFactory.ofRows(spark, lr)
-      val filtered =
-        if (dvs.isEmpty) base
-        else Manifest.dvAntiJoin(spark, root.toString, base, dvs)
+      val filtered = DeletionVectors.dropDeleted(spark, root.toString,
+        org.apache.spark.sql.GraftDatasetFactory.ofRows(spark, lr), dvs)
       val out =
         if (mapped) Manifest.logicalProjection(filtered, effSchema)
         else filtered.select(lr.output
           .map(org.apache.spark.sql.GraftDatasetFactory.column(_)): _*)
-      out.queryExecution.analyzed.transform {
-        case dvLr @ LogicalRelation(_, _, None, _, _) =>
-          dvLr.copy(catalogTable = Some(stripped))
-      }
+      out.queryExecution.analyzed
     }
   }
 }
@@ -589,20 +584,16 @@ case class ManifestTableResolution(spark: SparkSession)
             val innerRel = HadoopFsRelation(mfi, fsRel.partitionSchema,
               expandedData, fsRel.bucketSpec, fsRel.fileFormat,
               fsRel.options)(spark)
-            val stripped = tbl.copy(properties = tbl.properties -
-              GraftTable.PropManifest - GraftTable.PropGroup -
-              GraftTable.PropVersionAsOf)
             // the inner relation KEEPS the marked catalog entry: the
             // DML resolution rule locates its target by collecting the
             // still-marked relation under the wrap (the DV-wrap
             // discipline); re-entry is cut by the already-pinned
             // fast path and the analyzed-subtree skip
             val innerLr = LogicalRelation(innerRel, tbl)
-            val base = org.apache.spark.sql.GraftDatasetFactory
-              .ofRows(spark, innerLr)
-            val dvs = Manifest.dvsAt(spark, root.toString, v)
-            val filtered = if (dvs.isEmpty) base
-              else Manifest.dvAntiJoin(spark, root.toString, base, dvs)
+            val filtered = DeletionVectors.dropDeleted(spark,
+              root.toString, org.apache.spark.sql.GraftDatasetFactory
+                .ofRows(spark, innerLr),
+              Manifest.dvsAt(spark, root.toString, v))
             val byName = ms.fields.map(f => f.name -> f).toMap
             val cols = lr.output.map { oa =>
               byName.get(oa.name) match {
@@ -612,11 +603,7 @@ case class ManifestTableResolution(spark: SparkSession)
                 case _ => org.apache.spark.sql.functions.col(oa.name)
               }
             }
-            val analyzed = filtered.select(cols: _*)
-              .queryExecution.analyzed.transform {
-                case dvLr @ LogicalRelation(_, _, None, _, _) =>
-                  dvLr.copy(catalogTable = Some(stripped))
-              }
+            val analyzed = filtered.select(cols: _*).queryExecution.analyzed
             org.apache.spark.sql.catalyst.plans.logical.Project(
               analyzed.output.zip(lr.output).map { case (na, oa) =>
                 org.apache.spark.sql.catalyst.expressions.Alias(
@@ -633,41 +620,22 @@ case class ManifestTableResolution(spark: SparkSession)
             val pinned = lr.copy(relation = swapped)
             // MERGE-ON-READ: when the pinned version carries deletion
             // vectors, serve the table MINUS the deleted (file, pos)
-            // rows by wrapping the scan in the shared DV anti-join —
-            // deletes are correctness (unlike the fail-open pruning
-            // sidecars), so the wrap is unconditional and version-
-            // pinned with the snapshot. The project back onto the
-            // relation's own output attributes keeps the exprIds the
-            // outer plan references; the already-pinned fast path
-            // above never re-wraps (the wrap's inner relation matches
-            // it on re-analysis).
+            // rows through the scan-side bitmap filter — deletes are
+            // correctness (unlike the fail-open pruning sidecars), so
+            // the filter is unconditional and version-pinned with the
+            // snapshot. The project back onto the relation's own
+            // output attributes keeps the exprIds the outer plan
+            // references; the already-pinned fast path above never
+            // re-wraps (the filter's relation matches it on
+            // re-analysis).
             val dvs = Manifest.dvsAt(spark, root.toString, v)
             if (dvs.isEmpty) pinned
-            else {
-              val base = org.apache.spark.sql.GraftDatasetFactory
-                .ofRows(spark, pinned)
-              val filtered =
-                Manifest.dvAntiJoin(spark, root.toString, base, dvs)
-              val out = filtered.select(
-                lr.output.map(org.apache.spark.sql.GraftDatasetFactory
-                  .column(_)): _*)
-              // Catalog.refreshTable walks the analyzed plan of
-              // spark.table() and calls `.catalogTable.get` on EVERY
-              // LogicalRelation (RECOVER PARTITIONS → refreshTable
-              // does this during registration) — so the DV-artifact
-              // scan must carry a catalog entry. It gets the outer
-              // table's, with the manifest/group markers stripped so
-              // no graft rule ever mistakes the artifact scan for the
-              // table itself; refresh-by-identifier then just
-              // invalidates the same table's cache twice, harmless.
-              val dvTbl = tbl.copy(properties = tbl.properties -
-                GraftTable.PropManifest - GraftTable.PropGroup -
-                GraftTable.PropVersionAsOf)
-              out.queryExecution.analyzed.transform {
-                case dvLr @ LogicalRelation(_, _, None, _, _) =>
-                  dvLr.copy(catalogTable = Some(dvTbl))
-              }
-            }
+            else DeletionVectors.dropDeleted(spark, root.toString,
+                org.apache.spark.sql.GraftDatasetFactory.ofRows(spark, pinned),
+                dvs)
+              .select(lr.output.map(
+                org.apache.spark.sql.GraftDatasetFactory.column(_)): _*)
+              .queryExecution.analyzed
         }
     }
   }

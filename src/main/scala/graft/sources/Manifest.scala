@@ -428,7 +428,7 @@ object Manifest {
     // coalesces the family back to the one logical column.
     val base = schema.map(expandPhysical).fold(reader)(reader.schema)
       .parquet(files.map(f => new Path(rootP, f).toString): _*)
-    val dvd = dvAntiJoin(spark, root, base, dvs)
+    val dvd = DeletionVectors.dropDeleted(spark, root, base, dvs)
     schema.filter(hasColumnMapping).fold(dvd)(logicalProjection(dvd, _))
   }
 
@@ -484,71 +484,6 @@ object Manifest {
     df.select(cols.toSeq: _*)
   }
 
-  /** Apply deletion vectors to a scan of a manifest snapshot: drop
-    * every (file, pos) row a DV artifact names. The join key is the
-    * ROOT-RELATIVE file path — recovered from `_metadata.file_path` by
-    * stripping the filesystem-QUALIFIED root prefix, which is exact by
-    * construction (the scan's input paths are `qualify(root)/<rel>`,
-    * and `_metadata.file_path` is that qualified string; both sides
-    * are computed here, in the same process, from the same fs). A row
-    * whose path does NOT carry the expected prefix raises rather than
-    * silently keeping a deleted row (fail LOUD, never fail open —
-    * deletes are correctness, unlike the bloom/colstats pruning
-    * sidecars). `_metadata.row_index` is the parquet row position —
-    * stable for immutable files.
-    *
-    * Scale shape: the DV side is O(deleted rows); Spark broadcasts it
-    * under the usual threshold, otherwise the anti-join shuffles on
-    * (file, pos) — commit-sized, never table-sized, and AQE picks the
-    * strategy at runtime. No DVs → the scan is returned untouched
-    * (zero overhead for tables that never saw a delete). */
-  def dvAntiJoin(spark: SparkSession, root: String, scan: DataFrame,
-                 dvs: Seq[String]): DataFrame = {
-    if (dvs.isEmpty) return scan
-    val (_, rootP) = fsOf(spark, root)
-    val dv = spark.read
-      .parquet(dvs.map(d => new Path(rootP, d).toString): _*)
-      .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
-    scan
-      .withColumn("__graft_rel", relPathCol(spark, root))
-      .withColumn("__graft_pos", col("_metadata.row_index"))
-      .join(dv, col("__graft_rel") === col("__dv_file") &&
-        col("__graft_pos") === col("__dv_pos"), "left_anti")
-      .drop("__graft_rel", "__graft_pos")
-  }
-
-  /** Dual of [[dvAntiJoin]]: KEEP exactly the rows `dvRows` (a
-    * (file, pos) frame the caller already loaded) names — how the
-    * change feed materializes a deletion vector's rows as row-level
-    * `delete` events. */
-  def dvSemiJoin(spark: SparkSession, root: String, scan: DataFrame,
-                 dvRows: DataFrame): DataFrame = {
-    val dv = dvRows.select(col("file").as("__dv_file"),
-      col("pos").as("__dv_pos"))
-    scan
-      .withColumn("__graft_rel", relPathCol(spark, root))
-      .withColumn("__graft_pos", col("_metadata.row_index"))
-      .join(dv, col("__graft_rel") === col("__dv_file") &&
-        col("__graft_pos") === col("__dv_pos"), "left_semi")
-      .drop("__graft_rel", "__graft_pos")
-  }
-
-  /** `_metadata.file_path` as a ROOT-RELATIVE path — THE one
-    * normalization both DV writers and DV-applying readers share
-    * (the round-10 bloom-refresh advice: never normalize two ways). */
-  private def relPathCol(spark: SparkSession, root: String)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{concat, expr, lit, raise_error, startswith, when}
-    val (fs, rootP) = fsOf(spark, root)
-    val prefix = fs.makeQualified(rootP).toString.stripSuffix("/") + "/"
-    when(startswith(col("_metadata.file_path"), lit(prefix)),
-      expr(s"substring(_metadata.file_path, ${prefix.length + 1})"))
-      .otherwise(raise_error(concat(
-        lit(s"deletion-vector path mismatch under $root: expected " +
-          s"prefix $prefix, scan saw "),
-        col("_metadata.file_path"))))
-  }
-
   /** MERGE-ON-READ DELETE (Delta deletion vectors / Iceberg position
     * deletes — the public designs): mark every current-snapshot row
     * matching `cond` deleted by writing a (file, pos) deletion-vector
@@ -556,7 +491,7 @@ object Manifest {
     * files rewritten. At 100 TB this is the erasure lever: a
     * copy-on-write delete rewrites every touched partition (O(table
     * slice) bytes); a DV commit writes O(deleted rows) bytes, and the
-    * scan-side anti-join amortizes until [[purgeDeletes]] compacts.
+    * scan-side bitmap filter amortizes until [[purgeDeletes]] compacts.
     *
     * Semantics are AS-OF the snapshot the predicate evaluated against:
     * on a CAS loss the artifact is discarded and the whole delete
@@ -575,23 +510,48 @@ object Manifest {
                   afterPlan: () => Unit = () => ()): (Long, Long) =
     deleteRows(spark, root, _.where(cond), maxAttempts, afterPlan)
 
-  /** The DML matching scan: inference-off parquet over `files` with
-    * the (rel, pos) bookkeeping columns materialized — and, when the
+  /** The DML matching scan: the LIVE rows of version `v` (its deletion
+    * vectors applied) as inference-off parquet over `files`, with the
+    * raw (path, pos) bookkeeping columns materialized — and, when the
     * version's effective schema declares a COLUMN MAPPING (a rename),
     * the physical twins expanded and collapsed back to logical names,
     * so predicates and assignments written against the current schema
     * match rows in pre-rename files. Unmapped tables keep the exact
-    * inference-off raw read (the value-identity discipline). */
+    * inference-off raw read (the value-identity discipline).
+    * Already-deleted rows never re-match, so DV artifacts never hold
+    * duplicate (file, pos) pairs. */
   private def dmlScan(sess: SparkSession, root: String, rootP: Path,
                       files: Seq[String], v: Long): DataFrame = {
     val reader = sess.read.option("basePath", rootP.toString)
     val mapped = schemaAt(sess, root, v).filter(hasColumnMapping)
-    val base = mapped.map(expandPhysical).fold(reader)(reader.schema)
+    val scan = mapped.map(expandPhysical).fold(reader)(reader.schema)
       .parquet(files.map(f => new Path(rootP, f).toString): _*)
-      .withColumn("__graft_rel", relPathCol(sess, root))
+      .withColumn("__graft_path", col("_metadata.file_path"))
       .withColumn("__graft_pos", col("_metadata.row_index"))
-    mapped.fold(base)(m =>
-      logicalProjection(base, m, keep = Seq("__graft_rel", "__graft_pos")))
+    val dvs = dvsAt(sess, root, v)
+    val live = if (dvs.isEmpty) scan else scan.where(DeletionVectors
+      .rowFilter(sess, root, dvs, deleted = false,
+        col("__graft_path"), col("__graft_pos")))
+    mapped.fold(live)(m =>
+      logicalProjection(live, m, keep = Seq("__graft_path", "__graft_pos")))
+  }
+
+  /** Persist the (path, pos) of `hits` (a [[dmlScan]] derivative) as a
+    * new DV artifact: paths go root-relative here, on matched rows
+    * only. Returns the artifact name and its row count — read from the
+    * parquet footers, no read-back job — or None (nothing left on
+    * disk) when nothing matched. */
+  private def writeDv(spark: SparkSession, root: String, fs: FileSystem,
+                      rootP: Path, hits: DataFrame): Option[(String, Long)] = {
+    val dvName = s"$DvDir/dv-${java.util.UUID.randomUUID}"
+    val dvPath = new Path(rootP, dvName)
+    hits.select(DeletionVectors.relPath(spark, root, col("__graft_path"))
+        .as("file"), col("__graft_pos").as("pos"))
+      .write.parquet(dvPath.toString)
+    val parts = fs.listStatus(dvPath).map(_.getPath.getName)
+      .filter(_.endsWith(".parquet")).map(n => s"$dvName/$n").toSeq
+    val n = stagedRowCount(spark, fs, rootP, parts)
+    if (n == 0L) { fs.delete(dvPath, true); None } else Some((dvName, n))
   }
 
   /** Keyed merge-on-read delete: drop every row whose `keys` match a
@@ -628,29 +588,17 @@ object Manifest {
           s"no committed manifest under $root — bootstrap() it first"))
       if (files.isEmpty) return (v, 0L) // empty table: nothing to delete
       val dvs = dvsAt(spark, root, v)
-      // (rel, pos) materialize as REAL columns before the matcher runs:
+      // (path, pos) materialize as REAL columns before the matcher runs:
       // `_metadata` is a scan-level pseudo-column that does not survive
       // a matcher's own joins/projects (e.g. deleteMatching's semi-join)
-      val scan = dmlScan(sess, root, rootP, files, v)
-      val live =
-        if (dvs.isEmpty) scan
-        else scan.join(
-          sess.read.parquet(dvs.map(d => new Path(rootP, d).toString): _*)
-            .select(col("file").as("__dv_file"), col("pos").as("__dv_pos")),
-          col("__graft_rel") === col("__dv_file") &&
-            col("__graft_pos") === col("__dv_pos"), "left_anti")
-      val hits = matcher(live)
-        .select(col("__graft_rel").as("file"), col("__graft_pos").as("pos"))
-      val dvName = s"$DvDir/dv-${java.util.UUID.randomUUID}"
-      val dvPath = new Path(rootP, dvName)
-      hits.write.parquet(dvPath.toString)
-      val n = spark.read.parquet(dvPath.toString).count()
-      if (n == 0L) { fs.delete(dvPath, true); return (v, 0L) }
+      val (dvName, n) = writeDv(sess, root, fs, rootP,
+        matcher(dmlScan(sess, root, rootP, files, v))).getOrElse(
+        return (v, 0L))
       afterPlan()
       tryCommit(spark, root, files, v, Some(dvs :+ dvName)) match {
         case Some(nv) => return (nv, n)
         case None => // lost the slot: discard and re-plan on the new snapshot
-          fs.delete(dvPath, true)
+          fs.delete(new Path(rootP, dvName), true)
           attempt += 1
       }
     }
@@ -694,14 +642,7 @@ object Manifest {
           s"no committed manifest under $root — bootstrap() it first"))
       if (files.isEmpty) return (v, 0L) // empty table: nothing to update
       val dvs = dvsAt(spark, root, v)
-      val scan = dmlScan(sess, root, rootP, files, v)
-      val live =
-        if (dvs.isEmpty) scan
-        else scan.join(
-          sess.read.parquet(dvs.map(d => new Path(rootP, d).toString): _*)
-            .select(col("file").as("__dv_file"), col("pos").as("__dv_pos")),
-          col("__graft_rel") === col("__dv_file") &&
-            col("__graft_pos") === col("__dv_pos"), "left_anti")
+      val live = dmlScan(sess, root, rootP, files, v)
       set.keys.foreach { c => require(
         live.columns.exists(sess.sessionState.analyzer.resolver(_, c)),
         s"assignment targets unknown column $c") }
@@ -709,15 +650,11 @@ object Manifest {
       // rewrite (new values) derive from this frame
       val matched = live.where(cond)
         .localCheckpoint(true) // sever lineage: evaluate the match ONCE
-      val hits = matched
-        .select(col("__graft_rel").as("file"), col("__graft_pos").as("pos"))
-      val dvName = s"$DvDir/dv-${java.util.UUID.randomUUID}"
+      val (dvName, n) = writeDv(sess, root, fs, rootP, matched)
+        .getOrElse(return (v, 0L))
       val dvPath = new Path(rootP, dvName)
-      hits.write.parquet(dvPath.toString)
-      val n = spark.read.parquet(dvPath.toString).count()
-      if (n == 0L) { fs.delete(dvPath, true); return (v, 0L) }
       val updated = set.foldLeft(
-        matched.drop("__graft_rel", "__graft_pos")) {
+        matched.drop("__graft_path", "__graft_pos")) {
         case (df, (c, e)) => df.withColumn(c, e)
       }
       // write-time gate (SQL CHECK constraints): the post-assignment
@@ -774,37 +711,18 @@ object Manifest {
         throw new IllegalArgumentException(
           s"no committed manifest under $root — bootstrap() it first"))
       val dvs = dvsAt(spark, root, v)
-      val (hitsN, dvRef) =
-        if (files.isEmpty) (0L, None) // pure insert into an empty table
-        else {
-          val scan = dmlScan(sess, root, rootP, files, v)
-          val live =
-            if (dvs.isEmpty) scan
-            else scan.join(
-              sess.read
-                .parquet(dvs.map(d => new Path(rootP, d).toString): _*)
-                .select(col("file").as("__dv_file"), col("pos").as("__dv_pos")),
-              col("__graft_rel") === col("__dv_file") &&
-                col("__graft_pos") === col("__dv_pos"), "left_anti")
-          val hits = live
-            .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi")
-            .select(col("__graft_rel").as("file"),
-              col("__graft_pos").as("pos"))
-          val dvName = s"$DvDir/dv-${java.util.UUID.randomUUID}"
-          val dvPath = new Path(rootP, dvName)
-          hits.write.parquet(dvPath.toString)
-          val n = spark.read.parquet(dvPath.toString).count()
-          if (n == 0L) { fs.delete(dvPath, true); (0L, None) }
-          else (n, Some(dvName))
-        }
+      val dv =
+        if (files.isEmpty) None // pure insert into an empty table
+        else writeDv(sess, root, fs, rootP, dmlScan(sess, root, rootP, files, v)
+          .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi"))
       val created =
         if (partCols.nonEmpty) stageUniqueParts(spark, fs, rootP, partCols, src)
         else stageUniqueFlat(spark, fs, rootP, src)
       tryCommit(spark, root, files ++ created, v,
-        Some(dvs ++ dvRef)) match {
-        case Some(nv) => return (nv, hitsN, nSrc)
+        Some(dvs ++ dv.map(_._1))) match {
+        case Some(nv) => return (nv, dv.fold(0L)(_._2), nSrc)
         case None =>
-          dvRef.foreach(d => fs.delete(new Path(rootP, d), true))
+          dv.foreach(d => fs.delete(new Path(rootP, d._1), true))
           created.foreach(c => fs.delete(new Path(rootP, c), false))
           attempt += 1
       }
@@ -875,10 +793,8 @@ object Manifest {
     if (dvs.isEmpty) return v
     val liveSet = files.toSet
     // files the DVs actually touch (rows for replaced files are inert)
-    val affected = spark.read
-      .parquet(dvs.map(d => new Path(rootP, d).toString): _*)
-      .select("file").distinct().collect().map(_.getString(0))
-      .filter(liveSet).sorted.toSeq
+    val affected = DeletionVectors.filesWithDeletes(spark, root, dvs)
+      .filter(liveSet).toSeq.sorted
     if (affected.isEmpty) // only inert DV debris: drop the references
       return commit(spark, root, files, dvs = Some(Nil))
     val uuid = java.util.UUID.randomUUID.toString
@@ -892,7 +808,7 @@ object Manifest {
     }).toSeq.sortBy(_._1).foreach { case (dirRel, rels) =>
       val scan = spark.read
         .parquet(rels.map(r => new Path(rootP, r).toString): _*)
-      val survivors = dvAntiJoin(spark, root, scan, dvs)
+      val survivors = DeletionVectors.dropDeleted(spark, root, scan, dvs)
       val scratch = new Path(rootP, s"_graft_stage/$uuid-purge")
       survivors.write.mode(SaveMode.Overwrite).parquet(scratch.toString)
       val targetDir = if (dirRel.isEmpty) rootP else new Path(rootP, dirRel)
@@ -1079,7 +995,6 @@ object Manifest {
                        replaced: Set[String], created: Seq[String],
                        dvs0: Seq[String], dvs0LiveRefs: Set[String],
                        maxAttempts: Int = 10): Long = {
-    val (_, rootP) = fsOf(spark, root)
     val dvs0Set = dvs0.toSet
     var b = base
     var attempt = 0
@@ -1095,10 +1010,8 @@ object Manifest {
       val dvsNow = dvsAt(spark, root, b)
       val dvsNew = dvsNow.filterNot(dvs0Set)
       if (dvsNew.nonEmpty) {
-        val refs = spark.read
-          .parquet(dvsNew.map(d => new Path(rootP, d).toString): _*)
-          .select("file").distinct().collect().map(_.getString(0))
-        val hit = refs.filter(replaced)
+        val hit = DeletionVectors.filesWithDeletes(spark, root, dvsNew)
+          .filter(replaced).toSeq.sorted
         if (hit.nonEmpty) throw new java.util.ConcurrentModificationException(
           s"rewrite of $root aborted — a concurrent delete published a " +
             s"deletion vector on ${hit.length} file(s) being rewritten " +
@@ -1675,16 +1588,11 @@ object Manifest {
     finally in.close()
     // deletion vectors subtract exactly: stats count PHYSICAL file
     // rows (immutable, carry-forward-able); per-file deleted counts
-    // come from the O(deleted)-sized DV artifacts — never duplicated
-    // per (file, pos) because the delete's matching scan is itself
-    // DV-filtered — so COUNT stays log-answered through merge-on-read
+    // are the cardinalities of the DV bitmaps (exact: a bitmap holds a
+    // row once) — so COUNT stays log-answered through merge-on-read
     // deletes with zero DATA-file IO
     val dvs = dvsAt(spark, root, v)
-    val deleted: Map[String, Long] =
-      if (dvs.isEmpty) Map.empty
-      else spark.read.parquet(dvs.map(d => new Path(rootP, d).toString): _*)
-        .groupBy("file").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val deleted = DeletionVectors.deletedPerFile(spark, root, dvs)
     lines.map { ln =>
       val a = ln.split("\t")
       val (f, n) = (a(0), a(1))

@@ -87,7 +87,7 @@ object ManifestCdc {
     def read(files: Seq[String]): DataFrame =
       spark.read.option("basePath", root).schema(dataSchema)
         .parquet(files.map(f => new Path(rootP, f).toString): _*)
-    // an empty file set gets a schema-only frame WITHOUT the DV joins:
+    // an empty file set gets a schema-only frame WITHOUT the DV filter:
     // `_metadata.file_path` only exists on a real file scan
     def empty(tag: String): DataFrame =
       spark.createDataFrame(
@@ -100,26 +100,21 @@ object ManifestCdc {
     val dvBefore = dvsOf(fromV)
     val dvAfter = dvsOf(toV)
     val dvAdded = dvAfter.filterNot(dvBefore.toSet)
-    lazy val dvAddedRows = spark.read
-      .parquet(dvAdded.map(d => new Path(rootP, d).toString): _*)
-      .select("file", "pos")
-    val dvTouchedBefore: Seq[String] =
-      if (dvAdded.isEmpty) Nil
-      else dvAddedRows.select("file").distinct().collect()
-        .map(_.getString(0)).filter(before).sorted.toSeq
+    val dvTouchedBefore =
+      DeletionVectors.filesWithDeletes(spark, root, dvAdded).filter(before)
     val inserts =
       if (added.isEmpty) empty("insert")
-      else Manifest.dvAntiJoin(spark, root, read(added), dvAfter)
+      else DeletionVectors.dropDeleted(spark, root, read(added), dvAfter)
         .withColumn("_change_type", lit("insert"))
     val removedDeletes =
       if (removed.isEmpty) empty("delete")
-      else Manifest.dvAntiJoin(spark, root, read(removed), dvBefore)
+      else DeletionVectors.dropDeleted(spark, root, read(removed), dvBefore)
         .withColumn("_change_type", lit("delete"))
-    val stillLive = dvTouchedBefore.filter(now.toSet)
+    val stillLive = now.filter(dvTouchedBefore).sorted
     val dvDeletes =
       if (stillLive.isEmpty) None
-      else Some(Manifest.dvSemiJoin(spark, root, read(stillLive),
-          dvAddedRows)
+      else Some(DeletionVectors.keepDeleted(spark, root, read(stillLive),
+          dvAdded)
         .withColumn("_change_type", lit("delete")))
     dvDeletes.foldLeft(inserts.unionByName(removedDeletes))(_ unionByName _)
   }

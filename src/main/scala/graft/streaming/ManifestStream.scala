@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.{Manifest, ManifestGroup}
+import graft.sources.{DeletionVectors, Manifest, ManifestGroup}
 
 /** STREAMING READ OF A MANIFEST TABLE — the incremental-consumption
   * leg of the lakehouse layer (Delta's streaming source / Iceberg's
@@ -219,15 +219,9 @@ class ManifestStreamSource(spark: SparkSession, root: String,
     val dvBefore = dvsOf(fromV)
     val dvAfter = dvsOf(toV)
     val dvAdded = dvAfter.filterNot(dvBefore.toSet)
-    val rootP = new Path(root)
-    lazy val dvAddedRows = spark.read
-      .parquet(dvAdded.map(d => new Path(rootP, d).toString): _*)
-      .select("file", "pos")
     // DV'd files that were live at fromV → already-served rows deleted
-    val dvTouchedBefore: Seq[String] =
-      if (dvAdded.isEmpty) Nil
-      else dvAddedRows.select("file").distinct().collect()
-        .map(_.getString(0)).filter(before).sorted.toSeq
+    val dvTouchedBefore = DeletionVectors
+      .filesWithDeletes(spark, root, dvAdded).filter(before).toSeq.sorted
     if ((removed.nonEmpty || dvTouchedBefore.nonEmpty) && !ignoreChanges)
       throw new IllegalStateException(
         s"manifest stream over $root: version range ($fromV, $toV] " +
@@ -238,7 +232,7 @@ class ManifestStreamSource(spark: SparkSession, root: String,
           s"with changeFeed=true to receive row-level delete+insert " +
           s"events, ignoreChanges=true if the sink key-dedups (e.g. a " +
           s"keyed merge), or stream the table before compaction.")
-    Manifest.dvAntiJoin(spark, root, fileDf(added), dvAfter)
+    DeletionVectors.dropDeleted(spark, root, fileDf(added), dvAfter)
   }
 
   /** ROW-LEVEL CHANGE FEED events of the version range (the Delta CDF
@@ -262,23 +256,17 @@ class ManifestStreamSource(spark: SparkSession, root: String,
     val dvBefore = dvsOf(fromV)
     val dvAfter = dvsOf(toV)
     val dvAdded = dvAfter.filterNot(dvBefore.toSet)
-    val rootP = new Path(root)
-    lazy val dvAddedRows = spark.read
-      .parquet(dvAdded.map(d => new Path(rootP, d).toString): _*)
-      .select("file", "pos")
-    val dvTouchedBefore: Seq[String] =
-      if (dvAdded.isEmpty) Nil
-      else dvAddedRows.select("file").distinct().collect()
-        .map(_.getString(0)).filter(before).sorted.toSeq
-    val inserts = Manifest.dvAntiJoin(spark, root, fileDf(added), dvAfter)
+    val dvTouchedBefore = DeletionVectors
+      .filesWithDeletes(spark, root, dvAdded).filter(before).toSeq.sorted
+    val inserts = DeletionVectors.dropDeleted(spark, root, fileDf(added), dvAfter)
       .withColumn("_change_type", lit("insert"))
     val removedDeletes =
-      Manifest.dvAntiJoin(spark, root, fileDf(removed), dvBefore)
+      DeletionVectors.dropDeleted(spark, root, fileDf(removed), dvBefore)
         .withColumn("_change_type", lit("delete"))
     val dvDeletes =
       if (dvTouchedBefore.isEmpty) None
-      else Some(Manifest.dvSemiJoin(spark, root,
-          fileDf(dvTouchedBefore.filter(now.toSet)), dvAddedRows)
+      else Some(DeletionVectors.keepDeleted(spark, root,
+          fileDf(dvTouchedBefore.filter(now.toSet)), dvAdded)
         .withColumn("_change_type", lit("delete")))
     dvDeletes.foldLeft(inserts.unionByName(removedDeletes))(_ unionByName _)
   }

@@ -108,6 +108,19 @@ class GaPipelineSpec extends SparkTestBase {
     assert(v01 == Seq(1, 2, 3, 5, 6, 7))
   }
 
+  test("export table: a non-bot geo-lookup miss exports a NULL " +
+    "cityId instead of failing the ANSI int cast") {
+    // GeoIp marks a non-bot miss '(not set)' in every geo string column
+    val missed = hits.withColumn("geo_city_id",
+      when(col("device_is_bot"), col("geo_city_id")).otherwise("(not set)"))
+    val export = GaPipeline.exportTable(
+      graft.operators.Ecommerce.explodeProducts(
+        GaPipeline.withDerivedColumns(GaPipeline.sessionized(missed)))
+        .withColumn("product_revenue", lit(null).cast("double")))
+    val ids = export.select("geoNetwork_cityId").collect()
+    assert(ids.nonEmpty && ids.forall(_.isNullAt(0)))
+  }
+
   test("incremental touchpoints: persisted rows identical to full recompute; untouched history passes through") {
     val jobDate = "2019-09-23"
     val empty = GaPipeline.loadHistory(spark, "/nonexistent/history")

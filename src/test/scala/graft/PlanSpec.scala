@@ -569,9 +569,20 @@ class PlanSpec extends SparkTestBase {
           s"iteration grew to $exchanges hash exchanges:\n$plan")
         // the level-1 fold must key by (dst, bucket), never a bare dst
         // collect_list over the full in-degree (the round-14 skew/OOM
-        // shape) — the bucket column div appears in the aggregate keys
-        assert(outer.result().contains(" div "),
-          s"two-level fold bucket key missing from the loop body:\n$plan")
+        // shape) — `src div 2^20` is an aggregate KEY, either inline or
+        // through the alias the optimizer pulls grouping expressions
+        // out into
+        val body = outer.result()
+        val div = s"div ${graft.operators.PageRank.FoldBucketWidth}"
+        val bucketNames = ("(\\(\\S+ " + java.util.regex.Pattern.quote(div) +
+          "\\))(?: AS ([^\\s,\\]]+))?").r.findAllMatchIn(body)
+          .flatMap(m => Seq(m.group(1)) ++ Option(m.group(2))).toSeq
+        val aggKeys = "Aggregate\\(keys=\\[([^\\]]*)\\]".r
+          .findAllMatchIn(body).map(_.group(1)).toSeq
+        assert(aggKeys.exists(k =>
+            k.contains("dst#") && bucketNames.exists(k.contains)),
+          s"two-level fold bucket key ($div) missing from the loop " +
+            s"body's aggregate keys:\n$plan")
       } finally g.unpersist()
     }
   }
@@ -813,8 +824,8 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("deletion vectors in the unified table plan: ZERO overhead " +
-    "while no DVs exist (no join in the plan), and once a DV lands " +
-    "the anti-join appears WITHOUT losing partition pruning") {
+    "while no DVs exist (no filter in the plan), and once a DV lands " +
+    "the scan-side row filter appears WITHOUT losing partition pruning") {
     import graft.sources.{GraftTable, Manifest}
     val path = java.nio.file.Files
       .createTempDirectory("graft_dvplan").toString + "/t"
@@ -829,14 +840,14 @@ class PlanSpec extends SparkTestBase {
     // pre-DV: the resolution wrap must not exist — a table that never
     // saw a delete pays nothing
     val clean = q().queryExecution.optimizedPlan.toString
-    assert(!clean.contains("Join"),
+    assert(!clean.contains("Join") && !clean.contains("graft_dv_filter"),
       s"DV-less table must plan as a bare scan:\n$clean")
     Manifest.deleteWhere(spark, path, col("id") === 1L)
     val df = q()
     val phys = df.queryExecution.executedPlan.toString
-    assert("LeftAnti".r.findFirstIn(phys).nonEmpty,
-      s"DV'd table must serve through the anti-join:\n$phys")
-    // partition pruning pushes through the anti-join's left side: the
+    assert(phys.contains("graft_dv_filter") && !phys.contains("Join"),
+      s"DV'd table must serve through the scan-side filter:\n$phys")
+    // partition pruning pushes through the DV filter: the
     // day filter must reach the MAIN scan as a PartitionFilter, and
     // the pruned file listing must hold exactly the d1 files
     assert("PartitionFilters: \\[[^\\]]*day".r.findFirstIn(phys).isDefined,
