@@ -16,9 +16,9 @@ package graft
   * the remaining members in order would spend their whole runtime
   * before reporting a failure already known.
   *
-  * The single shared helper behind SparkEntry.parOrdered and
-  * Erasure's member overlap (round-14 advice: two verbatim copies
-  * drift on the next tweak). */
+  * The single shared helper for every such overlap: Erasure's group
+  * members and q248's per-member gates call it directly (round-14
+  * advice: verbatim copies drift on the next tweak). */
 private[graft] object Par {
   def ordered[A, B](xs: Seq[A])(f: A => B): Seq[B] =
     if (xs.lengthCompare(2) < 0) xs.map(f)

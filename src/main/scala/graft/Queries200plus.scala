@@ -1049,11 +1049,11 @@ private[graft] object Queries200plus {
       // collect, not one per member (same value, six fewer jobs)
       val subjVal = subject.collect().head.getString(0)
       // per-member gates are independent reads of separate roots:
-      // their jobs overlap (guide §2.6 / SparkEntry.parOrdered), and
+      // their jobs overlap (guide §2.6 / Par.ordered), and
       // `gone` + the served row count fold into ONE aggregate pass per
       // member instead of two separate count() jobs — the gate VALUES
       // are identical, only the job count and overlap change
-      val rows = SparkEntry.parOrdered(tables) { case (tpe, df) =>
+      val rows = Par.ordered(tables) { case (tpe, df) =>
         val root = s"$outRoot/daily/type=$tpe"
         val key = ManifestGroup.normKey(root)
         val gv = afterMap(key)
@@ -1213,7 +1213,7 @@ private[graft] object Queries200plus {
       val subjects = facts.select("custkey")
         .where(pmod(col("custkey"), lit(109)) === 0).distinct()
       Manifest.deleteMatching(s, layout, subjects, Seq("custkey"))
-      val v = Compaction.optimizeZOrder(s, layout, "xk", "yk",
+      val v = Compaction.optimizeZOrder(s, layout, Seq("xk", "yk"),
         zBits = 7, statsCols = Seq("xk", "yk"), numFiles = 8)
       val xAfter = intersecting(v, "xk", 10L, 13L)
       val yAfter = intersecting(v, "yk", 10L, 13L)
@@ -1485,7 +1485,7 @@ private[graft] object Queries200plus {
         if (Manifest.current(s, layout).exists(_._2.nonEmpty)) {
           val subjects = facts.select("custkey")
             .where(pmod(col("custkey"), lit(997)) === 0).distinct()
-          Erasure.erasePartitionScopedAtomic(s, layout, "w", subjects,
+          Erasure.erasePartitionScopedAtomic(s, layout, Seq("w"), subjects,
             Seq("custkey"), batchId = "ivm-erase-1", keepVersions = 2)
         }
         q.processAllAvailable() // delta batch nets the subjects out
@@ -1548,7 +1548,7 @@ private[graft] object Queries200plus {
         if (Manifest.current(s, layout).exists(_._2.nonEmpty)) {
           val subjects = facts.select("custkey")
             .where(pmod(col("custkey"), lit(997)) === 0).distinct()
-          Erasure.erasePartitionScopedAtomic(s, layout, "w", subjects,
+          Erasure.erasePartitionScopedAtomic(s, layout, Seq("w"), subjects,
             Seq("custkey"), batchId = "cdc-erase-1", keepVersions = 2)
         }
         q.processAllAvailable() // delete+insert batch: mirror converges

@@ -196,12 +196,6 @@ object SparkEntry {
       s"${prefix}_$tag").toString
   }
 
-  /** Order-preserving parallel map over INDEPENDENT per-table work in
-    * a query body — the shared [[Par.ordered]] (one helper for this
-    * and Erasure's member overlap; round-14 advice). */
-  private[graft] def parOrdered[A, B](xs: Seq[A])(f: A => B): Seq[B] =
-    Par.ordered(xs)(f)
-
   private[graft] def wipeRoots(s: SparkSession, roots: String*): Unit = {
     val conf = s.sessionState.newHadoopConf()
     roots.foreach { r =>

@@ -118,66 +118,8 @@ object Compaction {
   def readBack(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** ATOMIC compaction — [[compact]] under the
-    * [[graft.sources.Manifest]] commit protocol, closing the documented
-    * mid-commit crash hazard (the header's "a production run points the
-    * write at a staging tree and renames" — this IS that run, with the
-    * rename being the manifest publish instead of a tree move). The
-    * compacted files stage as fresh appends next to the small files
-    * they replace; one rename swaps the manifest; vacuum reclaims the
-    * replaced files. Crash anywhere = old or new snapshot, never a
-    * partition half-compacted. Readers resolve via `Manifest.read`. */
-  def compactAtomic(spark: SparkSession, path: String, partCol: String,
-                    targetBytes: Long = 128L * 1024 * 1024,
-                    partitions: Option[Set[String]] = None,
-                    keepVersions: Int = 1): Long = {
-    import graft.sources.Manifest
-    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled",
-      "false")
-    import sess.implicits._
-    Manifest.bootstrap(sess, path)
-    // per-partition byte budgets from the LIVE file list (a crashed
-    // earlier attempt's garbage must not inflate the budget), sizes
-    // from the commit log's stats sidecar when it covers them — zero
-    // per-file status round trips (round-13 verdict #2)
-    val live = Manifest.current(sess, path).get._2
-    val sizes = Manifest.fileSizes(sess, path, live)
-    val stats = live.groupBy(Manifest.partitionOf(_, partCol))
-      .map { case (value, fls) =>
-        value -> fls.map(f => sizes.getOrElse(f, 0L)).sum
-      }
-    val selected = partitions match {
-      case Some(ps) =>
-        val missing = ps.diff(stats.keySet)
-        require(missing.isEmpty,
-          s"partitions not present under $path: ${missing.toSeq.sorted.mkString(", ")}")
-        stats.view.filterKeys(ps).toMap
-      case None => stats
-    }
-    if (selected.isEmpty) return Manifest.current(sess, path).get._1
-    val counts = selected.map { case (value, bytes) =>
-      value -> math.max(1L, (bytes + targetBytes - 1) / targetBytes)
-    }
-    val df = Manifest.read(sess, path)
-      .filter(col(partCol).isin(counts.keys.toSeq: _*))
-    val budget = broadcast(counts.toSeq.toDF(partCol, "_n"))
-    val salted = df.join(budget, partCol)
-      .withColumn("_salt",
-        pmod(hash(struct(df.columns.map(col): _*)), col("_n")))
-      .repartition(col(partCol), col("_salt"))
-      .drop("_n", "_salt")
-    val newFiles = Manifest.stagePartitionReplacement(sess, path, partCol,
-      salted, counts.keys.toSeq)
-    val v = Manifest.commit(sess, path, newFiles)
-    // keepVersions <= 0 = do NOT vacuum (SQL OPTIMIZE leaves old files
-    // for time travel; VACUUM is its own statement)
-    if (keepVersions > 0) Manifest.vacuum(sess, path, keepVersions)
-    v
-  }
-
-  /** [[compactAtomic]] for an UNPARTITIONED manifest table: one
+  /** ATOMIC compaction of an UNPARTITIONED manifest table — [[compact]]
+    * under the [[graft.sources.Manifest]] commit protocol: one
     * full-replacement commit packing the DV-filtered snapshot into
     * `ceil(bytes / targetBytes)` files. Because the rewrite reads
     * through the deletion vectors, pending deletes MATERIALIZE and
@@ -208,7 +150,7 @@ object Compaction {
     val dvs = Manifest.dvsAt(sess, path, v0)
     if (live.size <= n && dvs.isEmpty) return v0 // already compact
     val packed = Manifest.read(sess, path).repartition(n)
-    val created = Manifest.stageUniqueFlat(sess, fs, rootP, packed)
+    val created = Manifest.stageUniqueParts(sess, fs, rootP, Nil, packed)
     // seam between stage and publish (the commitPartitionReplacementCas
     // discipline): the spec injects the racing commit here to pin both
     // loser outcomes deterministically
@@ -224,8 +166,13 @@ object Compaction {
     v
   }
 
-  /** [[compactAtomic]] for MULTI-LEVEL partitioning, INCREMENTAL by
-    * construction (round-13 verdict #1 — the old form re-staged every
+  /** ATOMIC compaction of a partitioned manifest table — [[compact]]
+    * under the [[graft.sources.Manifest]] commit protocol (the
+    * compacted files stage as fresh appends next to the small files
+    * they replace, one rename publishes; crash anywhere = old or new
+    * snapshot) — at any partitioning depth (one level is
+    * `Seq(partCol)`), INCREMENTAL by construction (round-13 verdict
+    * #1 — the old form re-staged every
     * row of every leaf, O(table) IO + 2× churn for an O(today's-small-
     * files) problem on the statement every streaming-sink table needs
     * weekly): per-LEAF byte budgets (grouped by the full
@@ -368,15 +315,16 @@ object Compaction {
     (s: String) => org.apache.spark.sql.catalyst.catalog
       .ExternalCatalogUtils.escapePathName(s))
 
-  /** OPTIMIZE … ZORDER BY (x, y) — the clustered rewrite every table
-    * format pairs with its data-skipping stats (Delta's OPTIMIZE
-    * ZORDER, public design): ONE atomic full-replacement commit whose
-    * files each cover a narrow z-range over BOTH columns, so the
-    * commit-log colstats sidecar — and through it the unified table's
-    * implicit range pruning AND `SkippingIndex.fromLog` — prunes on
-    * EITHER column (`ORDER BY x` alone gives perfect x-pruning and
-    * none on y; the z-curve gives ~sqrt pruning on each, the right
-    * trade for a table queried by more than one dimension).
+  /** OPTIMIZE … ZORDER BY (c1, …, cn) — the clustered rewrite every
+    * table format pairs with its data-skipping stats (Delta's OPTIMIZE
+    * ZORDER, public design): ONE atomic replacement commit whose files
+    * each cover a narrow z-range over ALL `zCols`, so the commit-log
+    * colstats sidecar — and through it the unified table's implicit
+    * range pruning AND `SkippingIndex.fromLog` — prunes on ANY of them.
+    * One column = a plain ORDER-BY layout (perfect pruning on that
+    * column, none on others); n columns = the n-ary Morton curve
+    * (~n-th-root pruning on each, the right trade for a table queried
+    * by more than one dimension).
     *
     * Composes with merge-on-read: the rewrite reads the DV-filtered
     * snapshot, so an OPTIMIZE also MATERIALIZES pending deletes and
@@ -386,10 +334,12 @@ object Compaction {
     * for time travel until vacuum. Returns the committed version.
     *
     * `zBits` bounds the interleave ([[graft.operators.ZOrder.zValue]]);
-    * x/y must be non-negative integral expressions on that grid (the
-    * caller rescales — epoch days, dictionary codes, bucketed longs).
-    * One-level `partCol` layouts keep their directory partitioning;
-    * the z-clustering applies within the staged write.
+    * the columns must be non-negative integral expressions on that
+    * grid (the caller rescales — epoch days, dictionary codes,
+    * bucketed longs). Partitioned layouts (`partCols`, any depth) keep
+    * their directory partitioning; the z-clustering applies within the
+    * staged write, and `partitionPredicate` (`OPTIMIZE … WHERE`)
+    * scopes it to the matching leaves.
     *
     * `bloomColumn` + `bloomIndexPath` (round-11 verdict #8): a table
     * serving point lookups through a [[graft.sources.BloomFileIndex]]
@@ -403,29 +353,14 @@ object Compaction {
     * runs AFTER the commit, so a reader between commit and refresh
     * sees the stale-but-fail-open index, never a wrong answer. */
   def optimizeZOrder(spark: SparkSession, path: String,
-                     x: String, y: String,
-                     partCol: Option[String] = None,
+                     zCols: Seq[String],
+                     partCols: Seq[String] = Nil,
                      zBits: Int = 10,
                      statsCols: Seq[String] = Nil,
                      numFiles: Int = 0,
                      bloomColumn: Option[String] = None,
-                     bloomIndexPath: Option[String] = None): Long =
-    optimizeZOrderN(spark, path, Seq(x, y), partCol.toSeq, zBits, statsCols,
-      numFiles, bloomColumn, bloomIndexPath)
-
-  /** [[optimizeZOrder]] at any clustering arity ≥ 1 (round-12 verdict
-    * #3): one column = a plain ORDER-BY layout (perfect pruning on
-    * that column), n columns = the n-ary Morton curve (~n-th-root
-    * pruning on each). */
-  def optimizeZOrderN(spark: SparkSession, path: String,
-                      zCols: Seq[String],
-                      partCols: Seq[String] = Nil,
-                      zBits: Int = 10,
-                      statsCols: Seq[String] = Nil,
-                      numFiles: Int = 0,
-                      bloomColumn: Option[String] = None,
-                      bloomIndexPath: Option[String] = None,
-                      partitionPredicate: Option[String] = None): Long = {
+                     bloomIndexPath: Option[String] = None,
+                     partitionPredicate: Option[String] = None): Long = {
     require(zCols.nonEmpty, "optimizeZOrder needs at least one column")
     require(bloomColumn.isDefined == bloomIndexPath.isDefined,
       "bloomColumn and bloomIndexPath come together")
@@ -475,10 +410,7 @@ object Compaction {
       else Manifest.readSubset(sess, path, selFiles, v0)
     val clustered =
       ZOrder.layoutByN(snapshot, zCols.map(col), zBits, numFiles)
-    val created =
-      if (partCols.nonEmpty)
-        Manifest.stageUniqueParts(sess, fs, rootP, partCols, clustered)
-      else Manifest.stageUniqueFlat(sess, fs, rootP, clustered)
+    val created = Manifest.stageUniqueParts(sess, fs, rootP, partCols, clustered)
     // replacement of exactly the selected files; pending DVs on them
     // are materialized by the rewrite, out-of-scope DVs stay live.
     // CAS publish: interleaved appends rebase into the clustered

@@ -227,8 +227,9 @@ object DailyJob {
 
   /** GROUP-ATOMIC daily export — the reference's six-table fan-out
     * (sessions + five hit types, `functions/ga_pipeline.py` export)
-    * made TRANSACTIONAL: every table's day partitions stage as plain
-    * appends (the manifest, not the directory, decides liveness),
+    * made TRANSACTIONAL: every table's day partitions stage as
+    * uniquely named files ([[graft.sources.Manifest.stageUniqueParts]];
+    * the manifest, not the directory, decides liveness),
     * each table's next version = current live files outside the
     * written days + the staged files, and ALL SIX versions publish
     * with one [[graft.sources.ManifestGroup]] pointer flip. A crash
@@ -262,15 +263,12 @@ object DailyJob {
       val rootP = new Path(root)
       val fs = rootP.getFileSystem(conf)
       val live = Manifest.current(spark, root).map(_._2).getOrElse(Nil)
-      val before = Manifest.listDataFiles(fs, rootP).toSet
       val d = to_date(col("timestamp"))
-      df.filter(d.isin(days: _*))
-        .withColumn("year", date_format(d, "yyyy"))
-        .withColumn("month", date_format(d, "MM"))
-        .withColumn("day", date_format(d, "dd"))
-        .write.mode("append").partitionBy("year", "month", "day")
-        .parquet(root)
-      val created = Manifest.listDataFiles(fs, rootP).filterNot(before)
+      val created = Manifest.stageUniqueParts(spark, fs, rootP,
+        Seq("year", "month", "day"), df.filter(d.isin(days: _*))
+          .withColumn("year", date_format(d, "yyyy"))
+          .withColumn("month", date_format(d, "MM"))
+          .withColumn("day", date_format(d, "dd")))
       val kept = live.filterNot(f => dayPrefixes.exists(f.startsWith))
       root -> (kept ++ created)
     }.toMap

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Keyed erasure — the right-to-be-forgotten DELETE a serving store
@@ -26,17 +26,6 @@ import org.apache.spark.sql.functions._
   * Those directories are removed explicitly after the commit.
   */
 object Erasure {
-
-  /** Map `f` over independent group MEMBERS, preserving input order
-    * (so downstream ledger writes and the flip map are byte-identical
-    * to the sequential form). Members are separate tables under
-    * separate roots: their scans, DV writes and per-root commits share
-    * nothing until the single group flip, so overlapping their Spark
-    * jobs lets the next member's tasks back-fill each member's stage
-    * tail — the shared [[graft.Par.ordered]] helper (round-14 advice:
-    * this was a verbatim copy of SparkEntry.parOrdered). */
-  private def parMembers[A, B](xs: Seq[A])(f: A => B): Seq[B] =
-    graft.Par.ordered(xs)(f)
 
   /** Pure transform: rows of `target` whose key appears in `subjects`
     * are dropped. `subjects` is a deletion-request batch — small by
@@ -157,87 +146,28 @@ object Erasure {
   }
 
   /** ATOMIC partition-scoped erasure — [[erasePartitionScoped]] under
-    * the [[graft.sources.Manifest]] commit protocol. The two crash
-    * hazards of the dynamic-overwrite form disappear structurally:
-    * surviving rows stage as fresh appended files (nothing overwritten),
-    * and a FULLY-erased partition needs no filesystem delete at all —
-    * it is simply absent from the published manifest, so the deletion
-    * guarantee holds the instant the rename lands (vacuum reclaims the
-    * bytes afterwards). Crash anywhere: manifest readers see exactly
-    * the old or exactly the new snapshot. Ledger semantics unchanged
-    * (every requested key gets a row, zeros included), written AFTER
-    * the commit so a ledger row still means the erasure is live. */
+    * the [[graft.sources.Manifest]] commit protocol, at any
+    * partitioning depth (the reference's own layout is three-level
+    * `year=/month=/day=`, `collector-ga.yaml:199` — a GDPR batch
+    * against it must prune and replace LEAVES; one level is
+    * `Seq(partCol)`). The two crash hazards of the dynamic-overwrite
+    * form disappear structurally: surviving rows stage as fresh
+    * appended files (nothing overwritten), and a FULLY-erased leaf
+    * needs no filesystem delete at all — it simply has no staged
+    * files, so it is absent from the published manifest the instant
+    * the rename lands (vacuum reclaims the bytes afterwards). The
+    * publish is [[graft.sources.Manifest.commitLeafReplacementCas]]
+    * against the version the erasure read: a concurrent commit to a
+    * touched leaf aborts loudly instead of resurrecting or dropping
+    * rows. Crash anywhere: manifest readers see exactly the old or
+    * exactly the new snapshot. Ledger semantics unchanged (every
+    * requested key gets a row, zeros included), written AFTER the
+    * commit so a ledger row still means the erasure is live. */
   def erasePartitionScopedAtomic(spark: SparkSession, targetPath: String,
-                                 partCol: String, subjects: DataFrame,
+                                 partCols: Seq[String], subjects: DataFrame,
                                  keys: Seq[String], batchId: String,
                                  ledgerPath: Option[String] = None,
                                  keepVersions: Int = 1): Unit = {
-    import graft.sources.Manifest
-    require(keys.nonEmpty, "erase needs at least one key column")
-    require(!keys.contains(partCol),
-      s"$partCol partitions the tree; key on the subject id columns")
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    val root = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = root.getFileSystem(sess.sessionState.newHadoopConf())
-    require(fs.exists(root), s"erasure target $targetPath does not exist")
-    Manifest.bootstrap(sess, targetPath) // adopt a plain tree idempotently
-    val subj = sess.createDataFrame(subjects.rdd, subjects.schema)
-      .select(keys.map(col): _*).distinct().persist()
-    try {
-      val snapshot = Manifest.read(sess, targetPath)
-      val matched = snapshot
-        .select((keys :+ partCol).map(col): _*)
-        .join(broadcast(subj), keys, "left_semi")
-        .persist()
-      val touched = matched.select(col(partCol).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      val erasedPerKey = matched.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("n_rows_erased"))
-      val ledger = subj
-        .join(erasedPerKey, keys, "left")
-        .select(keys.map(col) ++ Seq(
-          coalesce(col("n_rows_erased"), lit(0L)).as("n_rows_erased"),
-          lit(batchId).as("batch_id"),
-          lit(touched.size.toLong).as("n_partitions_touched")): _*)
-        .coalesce(1)
-        .localCheckpoint(true)
-      if (touched.nonEmpty) {
-        val affected = snapshot
-          .filter(col(partCol).cast("string").isin(touched: _*))
-        val surviving = affected.join(broadcast(subj), keys, "left_anti")
-          .persist()
-        // partitions with no survivors just drop from the manifest —
-        // `touched` covers them via stage's replaced-partition set, and
-        // the empty append writes no file for them
-        val newFiles = Manifest.stagePartitionReplacement(sess, targetPath,
-          partCol, surviving, touched)
-        Manifest.commit(sess, targetPath, newFiles)
-        surviving.unpersist()
-        Manifest.vacuum(sess, targetPath, keepVersions)
-      }
-      ledgerPath.foreach(lp =>
-        ledger.write.mode(SaveMode.Append).parquet(lp))
-      matched.unpersist()
-    } finally subj.unpersist()
-  }
-
-  /** [[erasePartitionScopedAtomic]] for MULTI-LEVEL partitioning
-    * (round-12 verdict #4: the reference's own layout is three-level
-    * `year=/month=/day=`, `collector-ga.yaml:199` — a GDPR batch
-    * against it must prune and replace LEAVES, not a single level).
-    * The touched set is the distinct leaf TUPLES the matched
-    * projection carries; the pruned rewrite is a broadcast semi-join
-    * on those tuples; the publish swaps exactly the touched leaves
-    * (fully-erased leaves simply have no staged files — absent from
-    * the manifest the instant the rename lands). Ledger semantics
-    * identical: every requested key gets a row, zeros included,
-    * written after the commit. */
-  def erasePartitionScopedAtomicN(spark: SparkSession, targetPath: String,
-                                  partCols: Seq[String], subjects: DataFrame,
-                                  keys: Seq[String], batchId: String,
-                                  ledgerPath: Option[String] = None,
-                                  keepVersions: Int = 1): Unit = {
     import graft.sources.Manifest
     require(keys.nonEmpty, "erase needs at least one key column")
     require(partCols.nonEmpty,
@@ -249,44 +179,74 @@ object Erasure {
     val root = new org.apache.hadoop.fs.Path(targetPath)
     val fs = root.getFileSystem(sess.sessionState.newHadoopConf())
     require(fs.exists(root), s"erasure target $targetPath does not exist")
-    Manifest.bootstrap(sess, targetPath)
+    Manifest.bootstrap(sess, targetPath) // adopt a plain tree idempotently
     val subj = sess.createDataFrame(subjects.rdd, subjects.schema)
       .select(keys.map(col): _*).distinct().persist()
     try {
-      val snapshot = Manifest.read(sess, targetPath)
-      val matched = snapshot
-        .select((keys ++ partCols).map(col): _*)
-        .join(broadcast(subj), keys, "left_semi")
-        .persist()
-      val (touchedDirs, touchedDf) =
-        PartitionScope.touchedLeaves(sess, matched, partCols)
-      val erasedPerKey = matched.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("n_rows_erased"))
-      val ledger = subj
-        .join(erasedPerKey, keys, "left")
-        .select(keys.map(col) ++ Seq(
-          coalesce(col("n_rows_erased"), lit(0L)).as("n_rows_erased"),
-          lit(batchId).as("batch_id"),
-          lit(touchedDirs.size.toLong).as("n_partitions_touched")): _*)
-        .coalesce(1)
-        .localCheckpoint(true)
-      if (touchedDirs.nonEmpty) {
-        val affected =
-          PartitionScope.semiJoinLeaves(snapshot, touchedDf, partCols)
-        val surviving = affected.join(broadcast(subj), keys, "left_anti")
-        val created =
-          Manifest.stageUniqueParts(sess, fs, root, partCols, surviving)
-        PartitionScope.requireWithin(created, partCols, touchedDirs)
-        val live = Manifest.current(sess, targetPath).get._2
-        Manifest.commit(sess, targetPath,
-          live.filterNot(f =>
-            touchedDirs(Manifest.leafDirOf(f, partCols))) ++ created)
+      val (base, live) = Manifest.current(sess, targetPath).get
+      val (touched, created, ledger) = stageErasure(sess, targetPath,
+        partCols, base, live, subj, keys, Seq(lit(batchId).as("batch_id")))
+      if (touched.nonEmpty) {
+        Manifest.commitLeafReplacementCas(sess, targetPath, partCols, base,
+          touched, created)
         Manifest.vacuum(sess, targetPath, keepVersions)
       }
       ledgerPath.foreach(lp =>
         ledger.write.mode(SaveMode.Append).parquet(lp))
-      matched.unpersist()
     } finally subj.unpersist()
+  }
+
+  /** Plan and STAGE one table's copy-on-write erasure against version
+    * `base` (live files `live`), publishing nothing:
+    *
+    *   1. ONE narrow projection (keys + partition columns) of the
+    *      snapshot, semi-joined against the broadcast subjects and
+    *      persisted — it answers both the touched-leaf set and the
+    *      per-subject erased-row counts.
+    *   2. The ledger (every requested key, zeros included; `extra`
+    *      columns between the count and `n_partitions_touched`) is
+    *      pinned with an eager localCheckpoint BEFORE the rewrite: its
+    *      lineage reads the very files the rewrite replaces.
+    *   3. Only the live files under touched leaves are read (a manifest
+    *      file subset), anti-joined, and staged through
+    *      [[graft.sources.Manifest.stageUniqueParts]]; a fully-erased
+    *      leaf stages no file.
+    *
+    * Returns (touched leaf dirs, staged files, ledger). */
+  private def stageErasure(sess: SparkSession, root: String,
+                           partCols: Seq[String], base: Long,
+                           live: Seq[String], subj: DataFrame,
+                           keys: Seq[String], extra: Seq[Column])
+      : (Set[String], Seq[String], DataFrame) = {
+    import graft.sources.Manifest
+    val matched = Manifest.readSubset(sess, root, live, base)
+      .select((keys ++ partCols).map(col): _*)
+      .join(broadcast(subj), keys, "left_semi")
+      .persist()
+    try {
+      val touched = PartitionScope.touchedLeaves(matched, partCols)
+      val erasedPerKey = matched.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("n_rows_erased"))
+      val ledger = subj
+        .join(erasedPerKey, keys, "left")
+        .select(keys.map(col) ++
+          (coalesce(col("n_rows_erased"), lit(0L)).as("n_rows_erased") +:
+            extra :+ lit(touched.size.toLong).as("n_partitions_touched")): _*)
+        // bounded by the request batch — keep the audit file count sane
+        .coalesce(1)
+        .localCheckpoint(true)
+      val created =
+        if (touched.isEmpty) Nil
+        else {
+          val rootP = new org.apache.hadoop.fs.Path(root)
+          val fs = rootP.getFileSystem(sess.sessionState.newHadoopConf())
+          val affected = Manifest.readSubset(sess, root,
+            live.filter(f => touched(Manifest.leafDirOf(f, partCols))), base)
+          Manifest.stageUniqueParts(sess, fs, rootP, partCols,
+            affected.join(broadcast(subj), keys, "left_anti"))
+        }
+      (touched, created, ledger)
+    } finally matched.unpersist()
   }
 
   /** CROSS-TABLE erasure, all-or-nothing: a data subject's rows
@@ -326,10 +286,14 @@ object Erasure {
       .select(keys.map(col): _*).distinct().persist()
     try {
       // members stage independently (separate roots, nothing shared
-      // until the group publish) — overlap their jobs (see parMembers)
-      val staged = parMembers(members) { case (root, partCol) =>
+      // until the group publish) — overlap their Spark jobs so the next
+      // member's tasks back-fill each member's stage tail; input order
+      // is preserved, so ledger writes and the flip map are identical
+      // to the sequential form
+      val staged = graft.Par.ordered(members) { case (root, partCol) =>
         Manifest.bootstrap(sess, root)
-        if (Manifest.current(sess, root).forall(_._2.isEmpty)) {
+        val (base, live) = Manifest.current(sess, root).get
+        if (live.isEmpty) {
           // an empty member holds nobody's data; ledger still proves
           // every request was processed against it
           val ledger = subj.select(keys.map(col) ++ Seq(
@@ -339,35 +303,14 @@ object Erasure {
             .coalesce(1).localCheckpoint(true)
           (root, None, ledger)
         } else {
-        val snapshot = Manifest.read(sess, root)
-        val matched = snapshot
-          .select((keys :+ partCol).map(col): _*)
-          .join(broadcast(subj), keys, "left_semi")
-          .persist()
-        val touched = matched.select(col(partCol).cast("string")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        val erasedPerKey = matched.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("n_rows_erased"))
-        val ledger = subj
-          .join(erasedPerKey, keys, "left")
-          .select(keys.map(col) ++ Seq(
-            coalesce(col("n_rows_erased"), lit(0L)).as("n_rows_erased"),
-            lit(root).as("member"),
-            lit(batchId).as("batch_id"),
-            lit(touched.size.toLong).as("n_partitions_touched")): _*)
-          .coalesce(1)
-          .localCheckpoint(true)
-        val newFiles =
-          if (touched.isEmpty) None
-          else {
-            val affected = snapshot
-              .filter(col(partCol).cast("string").isin(touched: _*))
-            val surviving = affected.join(broadcast(subj), keys, "left_anti")
-            Some(Manifest.stagePartitionReplacement(sess, root, partCol,
-              surviving, touched))
-          }
-        matched.unpersist()
-        (root, newFiles, ledger)
+          val (touched, created, ledger) = stageErasure(sess, root,
+            Seq(partCol), base, live, subj, keys,
+            Seq(lit(root).as("member"), lit(batchId).as("batch_id")))
+          val publish =
+            if (touched.isEmpty) None
+            else Some(live.filterNot(f =>
+              touched(Manifest.leafDirOf(f, Seq(partCol)))) ++ created)
+          (root, publish, ledger)
         }
       }
       val toPublish = staged.collect {
@@ -416,8 +359,8 @@ object Erasure {
     val subj = subjects.select(keys.map(col): _*).distinct().persist()
     try {
       // per-member DV builds are independent until the single flip —
-      // overlap their jobs (see parMembers)
-      val results = parMembers(members) { root =>
+      // overlap their jobs (see eraseGroupAtomic)
+      val results = graft.Par.ordered(members) { root =>
         Manifest.bootstrap(spark, root)
         val empty = Manifest.current(spark, root).forall(_._2.isEmpty)
         // ledger BEFORE the delete (its lineage reads the pre-delete

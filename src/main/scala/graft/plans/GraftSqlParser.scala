@@ -37,8 +37,8 @@ import graft.sources.{GraftTable, Manifest, ManifestTableResolution}
   *      `SHOW PARTITIONS t`                       → current manifest's leaf dirs
   *      `VACUUM t [RETAIN n VERSIONS] [GRACE h HOURS]` → Manifest.vacuum
   *      `RESTORE TABLE t TO VERSION AS OF v`      → Manifest.restore
-  *      `OPTIMIZE t`                              → Compaction.compactAtomic[Flat|Leaves]
-  *      `OPTIMIZE t ZORDER BY (c1, …, cn)`        → Compaction.optimizeZOrderN
+  *      `OPTIMIZE t`                              → Compaction.compactAtomic{Flat,Leaves}
+  *      `OPTIMIZE t ZORDER BY (c1, …, cn)`        → Compaction.optimizeZOrder
   *      `CHECKPOINT t [RETAIN n VERSIONS]`        → Manifest.checkpoint (+ cleanLog)
   *    None of these collide with Spark grammar except `DESCRIBE
   *    HISTORY t`, which stock Spark would read as describing a table
@@ -396,7 +396,7 @@ case class GraftOptimizeCommand(@transient session: SparkSession,
       if (zCols.nonEmpty)
         // WHERE + ZORDER (the Delta composition): re-cluster ONLY the
         // scoped leaves; everything else carries byte-identically
-        graft.jobs.Compaction.optimizeZOrderN(spark, root, zCols,
+        graft.jobs.Compaction.optimizeZOrder(spark, root, zCols,
           partCols = partCols, bloomColumn = bloomCol,
           bloomIndexPath = bloomIdx, partitionPredicate = whereSql)
       else {

@@ -295,10 +295,7 @@ case class GraftInsertCommand(root: String, query: LogicalPlan,
         GraftTable.validateConstraints(d, checks)
         d
       }
-    val created =
-      if (partCols.nonEmpty)
-        Manifest.stageUniqueParts(spark, fs, rootP, partCols, df)
-      else Manifest.stageUniqueFlat(spark, fs, rootP, df)
+    val created = Manifest.stageUniqueParts(spark, fs, rootP, partCols, df)
     val n = Manifest.stagedRowCount(spark, fs, rootP, created)
     var attempt = 0
     while (attempt < 10) {

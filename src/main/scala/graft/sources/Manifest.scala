@@ -663,9 +663,7 @@ object Manifest {
       try validate(updated) catch { case e: Throwable =>
         fs.delete(dvPath, true); throw e
       }
-      val created =
-        if (partCols.nonEmpty) stageUniqueParts(sess, fs, rootP, partCols, updated)
-        else stageUniqueFlat(sess, fs, rootP, updated)
+      val created = stageUniqueParts(sess, fs, rootP, partCols, updated)
       tryCommit(spark, root, files ++ created, v, Some(dvs :+ dvName)) match {
         case Some(nv) => return (nv, n)
         case None => // lost the slot: discard artifacts, re-plan
@@ -715,9 +713,7 @@ object Manifest {
         if (files.isEmpty) None // pure insert into an empty table
         else writeDv(sess, root, fs, rootP, dmlScan(sess, root, rootP, files, v)
           .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi"))
-      val created =
-        if (partCols.nonEmpty) stageUniqueParts(spark, fs, rootP, partCols, src)
-        else stageUniqueFlat(spark, fs, rootP, src)
+      val created = stageUniqueParts(spark, fs, rootP, partCols, src)
       tryCommit(spark, root, files ++ created, v,
         Some(dvs ++ dv.map(_._1))) match {
         case Some(nv) => return (nv, dv.fold(0L)(_._2), nSrc)
@@ -729,30 +725,6 @@ object Manifest {
     }
     throw new IllegalStateException(
       s"lost the merge commit race $maxAttempts times under $root")
-  }
-
-  /** [[stageUnique]] for an UNPARTITIONED layout: uuid-named files
-    * straight under the root, attribution exact, reader-invisible
-    * until a manifest references them. */
-  private[graft] def stageUniqueFlat(spark: SparkSession, fs: FileSystem,
-                              rootP: Path, newData: DataFrame): Seq[String] = {
-    val uuid = java.util.UUID.randomUUID.toString
-    val scratch = new Path(rootP, s"_graft_stage/$uuid")
-    newData.write.mode(SaveMode.Overwrite).parquet(scratch.toString)
-    val out = mutable.ArrayBuffer.empty[String]
-    fs.listStatus(scratch)
-      .filter(f => !f.isDirectory && f.getPath.getName.endsWith(".parquet"))
-      .zipWithIndex.foreach { case (f, i) =>
-        val name = s"stage-$uuid-part-$i.parquet"
-        require(fs.rename(f.getPath, new Path(rootP, name)),
-          s"staging move failed for ${f.getPath}")
-        out += name
-      }
-    fs.delete(new Path(rootP, s"_graft_stage/$uuid"), true)
-    val stageRoot = new Path(rootP, "_graft_stage")
-    if (fs.exists(stageRoot) && fs.listStatus(stageRoot).isEmpty)
-      fs.delete(stageRoot, false)
-    out.toSeq.sorted
   }
 
   /** Exact row count of freshly STAGED files — `rows_affected` for a
@@ -867,98 +839,91 @@ object Manifest {
     }.toSeq
   }
 
-  /** STAGE phase of an atomic partition replacement: append `newData`
-    * (all rows under `touched` values of `partCol`) as fresh files next
-    * to the live ones, and return the file list the commit should
-    * publish — live files outside `touched`/`alsoDrop`, plus the files
-    * this write just created. Nothing is visible to manifest readers
-    * until [[commit]] publishes the returned list; calling stage and
-    * crashing is always safe.
-    *
-    * The new-file capture diffs the physical listing around the write —
-    * correct even when unreferenced garbage from a crashed earlier
-    * attempt is present (garbage is in `before`, so it is never
-    * attributed to this write). */
-  def stagePartitionReplacement(spark: SparkSession, root: String,
-                                partCol: String, newData: DataFrame,
-                                touched: Seq[String],
-                                alsoDrop: Seq[String] = Nil): Seq[String] = {
-    val (fs, rootP) = fsOf(spark, root)
-    val live = current(spark, root).getOrElse(throw new IllegalArgumentException(
-      s"no committed manifest under $root — bootstrap() it first"))._2
-    val before = listDataFiles(fs, rootP).toSet
-    newData.write.mode(SaveMode.Append).partitionBy(partCol)
-      .parquet(rootP.toString)
-    val created = listDataFiles(fs, rootP).filterNot(before)
-    val gone = (touched ++ alsoDrop).toSet
-    live.filterNot(f => gone(partitionOf(f, partCol))) ++ created
-  }
-
-  /** Concurrent-writer partition replacement: stage exactly like
-    * [[stagePartitionReplacement]] but with UNIQUE-named files whose
-    * attribution never depends on a directory-listing diff (two
-    * concurrent stagers would cross-attribute each other's files), then
-    * publish through the [[tryCommit]] CAS loop with the loser path:
-    *
-    *  - WIN: our manifest (current live outside `touched`/`alsoDrop`
-    *    + our staged files) is the new version.
-    *  - LOSE, DISJOINT: commits that landed since we planned touched
-    *    only OTHER partitions → REBASE: recompute the publish list
-    *    against the new current (our staged files are untouched —
-    *    data files are immutable and only ever added) and retry.
-    *  - LOSE, OVERLAP: an interleaved commit changed a partition we
-    *    are replacing → our staged data was derived from a stale read
-    *    of that partition; retrying would silently drop the other
-    *    writer's rows. ABORT with ConcurrentModificationException;
-    *    our staged files stay unreferenced (plain [[vacuum]] fodder).
-    *
-    * Versions stay linear (each version = one winner of one CAS slot),
-    * and no interleaving publishes a mix of two writers' files for one
-    * partition. Returns the committed version. */
+  /** Concurrent-writer partition replacement of one-level `partCol`
+    * partitions: stage `newData` (all rows under `touched` values)
+    * through [[stageUniqueParts]] and publish it through
+    * [[commitLeafReplacementCas]] against the version read before the
+    * stage. Returns the committed version. */
   def commitPartitionReplacementCas(spark: SparkSession, root: String,
                                     partCol: String, newData: DataFrame,
                                     touched: Seq[String],
-                                    alsoDrop: Seq[String] = Nil,
                                     maxAttempts: Int = 10,
                                     afterStage: () => Unit = () => ()): Long = {
     val (fs, rootP) = fsOf(spark, root)
-    val gone = (touched ++ alsoDrop).toSet
-    var (base, baseFiles) = current(spark, root).getOrElse(
+    val base = current(spark, root).getOrElse(
       throw new IllegalArgumentException(
-        s"no committed manifest under $root — bootstrap() it first"))
-    val created = stageUnique(spark, fs, rootP, partCol, newData)
+        s"no committed manifest under $root — bootstrap() it first"))._1
+    val created = stageUniqueParts(spark, fs, rootP, Seq(partCol), newData)
     // seam between stage and publish: ManifestSpec injects the rival
     // commit here to pin BOTH loser outcomes (rebase, abort)
     // deterministically — a thread race alone cannot guarantee the
     // interleaving lands inside this window
     afterStage()
-    val badPart = created.map(partitionOf(_, partCol)).find(p => !gone(p))
-    require(badPart.isEmpty,
-      s"staged data contains partition ${badPart.get} outside the " +
-        s"declared touched set $gone")
+    val leaves = touched.map(t =>
+      s"$partCol=${ExternalCatalogUtils.escapePathName(t)}").toSet
+    commitLeafReplacementCas(spark, root, Seq(partCol), base, leaves,
+      created, maxAttempts)
+  }
+
+  /** The ONE publish of every copy-on-write leaf replacement: replace
+    * all live files under the `touched` leaf directories (escaped,
+    * root-relative — [[leafDirOf]] form) with `created`, planned
+    * against version `base`, through the [[tryCommit]] CAS loop with
+    * the loser path:
+    *
+    *  - WIN: our manifest (live outside `touched` + `created`) is the
+    *    new version.
+    *  - LOSE, DISJOINT: commits that landed since `base` touched only
+    *    OTHER leaves → REBASE: recompute the publish list against the
+    *    new current (our staged files are untouched — data files are
+    *    immutable and only ever added) and retry.
+    *  - LOSE, OVERLAP: an interleaved commit changed a leaf we are
+    *    replacing (added or removed a file there, or published a
+    *    deletion vector on one of its files) → our staged data was
+    *    derived from a stale read of that leaf; retrying would silently
+    *    drop the other writer's rows or resurrect its deletes. ABORT with ConcurrentModificationException; our staged
+    *    files stay unreferenced (plain [[vacuum]] fodder).
+    *
+    * Versions stay linear (each version = one winner of one CAS slot),
+    * and no interleaving publishes a mix of two writers' files for one
+    * leaf. Staged files outside `touched` are refused before any
+    * publish. Returns the committed version. */
+  def commitLeafReplacementCas(spark: SparkSession, root: String,
+                               partCols: Seq[String], base: Long,
+                               touched: Set[String], created: Seq[String],
+                               maxAttempts: Int = 10): Long = {
+    val bad = created.map(leafDirOf(_, partCols)).find(d => !touched(d))
+    require(bad.isEmpty, s"staged data contains leaf ${bad.get} outside " +
+      s"the declared touched set ${touched.toSeq.sorted.mkString(", ")}")
+    var b = base
+    var baseFiles = filesAt(spark, root, base)
     var attempt = 0
     while (true) {
       val publish =
-        baseFiles.filterNot(f => gone(partitionOf(f, partCol))) ++ created
-      tryCommit(spark, root, publish, base) match {
+        baseFiles.filterNot(f => touched(leafDirOf(f, partCols))) ++ created
+      tryCommit(spark, root, publish, b) match {
         case Some(v) => return v
         case None =>
           attempt += 1
           if (attempt >= maxAttempts) throw new IllegalStateException(
             s"lost the commit race $maxAttempts times under $root")
           val (nv, nFiles) = current(spark, root).get
-          // partitions the interleaved commits changed = partitions of
-          // the file-set symmetric difference vs our planning snapshot
-          val delta = (nFiles.toSet -- baseFiles) ++ (baseFiles.toSet -- nFiles)
-          val deltaParts = delta.map(partitionOf(_, partCol))
-          if (deltaParts.exists(gone)) {
+          // leaves the interleaved commits changed = leaves of the
+          // file-set symmetric difference vs our planning snapshot, plus
+          // leaves of files a NEW deletion vector names (a DV-only
+          // delete keeps the file list; our rewrite predates it)
+          val newDvs = dvsAt(spark, root, nv).filterNot(dvsAt(spark, root, b).toSet)
+          val delta = (nFiles.toSet -- baseFiles) ++ (baseFiles.toSet -- nFiles) ++
+            DeletionVectors.filesWithDeletes(spark, root, newDvs)
+          val hit = delta.map(leafDirOf(_, partCols)).filter(touched)
+          if (hit.nonEmpty) {
             throw new java.util.ConcurrentModificationException(
-              s"partition(s) ${deltaParts.filter(gone).mkString(", ")} " +
+              s"partition(s) ${hit.toSeq.sorted.mkString(", ")} " +
                 s"were committed by another writer while this " +
                 s"replacement was staged — aborting (staged files are " +
                 s"unreferenced; vacuum reclaims them)")
           }
-          base = nv; baseFiles = nFiles
+          b = nv; baseFiles = nFiles
       }
     }
     -1L // unreachable
@@ -1033,26 +998,17 @@ object Manifest {
   }
 
   /** Stage `newData` under `root` with files whose names WE choose
-    * (stage-<uuid>-...), via a hidden `_graft_stage/<uuid>` scratch dir
-    * + per-file rename into the partition directories: attribution is
+    * (`stage-<uuid>-part-<i>.parquet`), via a hidden
+    * `_graft_stage/<uuid>` scratch dir + per-file rename into the leaf
+    * directories: the scratch write partitions by ALL `partCols` and
+    * the walk descends exactly `partCols.length` directories (zero
+    * levels = files land straight under the root). Attribution is
     * exact under any concurrency (no listing diff), and nothing is
     * reader-visible until a manifest references the returned
-    * root-relative paths. */
-  private[graft] def stageUnique(spark: SparkSession, fs: FileSystem, rootP: Path,
-                          partCol: String, newData: DataFrame): Seq[String] =
-    stageUniqueParts(spark, fs, rootP, Seq(partCol), newData)
-
-  /** [[stageUnique]] at any partitioning depth ≥ 1 (round-12 verdict
-    * #4): the scratch write partitions by ALL levels and the walk
-    * descends exactly `partCols.length` directories, moving each file
-    * into its leaf under the root with a unique name. Attribution
-    * stays exact under any concurrency (no listing diff), and nothing
-    * is reader-visible until a manifest references the returned
     * root-relative paths. */
   private[graft] def stageUniqueParts(spark: SparkSession, fs: FileSystem,
                                       rootP: Path, partCols: Seq[String],
                                       newData: DataFrame): Seq[String] = {
-    require(partCols.nonEmpty, "stageUniqueParts needs at least one level")
     val uuid = java.util.UUID.randomUUID.toString
     val scratch = new Path(rootP, s"_graft_stage/$uuid")
     newData.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
@@ -1061,7 +1017,7 @@ object Manifest {
     var n = 0
     def walk(dir: Path, depth: Int, rel: String): Unit =
       if (depth == partCols.length) {
-        val partDir = new Path(rootP, rel)
+        val partDir = if (rel.isEmpty) rootP else new Path(rootP, rel)
         if (!fs.exists(partDir)) fs.mkdirs(partDir)
         fs.listStatus(dir)
           .filter(f => !f.isDirectory && f.getPath.getName.endsWith(".parquet"))
@@ -1070,7 +1026,7 @@ object Manifest {
             n += 1
             require(fs.rename(f.getPath, new Path(partDir, name)),
               s"staging move failed for ${f.getPath}")
-            out += s"$rel/$name"
+            out += (if (rel.isEmpty) name else s"$rel/$name")
           }
       } else fs.listStatus(dir).filter(_.isDirectory)
         .filter(_.getPath.getName.startsWith(partCols(depth) + "="))

@@ -43,7 +43,7 @@ object StreamingErasure {
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         if (!batch.isEmpty)
           Erasure.erasePartitionScopedAtomic(batch.sparkSession, servingRoot,
-            partCol, batch, keys, batchId = s"erase-$epoch",
+            Seq(partCol), batch, keys, batchId = s"erase-$epoch",
             ledgerPath = Some(ledgerPath))
       }
       .start()

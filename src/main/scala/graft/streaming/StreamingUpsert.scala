@@ -71,7 +71,7 @@ object StreamingUpsert {
             ()
           } else if (atomic)
             Upsert.upsertPartitionScopedAtomic(batch.sparkSession,
-              servingRoot, partCol, batch, keys)
+              servingRoot, Seq(partCol), batch, keys)
           else
             Upsert.upsertPartitionScoped(batch.sparkSession, servingRoot,
               partCol, batch, keys)

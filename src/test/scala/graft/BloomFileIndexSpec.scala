@@ -83,7 +83,7 @@ class BloomFileIndexSpec extends SparkTestBase {
     BloomFileIndex.build(spark, table, "uid", idx, 1000L, 10000L)
     // atomic MERGE touches d1 only: its file is replaced (vacuumed),
     // the other three carry over
-    Upsert.upsertPartitionScopedAtomic(spark, table, "day",
+    Upsert.upsertPartitionScopedAtomic(spark, table, Seq("day"),
       Seq((100L, "u100x", "d1")).toDF("id", "uid", "day"), Seq("id"))
     val (kept, added, removed) =
       BloomFileIndex.refresh(spark, table, "uid", idx, 1000L, 10000L)

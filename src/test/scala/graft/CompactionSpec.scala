@@ -190,7 +190,7 @@ class CompactionSpec extends SparkTestBase {
       targetBytes = 1L << 30, keepVersions = 0,
       afterStage = () => {
         // the streaming sink lands an append between stage and publish
-        racerFile = Manifest.stageUniqueFlat(spark, fs, rootP,
+        racerFile = Manifest.stageUniqueParts(spark, fs, rootP, Nil,
           Seq(999L).toDF("id"))
         val (cur, live) = Manifest.current(spark, path).get
         assert(Manifest.tryCommit(spark, path,

@@ -449,7 +449,7 @@ class DvSpec extends SparkTestBase {
     // pending merge-on-read deletes must materialize in the rewrite
     val (_, nDel) = Manifest.deleteWhere(spark, path, col("x") === 63L)
     assert(nDel == 64L)
-    val v = Compaction.optimizeZOrder(spark, path, "x", "y",
+    val v = Compaction.optimizeZOrder(spark, path, Seq("x", "y"),
       zBits = 6, numFiles = 8)
     assert(Manifest.dvsAt(spark, path, v).isEmpty,
       "OPTIMIZE materializes pending deletes")

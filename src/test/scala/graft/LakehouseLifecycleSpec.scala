@@ -41,7 +41,7 @@ class LakehouseLifecycleSpec extends SparkTestBase {
         .as[(Long, String, Long)].collect().toSet
 
     // v2: MERGE — update id=1, insert id=5 into a new day
-    Upsert.upsertPartitionScopedAtomic(spark, path, "day",
+    Upsert.upsertPartitionScopedAtomic(spark, path, Seq("day"),
       Seq((1L, "d1", 111L), (5L, "d4", 50L)).toDF("id", "day", "v"),
       Seq("id"), keepVersions = 10)
     val v2 = Manifest.current(spark, path).get._1
@@ -50,7 +50,7 @@ class LakehouseLifecycleSpec extends SparkTestBase {
     assert(snap(Manifest.read(spark, path)) == afterMerge)
 
     // v3: ERASE — subject id=3 (all of d2: fully-erased partition)
-    Erasure.erasePartitionScopedAtomic(spark, path, "day",
+    Erasure.erasePartitionScopedAtomic(spark, path, Seq("day"),
       Seq(3L).toDF("id"), Seq("id"), batchId = "life-1",
       ledgerPath = Some(ledger), keepVersions = 10)
     val v3 = Manifest.current(spark, path).get._1
@@ -58,8 +58,9 @@ class LakehouseLifecycleSpec extends SparkTestBase {
     assert(snap(Manifest.read(spark, path)) == afterErase)
 
     // v4: COMPACT d1 (2+ files) down to one
-    Compaction.compactAtomic(spark, path, "day", targetBytes = 1L << 30,
-      partitions = Some(Set("d1")), keepVersions = 10)
+    Compaction.compactAtomicLeaves(spark, path, Seq("day"),
+      targetBytes = 1L << 30, keepVersions = 10,
+      partitionPredicate = Some("day = 'd1'"))
     val v4 = Manifest.current(spark, path).get._1
     assert(snap(Manifest.read(spark, path)) == afterErase,
       "compaction preserves content")
@@ -129,7 +130,7 @@ class LakehouseLifecycleSpec extends SparkTestBase {
     // the clustered rewrite replaces EVERY indexed file — the refresh
     // must ride the same operation (verdict #8), or the next lookup's
     // fail-open index prunes nothing
-    val v = Compaction.optimizeZOrder(spark, path, "x", "y", zBits = 6,
+    val v = Compaction.optimizeZOrder(spark, path, Seq("x", "y"), zBits = 6,
       numFiles = 8, bloomColumn = Some("id"), bloomIndexPath = Some(idx))
     val live = Manifest.filesAt(spark, path, v)
       .map(rel => BloomFileIndex.norm(new org.apache.hadoop.fs.Path(

@@ -245,7 +245,7 @@ class ManifestCheckpointSpec extends SparkTestBase {
     val (fs, rootP) = (new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf()),
       new org.apache.hadoop.fs.Path(root))
-    val bad = Manifest.stageUniqueFlat(spark, fs, rootP,
+    val bad = Manifest.stageUniqueParts(spark, fs, rootP, Nil,
       Seq((9L, -5L)).toDF("id", "v"))
     val before = Manifest.current(spark, root).get
     intercept[IllegalStateException] {

@@ -26,6 +26,19 @@ class ManifestSpec extends SparkTestBase {
     path
   }
 
+  /** Stage `df` (rows of partition `day` only) as uniquely named files
+    * and return the publish list that replaces that partition: the
+    * live files outside it plus the staged ones. Nothing is committed. */
+  private def stageReplacing(path: String,
+                             df: org.apache.spark.sql.DataFrame,
+                             day: String): Seq[String] = {
+    val rootP = new org.apache.hadoop.fs.Path(path)
+    val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
+    val live = Manifest.current(spark, path).get._2
+    live.filterNot(_.startsWith(s"day=$day/")) ++
+      Manifest.stageUniqueParts(spark, fs, rootP, Seq("day"), df)
+  }
+
   private def snap(path: String): Set[(Long, String, Long)] =
     Manifest.read(spark, path)
       .select(col("id"), col("day").cast("string"), col("v"))
@@ -71,8 +84,8 @@ class ManifestSpec extends SparkTestBase {
     val before = snap(path)
     // stage a replacement of d1 (id 1 updated, id 2 dropped) and STOP —
     // the simulated crash between data write and manifest publish
-    val staged = Manifest.stagePartitionReplacement(spark, path, "day",
-      Seq((1L, "d1", 111L)).toDF("id", "day", "v"), Seq("d1"))
+    val staged = stageReplacing(path,
+      Seq((1L, "d1", 111L)).toDF("id", "day", "v"), "d1")
     // the RAW directory read now sees mixed old+new rows in d1 ...
     val raw = spark.read.parquet(path)
       .filter(col("day") === "d1").count()
@@ -94,16 +107,35 @@ class ManifestSpec extends SparkTestBase {
     assert(phys.toSet == Manifest.current(spark, path).get._2.toSet)
   }
 
+  test("stageUniqueParts with no partition columns: uniquely named " +
+    "files straight under the root, no _graft_stage left behind") {
+    val path = Files.createTempDirectory("graft_mflat").toString + "/t"
+    Seq((1L, 10L), (2L, 20L)).toDF("id", "v").write.parquet(path)
+    Manifest.bootstrap(spark, path)
+    val rootP = new org.apache.hadoop.fs.Path(path)
+    val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
+    val staged = Manifest.stageUniqueParts(spark, fs, rootP, Nil,
+      Seq((3L, 30L)).toDF("id", "v").coalesce(1))
+    assert(staged.size == 1 &&
+      staged.forall(_.matches("stage-[0-9a-f-]{36}-part-\\d+\\.parquet")),
+      s"flat staged names: $staged")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(rootP, "_graft_stage")),
+      "the scratch root must not outlive the stage")
+    Manifest.commit(spark, path, Manifest.current(spark, path).get._2 ++ staged)
+    assert(Manifest.read(spark, path).as[(Long, Long)].collect().toSet ==
+      Set((1L, 10L), (2L, 20L), (3L, 30L)))
+  }
+
   test("atomic MERGE: semantics of upsert; old-or-new never mixed") {
     val path = freshTable()
-    Upsert.upsertPartitionScopedAtomic(spark, path, "day",
+    Upsert.upsertPartitionScopedAtomic(spark, path, Seq("day"),
       Seq((3L, "d2", 333L), (6L, "d4", 60L)).toDF("id", "day", "v"),
       Seq("id"))
     assert(snap(path) == Set((1L, "d1", 10L), (2L, "d1", 20L),
       (3L, "d2", 333L), (4L, "d3", 40L), (6L, "d4", 60L)))
     // bootstrap-from-nothing path
     val fresh = Files.createTempDirectory("graft_mup").toString + "/t"
-    Upsert.upsertPartitionScopedAtomic(spark, fresh, "day",
+    Upsert.upsertPartitionScopedAtomic(spark, fresh, Seq("day"),
       Seq((9L, "d9", 90L)).toDF("id", "day", "v"), Seq("id"))
     assert(snap(fresh) == Set((9L, "d9", 90L)))
   }
@@ -114,7 +146,7 @@ class ManifestSpec extends SparkTestBase {
     val ledger = Files.createTempDirectory("graft_mled").toString + "/l"
     // subjects: id 3 (all of d2 — fully-erased partition), id 1 (part of
     // d1), id 99 (matches nothing)
-    Erasure.erasePartitionScopedAtomic(spark, path, "day",
+    Erasure.erasePartitionScopedAtomic(spark, path, Seq("day"),
       Seq(3L, 1L, 99L).toDF("id"), Seq("id"), batchId = "b1",
       ledgerPath = Some(ledger))
     assert(snap(path) == Set((2L, "d1", 20L), (4L, "d3", 40L)))
@@ -131,7 +163,7 @@ class ManifestSpec extends SparkTestBase {
     "MERGE's change feed falls out of SnapshotDiff over two versions; " +
     "retention-aware vacuum keeps replayability, then reclaims it") {
     val path = freshTable() // version 1
-    Upsert.upsertPartitionScopedAtomic(spark, path, "day",
+    Upsert.upsertPartitionScopedAtomic(spark, path, Seq("day"),
       Seq((1L, "d1", 111L), (6L, "d4", 60L)).toDF("id", "day", "v"),
       Seq("id")) // version 2 (vacuum inside keeps only v2 — rebuild below)
     // rebuild a 2-version history without the auto-vacuum: stage+commit
@@ -144,8 +176,8 @@ class ManifestSpec extends SparkTestBase {
     intercept[IllegalArgumentException](
       Manifest.readVersion(spark, path, v2 - 1))
     // now a retained history: commit another change, vacuum keep=2
-    val staged = Manifest.stagePartitionReplacement(spark, path, "day",
-      Seq((4L, "d3", 444L)).toDF("id", "day", "v"), Seq("d3"))
+    val staged = stageReplacing(path,
+      Seq((4L, "d3", 444L)).toDF("id", "day", "v"), "d3")
     val v3 = Manifest.commit(spark, path, staged)
     Manifest.vacuum(spark, path, keepVersions = 2)
     // both retained versions replay byte-identically
@@ -179,7 +211,7 @@ class ManifestSpec extends SparkTestBase {
     assert(Manifest.countRows(spark, path, Some("day"), _ == "d1") == 2L)
     // merge updates d1 and adds d4: stats for v2 count ONLY the new
     // files (carry-forward is correctness-visible: totals must be exact)
-    Upsert.upsertPartitionScopedAtomic(spark, path, "day",
+    Upsert.upsertPartitionScopedAtomic(spark, path, Seq("day"),
       Seq((1L, "d1", 111L), (9L, "d4", 90L)).toDF("id", "day", "v"),
       Seq("id"), keepVersions = 10)
     val v2 = Manifest.current(spark, path).get._1
@@ -223,8 +255,7 @@ class ManifestSpec extends SparkTestBase {
       val rows = (0 until 1 + rnd.nextInt(3)).map { _ =>
         nextId += 1; (nextId, p, nextId * 10)
       }
-      val staged = Manifest.stagePartitionReplacement(spark, path, "day",
-        rows.toDF("id", "day", "v"), Seq(p))
+      val staged = stageReplacing(path, rows.toDF("id", "day", "v"), p)
       if (rnd.nextBoolean()) {
         // crash before publish: staged files exist, model unchanged
       } else {
@@ -469,8 +500,8 @@ class ManifestSpec extends SparkTestBase {
     val before = snap(path)
     val d2Files = new java.io.File(s"$path/day=d2")
       .listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    Compaction.compactAtomic(spark, path, "day",
-      targetBytes = 1L << 30, partitions = Some(Set("d1")))
+    Compaction.compactAtomicLeaves(spark, path, Seq("day"),
+      targetBytes = 1L << 30, partitionPredicate = Some("day = 'd1'"))
     assert(snap(path) == before, "compaction preserves content")
     val d1After = new java.io.File(s"$path/day=d1")
       .listFiles().filter(_.getName.endsWith(".parquet"))

@@ -137,7 +137,7 @@ class MultiLevelPartitionSpec extends SparkTestBase {
     val before = Manifest.current(spark, root).get._2
     // ids 1+2 are ALL of leaf 2019/09/22; id 99 matches nothing
     val subjects = Seq(1L, 2L, 99L).toDF("id")
-    Erasure.erasePartitionScopedAtomicN(spark, root, Seq("y", "m", "d"),
+    Erasure.erasePartitionScopedAtomic(spark, root, Seq("y", "m", "d"),
       subjects, Seq("id"), batchId = "b1", ledgerPath = Some(ledger))
     val after = Manifest.current(spark, root).get._2
     assert(after.toSet.subsetOf(before.toSet),
@@ -160,7 +160,7 @@ class MultiLevelPartitionSpec extends SparkTestBase {
     val src = Seq((3L, 333L, "2019", "09", "23"),   // update in-place
                   (8L, 80L, "2022", "12", "31"))    // brand-new leaf
       .toDF("id", "v", "y", "m", "d")
-    Upsert.upsertPartitionScopedAtomicN(spark, root, Seq("y", "m", "d"),
+    Upsert.upsertPartitionScopedAtomic(spark, root, Seq("y", "m", "d"),
       src, Seq("id"))
     spark.catalog.refreshByPath(root)
     val after = Manifest.current(spark, root).get._2
@@ -170,5 +170,90 @@ class MultiLevelPartitionSpec extends SparkTestBase {
     assert(rows(name).contains((3L, 333L, "2019-09-23")))
     assert(rows(name).contains((8L, 80L, "2022-12-31")))
     assert(rows(name).contains((1L, 10L, "2019-09-22")), "untouched")
+  }
+
+  test("atomic upsert reads ONLY the touched leaves' files: a data " +
+    "file missing from an untouched leaf never stops the merge") {
+    val (root, _) = mkTable()
+    val pc = Seq("y", "m", "d")
+    val rootP = new org.apache.hadoop.fs.Path(root)
+    val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
+    // physically delete a file of leaf 2020/01/05 — any whole-snapshot
+    // read would now fail on the missing path
+    val victim = Manifest.current(spark, root).get._2
+      .find(_.startsWith("y=2020/m=01/d=05/")).get
+    fs.delete(new org.apache.hadoop.fs.Path(rootP, victim), false)
+    Upsert.upsertPartitionScopedAtomic(spark, root, pc,
+      Seq((3L, 333L, "2019", "09", "23")).toDF("id", "v", "y", "m", "d"),
+      Seq("id"))
+    val (v, after) = Manifest.current(spark, root).get
+    assert(after.contains(victim), "untouched leaf carried by reference")
+    val touched = after.filter(_.startsWith("y=2019/m=09/d=23/"))
+    assert(Manifest.readSubset(spark, root, touched, v)
+      .select("id", "v").as[(Long, Long)].collect().toSeq ==
+      Seq((3L, 333L)))
+  }
+
+  test("leaf CAS on a y/m/d table: a rival commit between stage and " +
+    "publish on a TOUCHED leaf (new file or deletion vector) aborts " +
+    "loudly; on a disjoint leaf the publish rebases and keeps the " +
+    "rival's file") {
+    val pc = Seq("y", "m", "d")
+    def stage(root: String, rows: Seq[(Long, Long, String, String, String)])
+        : Seq[String] = {
+      val rootP = new org.apache.hadoop.fs.Path(root)
+      Manifest.stageUniqueParts(spark,
+        rootP.getFileSystem(spark.sessionState.newHadoopConf()), rootP, pc,
+        rows.toDF("id", "v", "y", "m", "d"))
+    }
+    def rivalAppends(root: String,
+                     row: (Long, Long, String, String, String)): String = {
+      val (cur, live) = Manifest.current(spark, root).get
+      val f = stage(root, Seq(row))
+      assert(Manifest.tryCommit(spark, root, live ++ f, cur).isDefined)
+      f.head
+    }
+    val leaf = "y=2019/m=09/d=23"
+    // overlap: the rival lands in the leaf we are replacing
+    val (r1, _) = mkTable()
+    val base1 = Manifest.current(spark, r1).get._1
+    val ours1 = stage(r1, Seq((3L, 333L, "2019", "09", "23")))
+    rivalAppends(r1, (7L, 70L, "2019", "09", "23"))
+    val ex = intercept[java.util.ConcurrentModificationException] {
+      Manifest.commitLeafReplacementCas(spark, r1, pc, base1, Set(leaf), ours1)
+    }
+    assert(ex.getMessage.contains(leaf))
+    assert(Manifest.current(spark, r1).get._1 == base1 + 1,
+      "the aborted publish committed nothing")
+    // overlap by deletion vector: the rival deletes a row of the leaf
+    // we are replacing without changing the file list — publishing our
+    // pre-delete rewrite would resurrect it
+    val (r3, name3) = mkTable()
+    val base3 = Manifest.current(spark, r3).get._1
+    val ours3 = stage(r3, Seq((3L, 333L, "2019", "09", "23"),
+      (9L, 90L, "2019", "09", "23")))
+    Manifest.deleteWhere(spark, r3, col("id") === 3L)
+    val exDv = intercept[java.util.ConcurrentModificationException] {
+      Manifest.commitLeafReplacementCas(spark, r3, pc, base3, Set(leaf), ours3)
+    }
+    assert(exDv.getMessage.contains(leaf))
+    spark.catalog.refreshByPath(r3)
+    assert(!rows(name3).exists(_._1 == 3L), "the rival's delete stands")
+    // disjoint: the rival lands in another leaf — rebase, keep its file
+    val (r2, name2) = mkTable()
+    val base2 = Manifest.current(spark, r2).get._1
+    val ours2 = stage(r2, Seq((3L, 333L, "2019", "09", "23")))
+    val rivalFile = rivalAppends(r2, (8L, 80L, "2020", "01", "05"))
+    val v = Manifest.commitLeafReplacementCas(spark, r2, pc, base2,
+      Set(leaf), ours2)
+    assert(v == base2 + 2, s"rebased onto the rival's slot, got $v")
+    val published = Manifest.filesAt(spark, r2, v)
+    assert(published.contains(rivalFile), "rival's file published")
+    assert(ours2.forall(published.contains))
+    spark.catalog.refreshByPath(r2)
+    assert(rows(name2) == Set((1L, 10L, "2019-09-22"),
+      (2L, 20L, "2019-09-22"), (3L, 333L, "2019-09-23"),
+      (4L, 40L, "2019-10-01"), (5L, 50L, "2020-01-05"),
+      (8L, 80L, "2020-01-05")))
   }
 }
