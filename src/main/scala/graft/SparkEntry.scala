@@ -259,19 +259,21 @@ object SparkEntry {
         .write.mode("append").partitionBy("w").parquet(rootA)
     landFacts(Seq("1", "2"))
     aggOf(Seq("1", "2")).coalesce(1).write.mode("append").parquet(rootB)
-    ManifestGroup.publish(s, meta,
-      Map(rootA -> lakeListing(s, rootA), rootB -> lakeListing(s, rootB)))
+    ManifestGroup.flip(s, meta, Map(
+      rootA -> Manifest.commit(s, rootA, lakeListing(s, rootA)),
+      rootB -> Manifest.commit(s, rootB, lakeListing(s, rootB))))
     landFacts(Seq("3"))
     aggOf(Seq("3")).coalesce(1).write.mode("append").parquet(rootB)
-    ManifestGroup.publish(s, meta,
-      Map(rootA -> lakeListing(s, rootA), rootB -> lakeListing(s, rootB)))
+    ManifestGroup.flip(s, meta, Map(
+      rootA -> Manifest.commit(s, rootA, lakeListing(s, rootA)),
+      rootB -> Manifest.commit(s, rootB, lakeListing(s, rootB))))
     landFacts(Seq("4", "5"))
     Manifest.commit(s, rootA, lakeListing(s, rootA))
   }
 
   /** q234: facts + rollup members published as one group. */
   private[graft] def fixQ234(s: SparkSession, dir: String): Unit = {
-    import graft.sources.ManifestGroup
+    import graft.sources.{Manifest, ManifestGroup}
     val rootA = lakeLayout(dir, "graft_ers_facts")
     val rootB = lakeLayout(dir, "graft_ers_roll")
     val meta = lakeLayout(dir, "graft_ers_meta")
@@ -284,8 +286,9 @@ object SparkEntry {
       .withColumn("bucket", pmod(col("custkey"), lit(4)).cast("string"))
       .groupBy("custkey", "bucket").agg(count(lit(1)).as("n_orders"))
     roll.coalesce(1).write.partitionBy("bucket").parquet(rootB)
-    ManifestGroup.publish(s, meta,
-      Map(rootA -> lakeListing(s, rootA), rootB -> lakeListing(s, rootB)))
+    ManifestGroup.flip(s, meta, Map(
+      rootA -> Manifest.commit(s, rootA, lakeListing(s, rootA)),
+      rootB -> Manifest.commit(s, rootB, lakeListing(s, rootB))))
   }
 
   /** q240: facts + rollup members, unpartitioned rollup, one group. */
@@ -302,9 +305,9 @@ object SparkEntry {
     facts.groupBy("custkey").agg(count(lit(1)).as("n_orders"))
       .coalesce(1).write.parquet(rootB)
     Manifest.bootstrap(s, rootA); Manifest.bootstrap(s, rootB)
-    ManifestGroup.publish(s, meta, Map(
-      rootA -> Manifest.current(s, rootA).get._2,
-      rootB -> Manifest.current(s, rootB).get._2))
+    ManifestGroup.flip(s, meta, Map(
+      rootA -> Manifest.commit(s, rootA, Manifest.current(s, rootA).get._2),
+      rootB -> Manifest.commit(s, rootB, Manifest.current(s, rootB).get._2)))
   }
 
   /** q244: hash-shuffled (xk, yk) layout with colstats in the log. */

@@ -229,20 +229,21 @@ object DailyJob {
     * (sessions + five hit types, `functions/ga_pipeline.py` export)
     * made TRANSACTIONAL: every table's day partitions stage as
     * uniquely named files ([[graft.sources.Manifest.stageUniqueParts]];
-    * the manifest, not the directory, decides liveness),
-    * each table's next version = current live files outside the
-    * written days + the staged files, and ALL SIX versions publish
-    * with one [[graft.sources.ManifestGroup]] pointer flip. A crash
+    * the manifest, not the directory, decides liveness), each table
+    * commits its own next version — the written `year=/month=/day=`
+    * leaves replaced by the staged files — through
+    * [[graft.sources.Manifest.commitLeafReplacementCas]] against the
+    * version it planned from, and ONE [[graft.sources.ManifestGroup]]
+    * flip then publishes all six. A rival commit on another day of a
+    * member rebases in; one on a written day aborts the run with
+    * ConcurrentModificationException before the flip. A crash or abort
     * anywhere before the flip leaves readers on the previous
-    * consistent six-table set, with the staged files as plain
-    * vacuum-eligible orphans; a re-run of the same day is idempotent
-    * (the day's old files drop out of the publish list, the re-staged
-    * ones replace them). Registers the members as group-pinned
-    * catalog tables, so `spark.table("db.sessions")` and
-    * `spark.table("db.pageviews")` in one query ALWAYS serve the same
-    * publish. Single-group-writer discipline (the reference's daily
-    * job); racing table writers get the per-table CAS loser path.
-    * Returns (group version, member → pinned manifest version). */
+    * consistent six-table set; a re-run of the same day is idempotent
+    * (the day's old files are replaced by the re-staged ones).
+    * Registers the members as group-pinned catalog tables, so
+    * `spark.table("db.sessions")` and `spark.table("db.pageviews")` in
+    * one query ALWAYS serve the same publish. Returns (group version,
+    * member → pinned manifest version). */
   def writeDailyGroupAtomic(spark: SparkSession, out: GaPipeline.Outputs,
       outRoot: String, days: Seq[String],
       catalogDb: Option[String] = Some("ga_lake"))
@@ -255,24 +256,28 @@ object DailyJob {
       "events" -> out.events, "products" -> out.products,
       "transactions" -> out.transactions, "items" -> out.items)
     val conf = spark.sessionState.newHadoopConf()
-    val dayPrefixes = days.map { d =>
-      val Array(y, m, dd) = d.split("-"); s"year=$y/month=$m/day=$dd/"
-    }
-    val lists: Map[String, Seq[String]] = tables.map { case (tpe, df) =>
+    val partCols = Seq("year", "month", "day")
+    val leaves = days.map { d =>
+      val Array(y, m, dd) = d.split("-"); s"year=$y/month=$m/day=$dd"
+    }.toSet
+    val staged = tables.map { case (tpe, df) =>
       val root = s"$outRoot/daily/type=$tpe"
       val rootP = new Path(root)
       val fs = rootP.getFileSystem(conf)
-      val live = Manifest.current(spark, root).map(_._2).getOrElse(Nil)
+      val base = Manifest.current(spark, root).map(_._1).getOrElse(0L)
       val d = to_date(col("timestamp"))
       val created = Manifest.stageUniqueParts(spark, fs, rootP,
-        Seq("year", "month", "day"), df.filter(d.isin(days: _*))
+        partCols, df.filter(d.isin(days: _*))
           .withColumn("year", date_format(d, "yyyy"))
           .withColumn("month", date_format(d, "MM"))
           .withColumn("day", date_format(d, "dd")))
-      val kept = live.filterNot(f => dayPrefixes.exists(f.startsWith))
-      root -> (kept ++ created)
+      (root, base, created)
+    }
+    val committed = staged.map { case (root, base, created) =>
+      root -> Manifest.commitLeafReplacementCas(spark, root, partCols, base,
+        leaves, created)
     }.toMap
-    val published = ManifestGroup.publish(spark, meta, lists)
+    val published = ManifestGroup.flip(spark, meta, committed)
     catalogDb.foreach { db =>
       tables.foreach { case (tpe, _) =>
         GraftTable.register(spark, db, tpe, s"$outRoot/daily/type=$tpe",

@@ -257,15 +257,18 @@ object Erasure {
     * schedule). Per member the mechanics are
     * [[erasePartitionScopedAtomic]]'s: one thin key+partition
     * projection finds the touched partitions, only those rewrite, and
-    * the rewritten file lists STAGE without committing; then the
-    * group publish commits every member and flips the pointer once.
-    * A crash anywhere before the flip leaves all members serving the
-    * pre-erasure (consistent) set, with staged files as vacuum
-    * fodder. Members whose tables never held the subjects are left
-    * untouched and carry forward in the flip. The ledger records one
-    * row per (member, subject) — zero-match rows included, so the
-    * audit trail proves every request was processed against every
-    * member. Returns the published (group version, member→version).
+    * the rewritten files STAGE; then each touched member commits
+    * through [[graft.sources.Manifest.commitLeafReplacementCas]]
+    * against the version it staged from (a rival commit on another
+    * leaf rebases in, one on a touched leaf aborts the run before the
+    * flip), and ONE group flip publishes them all. A crash or abort
+    * anywhere before the flip leaves group readers on the pre-erasure
+    * (consistent) set. Members whose tables never held the subjects
+    * are left untouched and carry forward in the flip. The ledger
+    * records one row per (member, subject) — zero-match rows
+    * included, so the audit trail proves every request was processed
+    * against every member. Returns the published (group version,
+    * member→version).
     *
     * All members key on the same subject column names (`keys`) —
     * build serving layouts with a canonical subject-id column, the
@@ -306,18 +309,20 @@ object Erasure {
           val (touched, created, ledger) = stageErasure(sess, root,
             Seq(partCol), base, live, subj, keys,
             Seq(lit(root).as("member"), lit(batchId).as("batch_id")))
-          val publish =
+          val commit =
             if (touched.isEmpty) None
-            else Some(live.filterNot(f =>
-              touched(Manifest.leafDirOf(f, Seq(partCol)))) ++ created)
-          (root, publish, ledger)
+            else Some(() => Manifest.commitLeafReplacementCas(spark, root,
+              Seq(partCol), base, touched, created))
+          (root, commit, ledger)
         }
       }
-      val toPublish = staged.collect {
-        case (root, Some(files), _) => root -> files
+      // every member staged: each touched one commits through its own
+      // CAS against the version it staged from, then ONE flip
+      val committed = staged.collect {
+        case (root, Some(commit), _) => root -> commit()
       }.toMap
       val published =
-        if (toPublish.nonEmpty) ManifestGroup.publish(spark, metaRoot, toPublish)
+        if (committed.nonEmpty) ManifestGroup.flip(spark, metaRoot, committed)
         else ManifestGroup.currentGroup(spark, metaRoot)
           .getOrElse((0L, Map.empty[String, Long])) // nothing matched anywhere
       ledgerPath.foreach { lp =>
@@ -386,8 +391,7 @@ object Erasure {
       // it yet — the crash window leaves group readers consistent; ONE
       // flip moves all members together
       val flipped = ManifestGroup.flip(spark, metaRoot,
-        results.map { case (r, v, _, _) =>
-          ManifestGroup.normKey(r) -> v }.toMap)
+        results.map { case (r, v, _, _) => r -> v }.toMap)
       ledgerPath.foreach { lp =>
         results.foreach { case (_, _, _, l) =>
           l.write.mode(SaveMode.Append).parquet(lp) }

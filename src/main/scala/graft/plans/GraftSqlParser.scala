@@ -732,11 +732,11 @@ case class GraftRenameColumnCommand(@transient session: SparkSession,
     // PRE-rename names at the current version (so time travel to it —
     // and to everything before — serves the old name), publish a new
     // version with the same files, and attach the evolved mapping
-    // schema there. No data file moves.
+    // schema there. No data file moves; an append that landed after
+    // `v` was read rebases into the new version.
     if (Manifest.schemaAt(spark, root, v).isEmpty)
       Manifest.writeSchema(spark, root, v, base)
-    val nv = Manifest.commit(spark, root, Manifest.filesAt(spark, root, v),
-      validateChecks = false) // same files — nothing added
+    val nv = Manifest.commitRewriteCas(spark, root, v, Set.empty, Nil)
     Manifest.writeSchema(spark, root, nv, evolved)
     val db = tbl.identifier.database.getOrElse(
       spark.sessionState.catalog.getCurrentDatabase)

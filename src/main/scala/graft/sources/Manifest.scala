@@ -204,9 +204,11 @@ object Manifest {
     * `None` CARRIES the current version's DVs forward — the safe
     * choice for every append/replacement writer (a DV row whose target
     * file a replacement dropped is inert: its (file, pos) can never
-    * match again, UUID file names are never reused). Pass `Some(Nil)`
-    * only when the commit physically materialized the deletes
-    * ([[purgeDeletes]]). */
+    * match again, UUID file names are never reused). Pass `Some(…)`
+    * only to publish an explicit DV set ([[restore]] replays a
+    * version's). `commit` plans against whatever head it finds; a
+    * writer whose list was planned at an earlier version publishes
+    * through [[commitRewriteCas]]. */
   def commit(spark: SparkSession, root: String, files: Seq[String],
              dvs: Option[Seq[String]] = None,
              validateChecks: Boolean = true): Long = {
@@ -215,8 +217,8 @@ object Manifest {
     tryCommit(spark, root, files, v, dvs, validateChecks).getOrElse(
       throw new IllegalStateException(
         s"manifest publish of version ${v + 1} failed — concurrent " +
-          s"writer under $root; use commitPartitionReplacementCas for " +
-          s"racing committers"))
+          s"writer under $root; a writer that planned against a version " +
+          s"publishes through commitRewriteCas"))
   }
 
   /** Commit with WRITE-TIME CONSTRAINTS (the Delta CHECK-constraint /
@@ -750,10 +752,11 @@ object Manifest {
       files.map(f => new Path(rootP, f).toString): _*).count()
 
   /** Materialize all live deletion vectors: rewrite exactly the files
-    * a DV touches (minus their deleted rows), drop every DV reference,
-    * one atomic commit — the compaction leg of merge-on-read (Delta's
-    * PURGE). Read amplification returns to zero; the replaced originals
-    * stay on disk for retained-version time travel until [[vacuum]].
+    * a DV touches (minus their deleted rows) and drop every DV
+    * reference in one [[commitRewriteCas]] publish — the compaction leg
+    * of merge-on-read (Delta's PURGE). Read amplification returns to
+    * zero; the replaced originals stay on disk for retained-version
+    * time travel until [[vacuum]].
     * Work is O(DV'd files), never O(table): untouched files are
     * carried by reference. */
   def purgeDeletes(spark: SparkSession, root: String): Long = {
@@ -767,8 +770,6 @@ object Manifest {
     // files the DVs actually touch (rows for replaced files are inert)
     val affected = DeletionVectors.filesWithDeletes(spark, root, dvs)
       .filter(liveSet).toSeq.sorted
-    if (affected.isEmpty) // only inert DV debris: drop the references
-      return commit(spark, root, files, dvs = Some(Nil))
     val uuid = java.util.UUID.randomUUID.toString
     val created = mutable.ArrayBuffer.empty[String]
     // one rewrite job per touched directory: rows go back beside their
@@ -798,8 +799,10 @@ object Manifest {
     val stageRoot = new Path(rootP, "_graft_stage")
     if (fs.exists(stageRoot) && fs.listStatus(stageRoot).isEmpty)
       fs.delete(stageRoot, false)
-    commit(spark, root,
-      files.filterNot(affected.toSet) ++ created, dvs = Some(Nil))
+    // no carried file has deletes, so every base DV ref drops (only
+    // inert debris left when nothing was affected); an interleaved
+    // append rebases in, a new DV on an affected file aborts
+    commitRewriteCas(spark, root, v, affected.toSet, created.toSeq)
   }
 
   /** Partition value (Hive-unescaped) of a root-relative file path under
@@ -865,29 +868,15 @@ object Manifest {
       created, maxAttempts)
   }
 
-  /** The ONE publish of every copy-on-write leaf replacement: replace
-    * all live files under the `touched` leaf directories (escaped,
-    * root-relative — [[leafDirOf]] form) with `created`, planned
-    * against version `base`, through the [[tryCommit]] CAS loop with
-    * the loser path:
-    *
-    *  - WIN: our manifest (live outside `touched` + `created`) is the
-    *    new version.
-    *  - LOSE, DISJOINT: commits that landed since `base` touched only
-    *    OTHER leaves → REBASE: recompute the publish list against the
-    *    new current (our staged files are untouched — data files are
-    *    immutable and only ever added) and retry.
-    *  - LOSE, OVERLAP: an interleaved commit changed a leaf we are
-    *    replacing (added or removed a file there, or published a
-    *    deletion vector on one of its files) → our staged data was
-    *    derived from a stale read of that leaf; retrying would silently
-    *    drop the other writer's rows or resurrect its deletes. ABORT with ConcurrentModificationException; our staged
-    *    files stay unreferenced (plain [[vacuum]] fodder).
-    *
-    * Versions stay linear (each version = one winner of one CAS slot),
-    * and no interleaving publishes a mix of two writers' files for one
-    * leaf. Staged files outside `touched` are refused before any
-    * publish. Returns the committed version. */
+  /** Copy-on-write replacement of every live file under the `touched`
+    * leaf directories (escaped, root-relative — [[leafDirOf]] form)
+    * with `created`, planned against version `base`: a
+    * [[commitRewriteCas]] whose `replaced` set is the base's files
+    * under `touched` and whose scope is the touched leaves, so an
+    * interleaved commit on another leaf rebases in and one that added,
+    * removed or deleted rows from a touched leaf aborts. Staged files
+    * outside `touched` are refused before any publish. Returns the
+    * committed version. */
   def commitLeafReplacementCas(spark: SparkSession, root: String,
                                partCols: Seq[String], base: Long,
                                touched: Set[String], created: Seq[String],
@@ -895,96 +884,69 @@ object Manifest {
     val bad = created.map(leafDirOf(_, partCols)).find(d => !touched(d))
     require(bad.isEmpty, s"staged data contains leaf ${bad.get} outside " +
       s"the declared touched set ${touched.toSeq.sorted.mkString(", ")}")
-    var b = base
-    var baseFiles = filesAt(spark, root, base)
-    var attempt = 0
-    while (true) {
-      val publish =
-        baseFiles.filterNot(f => touched(leafDirOf(f, partCols))) ++ created
-      tryCommit(spark, root, publish, b) match {
-        case Some(v) => return v
-        case None =>
-          attempt += 1
-          if (attempt >= maxAttempts) throw new IllegalStateException(
-            s"lost the commit race $maxAttempts times under $root")
-          val (nv, nFiles) = current(spark, root).get
-          // leaves the interleaved commits changed = leaves of the
-          // file-set symmetric difference vs our planning snapshot, plus
-          // leaves of files a NEW deletion vector names (a DV-only
-          // delete keeps the file list; our rewrite predates it)
-          val newDvs = dvsAt(spark, root, nv).filterNot(dvsAt(spark, root, b).toSet)
-          val delta = (nFiles.toSet -- baseFiles) ++ (baseFiles.toSet -- nFiles) ++
-            DeletionVectors.filesWithDeletes(spark, root, newDvs)
-          val hit = delta.map(leafDirOf(_, partCols)).filter(touched)
-          if (hit.nonEmpty) {
-            throw new java.util.ConcurrentModificationException(
-              s"partition(s) ${hit.toSeq.sorted.mkString(", ")} " +
-                s"were committed by another writer while this " +
-                s"replacement was staged — aborting (staged files are " +
-                s"unreferenced; vacuum reclaims them)")
-          }
-          b = nv; baseFiles = nFiles
-      }
-    }
-    -1L // unreachable
+    val inScope = (f: String) => touched(leafDirOf(f, partCols))
+    val replaced =
+      if (base <= 0L) Set.empty[String]
+      else filesAt(spark, root, base).filter(inScope).toSet
+    commitRewriteCas(spark, root, base, replaced, created, inScope, maxAttempts)
   }
 
-  /** Publish a REWRITE commit — replace exactly `replaced` with
-    * `created` — through a bounded CAS that COEXISTS with live
-    * writers (round-13 verdict #3: compaction published via plain
-    * [[commit]], which throws on ANY interleaved commit, so on a table
-    * fed by a per-trigger streaming sink the weekly OPTIMIZE had a
-    * near-zero chance of landing). The Delta conflict matrix, applied:
-    * a rewrite conflicts only with commits that touched the files it
-    * READ —
+  /** THE publish of every writer that planned against version `base`:
+    * replace exactly `replaced` with `created` through a bounded
+    * [[tryCommit]] CAS loop that COEXISTS with live writers. One
+    * conflict rule (the Delta conflict matrix) decides every lost slot:
     *
-    *  - an interleaved commit that only ADDED files (the streaming
-    *    append) REBASES: the new files simply carry into the rewrite's
-    *    manifest (data files are immutable; our staged output is
-    *    untouched by their commit);
+    *  - an interleaved commit that only ADDED files outside `inScope`
+    *    (the streaming append, another writer's leaf) REBASES: the new
+    *    files carry into this manifest (data files are immutable; our
+    *    staged output is untouched by their commit);
     *  - an interleaved commit that REMOVED one of `replaced` aborts
-    *    loudly (publishing would resurrect data another writer
-    *    replaced or erased);
+    *    (publishing would resurrect data another writer replaced or
+    *    erased);
     *  - an interleaved commit whose NEW deletion vector references one
-    *    of `replaced` aborts loudly (our staged rows were derived from
-    *    a pre-delete read — publishing would resurrect deleted rows).
+    *    of `replaced` aborts (our staged rows were derived from a
+    *    pre-delete read — publishing would resurrect deleted rows);
+    *  - an interleaved commit that ADDED a file inside `inScope` aborts
+    *    (our staged data was derived from a read that predates it —
+    *    publishing would drop the other writer's rows).
     *
-    * `dvs0` are the base version's DV refs the caller already read
-    * through (their deletes are materialized in `created`);
-    * `dvs0LiveRefs` the live files they reference — old refs are
-    * carried only while a carried file still needs one, and
-    * interleaved commits' new DVs always carry. Loud failure, never
-    * corruption; staged files stay unreferenced on abort (vacuum
-    * fodder). Returns the committed version. */
+    * Aborts throw ConcurrentModificationException; staged files stay
+    * unreferenced (plain [[vacuum]] fodder). The base's DV refs carry
+    * only while a carried file still has deletes in them (`created`
+    * was read through them, so their deletes on `replaced` are
+    * materialized); interleaved commits' new DVs always carry. `base =
+    * 0` plans against an empty table (no files, no DVs). Versions stay
+    * linear, and no interleaving publishes a mix of two writers' files
+    * for one scope. Returns the committed version. */
   def commitRewriteCas(spark: SparkSession, root: String, base: Long,
                        replaced: Set[String], created: Seq[String],
-                       dvs0: Seq[String], dvs0LiveRefs: Set[String],
+                       inScope: String => Boolean = _ => false,
                        maxAttempts: Int = 10): Long = {
-    val dvs0Set = dvs0.toSet
+    def snapshot(v: Long): (Seq[String], Seq[String]) =
+      if (v <= 0L) (Nil, Nil) else (filesAt(spark, root, v), dvsAt(spark, root, v))
+    def abort(what: String, fs: Iterable[String]): Nothing =
+      throw new java.util.ConcurrentModificationException(
+        s"commit to $root aborted — ${fs.size} file(s) $what since " +
+          s"version $base (${fs.toSeq.sorted.take(3).mkString(", ")}); " +
+          s"staged files stay unreferenced (vacuum reclaims them)")
+    val (files0, dvs0) = snapshot(base)
+    val baseFiles = files0.toSet
+    val oldDvs = dvs0.toSet
+    lazy val oldDvFiles = DeletionVectors.filesWithDeletes(spark, root, dvs0)
     var b = base
     var attempt = 0
     while (attempt < maxAttempts) {
-      val files = filesAt(spark, root, b)
-      val gone = replaced -- files.toSet
-      if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
-        s"rewrite of $root aborted — ${gone.size} file(s) being " +
-          s"rewritten were removed by another writer since version " +
-          s"$base (e.g. ${gone.head}); publishing would resurrect " +
-          s"replaced data (staged files stay unreferenced; vacuum " +
-          s"reclaims them)")
-      val dvsNow = dvsAt(spark, root, b)
-      val dvsNew = dvsNow.filterNot(dvs0Set)
-      if (dvsNew.nonEmpty) {
-        val hit = DeletionVectors.filesWithDeletes(spark, root, dvsNew)
-          .filter(replaced).toSeq.sorted
-        if (hit.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"rewrite of $root aborted — a concurrent delete published a " +
-            s"deletion vector on ${hit.length} file(s) being rewritten " +
-            s"(e.g. ${hit.head}); publishing would resurrect deleted " +
-            s"rows (staged files stay unreferenced)")
-      }
+      val (files, dvsNow) = if (b == base) (files0, dvs0) else snapshot(b)
+      val gone = replaced -- files
+      if (gone.nonEmpty) abort("being replaced were removed by another writer", gone)
+      val added = files.filter(f => !baseFiles(f) && inScope(f))
+      if (added.nonEmpty) abort("were committed by another writer inside " +
+        "this commit's scope", added)
+      val dvsNew = dvsNow.filterNot(oldDvs)
+      val hit = DeletionVectors.filesWithDeletes(spark, root, dvsNew).filter(replaced)
+      if (hit.nonEmpty) abort("being replaced got a new deletion vector", hit)
       val carried = files.filterNot(replaced)
-      val keepOld = dvs0LiveRefs.exists(carried.toSet)
+      val keepOld = dvs0.nonEmpty && carried.exists(oldDvFiles)
       val dvsOut = (if (keepOld) dvs0 else Nil) ++ dvsNew
       tryCommit(spark, root, carried ++ created, b, Some(dvsOut)) match {
         case Some(v) => return v
@@ -994,7 +956,7 @@ object Manifest {
       }
     }
     throw new IllegalStateException(
-      s"lost the rewrite commit race $maxAttempts times under $root")
+      s"lost the commit race $maxAttempts times under $root")
   }
 
   /** Stage `newData` under `root` with files whose names WE choose

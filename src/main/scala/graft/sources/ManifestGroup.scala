@@ -16,14 +16,17 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
   *
   * Mechanics: a GROUP LOG at `metaRoot/_graft_group/group-<g>` maps
   * each member table's root to a pinned manifest VERSION
-  * (`escapedRoot\tversion` lines). A publish first commits every
-  * table's files through the normal per-table CAS (those versions
-  * exist but are referenced by NOTHING — a crash here leaves group
-  * readers on the old consistent set, with the new versions as plain
-  * vacuum-eligible orphans), then flips the group pointer with the
-  * SAME one-rename CAS the per-table log uses. The flip is the ONE
-  * atomic step: before it, no reader sees any new version; after it,
-  * every reader sees all of them.
+  * (`escapedRoot\tversion` lines). A writer commits each member
+  * through that member's own CAS against the version it planned from
+  * ([[Manifest.commitRewriteCas]] / [[Manifest.commitLeafReplacementCas]]
+  * — a rival commit on a member rebases in or aborts the run there),
+  * then calls [[flip]] once with the committed versions. Until the
+  * flip those versions are referenced by NOTHING — a crash or abort
+  * leaves group readers on the old consistent set, with the new
+  * versions as plain vacuum-eligible heads. The flip is the ONE atomic
+  * step, the SAME one-rename CAS the per-table log uses: before it, no
+  * reader sees any new version; after it, every reader sees all of
+  * them.
   *
   * Readers: [[GraftTable.register]]`(..., group = Some(metaRoot))`
   * marks a catalog table group-pinned; [[ManifestTableResolution]]
@@ -49,7 +52,7 @@ object ManifestGroup {
   val Dir = "_graft_group"
 
   /** Canonical key for a member table root (scheme-free absolute
-    * path) — registration, publish, and resolution must agree on it
+    * path) — registration, flip, and resolution must agree on it
     * regardless of how the caller spelled the path. */
   def normKey(root: String): String = new Path(root).toUri.getPath
 
@@ -91,20 +94,6 @@ object ManifestGroup {
     if (vs.isEmpty) None else Some((vs.max, readGroup(spark, metaRoot, vs.max)))
   }
 
-  /** Publish `tables` (root → files for its NEXT version) as one
-    * atomic group flip: per-table commits first (invisible to group
-    * readers), then the pointer CAS. Tables in the current group but
-    * absent from `tables` carry forward unchanged. Returns the new
-    * group version and the full mapping it serves. */
-  def publish(spark: SparkSession, metaRoot: String,
-              tables: Map[String, Seq[String]]): (Long, Map[String, Long]) = {
-    require(tables.nonEmpty, "publish needs at least one table")
-    val committed: Map[String, Long] = tables.map { case (root, files) =>
-      normKey(root) -> Manifest.commit(spark, root, files)
-    }
-    flip(spark, metaRoot, committed)
-  }
-
   /** GROUP-AWARE retention: keep the newest `keepGroups` group
     * versions fully replayable — every member table retains its own
     * head (a committed-but-not-yet-flipped version must survive; its
@@ -136,12 +125,15 @@ object ManifestGroup {
     }
   }
 
-  /** Flip the group pointer to `newVersions` (already-committed
-    * per-table versions, keyed by [[normKey]]), merged over the
-    * current mapping. CAS loop with the regression guard described
-    * above. */
+  /** Flip the group pointer to `members` (member root → an
+    * already-committed manifest version; roots are keyed through
+    * [[normKey]] here), merged over the current mapping: tables in the
+    * current group but absent from `members` carry forward
+    * unchanged. CAS loop with the regression guard described above.
+    * Returns the new group version and the full mapping it serves. */
   def flip(spark: SparkSession, metaRoot: String,
-           newVersions: Map[String, Long]): (Long, Map[String, Long]) = {
+           members: Map[String, Long]): (Long, Map[String, Long]) = {
+    val newVersions = members.map { case (r, v) => normKey(r) -> v }
     val (fs, rootP) = Manifest.fsOf(spark, metaRoot)
     val dir = new Path(rootP, Dir)
     if (!fs.exists(dir)) fs.mkdirs(dir)

@@ -159,6 +159,50 @@ class DvSpec extends SparkTestBase {
     assert(Manifest.purgeDeletes(spark, path) == pv)
   }
 
+  test("purgeDeletes racing a rival commit between plan and publish: a " +
+    "rival APPEND survives the purge; a rival DV on a file being purged " +
+    "aborts and its delete stands") {
+    def append(path: String): Seq[String] = {
+      val rootP = new org.apache.hadoop.fs.Path(path)
+      val f = Manifest.stageUniqueParts(spark,
+        rootP.getFileSystem(spark.sessionState.newHadoopConf()), rootP,
+        Seq("day"), Seq((8L, "d4", 80L)).toDF("id", "day", "v"))
+      val (cur, live) = Manifest.current(spark, path).get
+      assert(Manifest.tryCommit(spark, path, live ++ f, cur).isDefined)
+      f
+    }
+    // append arm: rebases in, the purge still materializes every delete
+    val path = freshTable()
+    val (v2, _) = Manifest.deleteWhere(spark, path, col("id") === 2L)
+    var rivalFiles: Seq[String] = Nil
+    val pv = RivalCommit.around(path)({ rivalFiles = append(path) }) {
+      Manifest.purgeDeletes(spark, path)
+    }
+    assert(pv == v2 + 2, s"the purge rebased onto the rival's slot: $pv")
+    assert(rivalFiles.nonEmpty &&
+      rivalFiles.forall(Manifest.filesAt(spark, path, pv).contains),
+      "the rival's appended file must stay live")
+    assert(Manifest.dvsAt(spark, path, pv).isEmpty)
+    assert(snap(path) == Set(1L, 3L, 4L, 5L, 6L, 7L, 8L))
+    // DV arm: one d1 file holds ids 1 and 2; the purge rewrites it for
+    // id 1 while the rival deletes id 2 from it — publishing the
+    // rewrite would resurrect id 2
+    val path2 = Files.createTempDirectory("graft_dv_race").toString + "/t"
+    Seq((1L, "d1", 10L), (2L, "d1", 20L), (3L, "d2", 30L))
+      .toDF("id", "day", "v").coalesce(1)
+      .write.partitionBy("day").parquet(path2)
+    Manifest.bootstrap(spark, path2)
+    Manifest.deleteWhere(spark, path2, col("id") === 1L)
+    intercept[java.util.ConcurrentModificationException] {
+      RivalCommit.around(path2)({
+        Manifest.deleteWhere(spark, path2, col("id") === 2L); ()
+      }) {
+        Manifest.purgeDeletes(spark, path2)
+      }
+    }
+    assert(snap(path2) == Set(3L), "the rival's delete stands")
+  }
+
   test("vacuum: retained versions keep their DV artifacts; dropping " +
     "retention reclaims artifacts AND replaced files") {
     val path = freshTable()
@@ -279,9 +323,9 @@ class DvSpec extends SparkTestBase {
     Seq((1L, 1L), (2L, 1L), (3L, 1L)).toDF("id", "n")
       .coalesce(1).write.parquet(rootB)
     Manifest.bootstrap(spark, rootA); Manifest.bootstrap(spark, rootB)
-    ManifestGroup.publish(spark, meta, Map(
-      rootA -> Manifest.current(spark, rootA).get._2,
-      rootB -> Manifest.current(spark, rootB).get._2))
+    ManifestGroup.flip(spark, meta, Map(
+      rootA -> Manifest.commit(spark, rootA, Manifest.current(spark, rootA).get._2),
+      rootB -> Manifest.commit(spark, rootB, Manifest.current(spark, rootB).get._2)))
     val filesA = Manifest.current(spark, rootA).get._2
     val filesB = Manifest.current(spark, rootB).get._2
     val subjects = Seq(2L, 999L).toDF("id")

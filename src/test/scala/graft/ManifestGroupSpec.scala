@@ -30,8 +30,9 @@ class ManifestGroupSpec extends SparkTestBase {
     (0 until 3).map(i => (s"a$i", "w1")).toDF("uid", "w")
       .coalesce(1).write.partitionBy("w").parquet(rootA)
     Seq(("w1", 3L)).toDF("w", "n").coalesce(1).write.parquet(rootB)
-    ManifestGroup.publish(spark, meta,
-      Map(rootA -> listing(rootA), rootB -> listing(rootB)))
+    ManifestGroup.flip(spark, meta, Map(
+      rootA -> Manifest.commit(spark, rootA, listing(rootA)),
+      rootB -> Manifest.commit(spark, rootB, listing(rootB))))
     GraftTable.register(spark, "graft_test", s"grp_facts_$tag", rootA,
       group = Some(meta))
     GraftTable.register(spark, "graft_test", s"grp_agg_$tag", rootB,
@@ -156,13 +157,127 @@ class ManifestGroupSpec extends SparkTestBase {
     val (rootA, rootB, meta, tblA, tblB) = mkGroup()
     (0 until 2).map(i => (s"c$i", "w3")).toDF("uid", "w")
       .coalesce(1).write.mode("append").partitionBy("w").parquet(rootA)
-    val (g2, mapping) = ManifestGroup.publish(spark, meta,
-      Map(rootA -> listing(rootA)))
+    val (g2, mapping) = ManifestGroup.flip(spark, meta,
+      Map(rootA -> Manifest.commit(spark, rootA, listing(rootA))))
     assert(g2 == 2)
     assert(mapping(ManifestGroup.normKey(rootB)) == 1L,
       "untouched member carries forward")
     assert(spark.table(tblA).count() == 5)
     assert(spark.table(tblB).count() == 1, "agg table unchanged")
     assert(ManifestGroup.versions(spark, meta) == Seq(1L, 2L))
+  }
+
+  /** Stage `df` under `root` (partitioned by `partCols`) and commit it
+    * on top of the current head — a rival writer's append. Returns
+    * the rival's files. */
+  private def rivalAppend(root: String, partCols: Seq[String],
+                          df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val rootP = new Path(root)
+    val f = Manifest.stageUniqueParts(spark,
+      rootP.getFileSystem(spark.sessionState.newHadoopConf()), rootP,
+      partCols, df)
+    val (cur, live) = Manifest.current(spark, root).get
+    assert(Manifest.tryCommit(spark, root, live ++ f, cur).isDefined)
+    f
+  }
+
+  test("eraseGroupAtomic racing a member commit: a rival on a DISJOINT " +
+    "leaf stays live after the flip; a rival on a TOUCHED leaf aborts " +
+    "and leaves the group pointer where it was") {
+    import graft.operators.Erasure
+    def mk(): (String, String, String) = {
+      val base = Files.createTempDirectory("graft_grp_race").toString
+      val (rootA, rootB, meta) = (s"$base/a", s"$base/b", s"$base/meta")
+      Seq(("a0", "w1"), ("a1", "w1"), ("a2", "w2")).toDF("uid", "w")
+        .coalesce(1).write.partitionBy("w").parquet(rootA)
+      Seq(("a0", "w1"), ("b1", "w1"), ("b2", "w2")).toDF("uid", "w")
+        .coalesce(1).write.partitionBy("w").parquet(rootB)
+      Manifest.bootstrap(spark, rootA); Manifest.bootstrap(spark, rootB)
+      ManifestGroup.flip(spark, meta, Map(rootA -> 1L, rootB -> 1L))
+      (rootA, rootB, meta)
+    }
+    def uids(root: String, v: Long): Set[String] =
+      Manifest.readVersion(spark, root, v).select("uid").as[String]
+        .collect().toSet
+    val subjects = Seq("a0").toDF("uid")
+    // disjoint: the rival lands on B's w9 while A publishes
+    val (rootA, rootB, meta) = mk()
+    var rivalFiles: Seq[String] = Nil
+    val (g, mapping) = RivalCommit.around(rootA) {
+      rivalFiles = rivalAppend(rootB, Seq("w"), Seq(("r9", "w9")).toDF("uid", "w"))
+    } {
+      Erasure.eraseGroupAtomic(spark, meta, Seq(rootA -> "w", rootB -> "w"),
+        subjects, Seq("uid"), batchId = "race-1")
+    }
+    assert(g == 2L)
+    val vB = mapping(ManifestGroup.normKey(rootB))
+    assert(rivalFiles.nonEmpty && rivalFiles.forall(
+      Manifest.filesAt(spark, rootB, vB).contains),
+      "the rival's commit must stay live in the flipped version")
+    assert(uids(rootB, vB) == Set("b1", "b2", "r9"))
+    assert(uids(rootA, mapping(ManifestGroup.normKey(rootA))) == Set("a1", "a2"))
+    // overlap: the rival lands on B's touched leaf w1 — abort, no flip
+    val (rootA2, rootB2, meta2) = mk()
+    val before = ManifestGroup.currentGroup(spark, meta2).get
+    intercept[java.util.ConcurrentModificationException] {
+      RivalCommit.around(rootA2) {
+        rivalAppend(rootB2, Seq("w"), Seq(("r1", "w1")).toDF("uid", "w")): Unit
+      } {
+        Erasure.eraseGroupAtomic(spark, meta2,
+          Seq(rootA2 -> "w", rootB2 -> "w"), subjects, Seq("uid"),
+          batchId = "race-2")
+      }
+    }
+    assert(ManifestGroup.currentGroup(spark, meta2).get == before,
+      "an aborted member must leave the group pointer where it was")
+    assert(uids(rootB2, Manifest.current(spark, rootB2).get._1) ==
+      Set("a0", "b1", "b2", "r1"), "the rival's commit stands")
+  }
+
+  test("writeDailyGroupAtomic racing a member commit: a rival on another " +
+    "day stays live after the flip; a rival on a written day aborts and " +
+    "leaves the group pointer where it was") {
+    import graft.ingest.Ingest
+    import graft.jobs.{DailyJob, GaPipeline}
+    val hits = Ingest.readEnrichedHits(spark,
+      "fixtures/ga/enriched/year=2019/month=09/day=23")
+    val out = GaPipeline.run(hits,
+      GaPipeline.loadHistory(spark, "/nonexistent/history"), "2019-09-23")
+    val day = Seq("2019-09-23")
+    def rivalDay(root: String, d: String): Seq[String] =
+      rivalAppend(root, Seq("year", "month", "day"),
+        spark.read.parquet(root).drop("year", "month", "day").limit(1)
+          .withColumn("year", lit("2019")).withColumn("month", lit("09"))
+          .withColumn("day", lit(d)))
+    // disjoint: while sessions publishes, a rival lands on pageviews' 24th
+    val tmp = Files.createTempDirectory("graft_ga_race").toString
+    DailyJob.writeDailyGroupAtomic(spark, out, tmp, day, None)      // g1
+    val (pv, sess) = (s"$tmp/daily/type=pageviews", s"$tmp/daily/type=sessions")
+    val pvDay = Manifest.read(spark, pv).count()
+    var rivalFiles: Seq[String] = Nil
+    val (g2, m2) = RivalCommit.around(sess) {
+      rivalFiles = rivalDay(pv, "24")
+    } {
+      DailyJob.writeDailyGroupAtomic(spark, out, tmp, day, None)
+    }
+    assert(g2 == 2L)
+    val vPv = m2(ManifestGroup.normKey(pv))
+    assert(rivalFiles.nonEmpty &&
+      rivalFiles.forall(Manifest.filesAt(spark, pv, vPv).contains),
+      "the rival's commit must stay live in the flipped version")
+    assert(Manifest.readVersion(spark, pv, vPv).count() == pvDay + 1)
+    // overlap: the rival lands on pageviews' written day — abort, no flip
+    val tmp2 = Files.createTempDirectory("graft_ga_race2").toString
+    DailyJob.writeDailyGroupAtomic(spark, out, tmp2, day, None)     // g1
+    val before = ManifestGroup.currentGroup(spark, s"$tmp2/daily").get
+    intercept[java.util.ConcurrentModificationException] {
+      RivalCommit.around(s"$tmp2/daily/type=sessions") {
+        rivalDay(s"$tmp2/daily/type=pageviews", "23"): Unit
+      } {
+        DailyJob.writeDailyGroupAtomic(spark, out, tmp2, day, None)
+      }
+    }
+    assert(ManifestGroup.currentGroup(spark, s"$tmp2/daily").get == before,
+      "an aborted member must leave the group pointer where it was")
   }
 }

@@ -197,8 +197,8 @@ class ManifestStreamSpec extends SparkTestBase {
     import graft.sources.ManifestGroup
     val root = mkRoot()
     val meta = Files.createTempDirectory("graft_msgrp").toString
-    ManifestGroup.publish(spark, meta,
-      Map(root -> Manifest.current(spark, root).get._2))    // g1
+    ManifestGroup.flip(spark, meta, Map(root ->
+      Manifest.commit(spark, root, Manifest.current(spark, root).get._2))) // g1
     val q = startMem(root, "ms_grp", Map("groupMeta" -> meta))
     try {
       q.processAllAvailable()
@@ -229,8 +229,8 @@ class ManifestStreamSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     val root = mkRoot()
     val meta = Files.createTempDirectory("graft_msgrp2").toString
-    ManifestGroup.publish(spark, meta,
-      Map(root -> Manifest.current(spark, root).get._2))    // g1
+    ManifestGroup.flip(spark, meta, Map(root ->
+      Manifest.commit(spark, root, Manifest.current(spark, root).get._2))) // g1
     val schema = Manifest.read(spark, root).schema
     val src = new ManifestStreamSource(spark, root, schema,
       startVersion = 0L, ignoreChanges = false, changeFeed = false,
@@ -316,8 +316,8 @@ class ManifestStreamSpec extends SparkTestBase {
     // group-pinned arm: q253 semantics through the NAME
     val root2 = mkRoot()
     val meta = Files.createTempDirectory("graft_mstgrp").toString
-    ManifestGroup.publish(spark, meta,
-      Map(root2 -> Manifest.current(spark, root2).get._2))   // g1
+    ManifestGroup.flip(spark, meta, Map(root2 ->
+      Manifest.commit(spark, root2, Manifest.current(spark, root2).get._2))) // g1
     GraftTable.register(spark, "graft_mst", "t3", root2,
       schema = Some(org.apache.spark.sql.types.StructType.fromDDL(
         "uid STRING, day STRING")), partitionCols = Seq("day"),

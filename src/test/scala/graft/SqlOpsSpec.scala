@@ -493,6 +493,30 @@ class SqlOpsSpec extends SparkTestBase {
     assert(spark.table(name).agg(sum("score")).as[Long].head() == 171L)
   }
 
+  test("RENAME COLUMN racing an append between plan and publish: the " +
+    "rival's rows survive the rename and serve under the new name") {
+    val (root, name) = mkTable()                              // v1
+    val rootP = new org.apache.hadoop.fs.Path(root)
+    var rivalFiles: Seq[String] = Nil
+    RivalCommit.around(root) {
+      // a path-addressed writer still on the pre-rename (physical) names
+      rivalFiles = Manifest.stageUniqueParts(spark,
+        rootP.getFileSystem(spark.sessionState.newHadoopConf()), rootP,
+        Seq("day"), Seq((9L, "d9", 90L)).toDF("id", "day", "v"))
+      val (cur, live) = Manifest.current(spark, root).get
+      assert(Manifest.tryCommit(spark, root, live ++ rivalFiles, cur)
+        .isDefined)                                           // v2: rival
+    } {
+      spark.sql(s"ALTER TABLE $name RENAME COLUMN v TO score") // v3
+    }
+    val (v, live) = Manifest.current(spark, root).get
+    assert(v == 3L, s"the rename rebased onto the rival's slot: $v")
+    assert(rivalFiles.nonEmpty && rivalFiles.forall(live.contains),
+      "the rival's appended file must stay live")
+    assert(spark.table(name).columns.toSeq == Seq("id", "score", "day"))
+    assert(spark.table(name).agg(sum("score")).as[Long].head() == 190L)
+  }
+
   test("RENAME COLUMN refusal shapes: partition columns, name " +
     "collisions (logical AND prior physical), CHECK references") {
     val (_, name) = mkTable()
