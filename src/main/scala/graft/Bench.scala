@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.ParquetSchema
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -78,6 +80,20 @@ object Bench {
     val par = (System.nanoTime() - t1) / 1e9
     (single, par, p)
   }
+
+  /** The stdout summary line within `budget` characters.
+    * `render(headline, spread)` builds the line, with the
+    * `queries_spread` map only when `spread` is defined. Over budget,
+    * `queries_spread` goes first, then headline entries from the end,
+    * until the line fits — the full record is in bench_out.json either
+    * way. Returns the shortest form when even that does not fit. */
+  private[graft] def fitLine(headline: Seq[(String, Double)],
+                             spread: Seq[(String, Double)], budget: Int)(
+      render: (Seq[(String, Double)], Option[Seq[(String, Double)]]) => String)
+      : String =
+    (Iterator(render(headline, Some(spread))) ++
+      (headline.length to 0 by -1).iterator.map(k => render(headline.take(k), None)))
+      .find(_.length <= budget).getOrElse(render(Nil, None))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -247,7 +263,7 @@ object Bench {
     val warmDir = java.nio.file.Files.createTempDirectory("graft_warm").toString
     spark.range(200000).selectExpr("id", "id % 97 AS k", "rand(7) AS v")
       .write.mode("overwrite").parquet(warmDir)
-    val warm = spark.read.parquet(warmDir)
+    val warm = ParquetSchema.read(spark, warmDir)
     warm.filter("v > 0.1").groupBy("k").agg(org.apache.spark.sql.functions.sum("v").as("s"))
       .join(warm.select("k").distinct(), "k")
       .selectExpr("k", "s", "row_number() OVER (ORDER BY s) AS rn")
@@ -415,9 +431,12 @@ object Bench {
     val spreadMap = spread.toMap
     val headlineMap = headline.flatMap(n => minMap.get(n).map(n -> _))
     val headlineSpread = headline.flatMap(n => spreadMap.get(n).map(n -> _))
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","value_median":$totalMed,"iterations":$benchPass,"n_queries":${med.size},"queries":${jmap(headlineMap)},"queries_spread":${jmap(headlineSpread)},"ga_scale":$gaScaleJsonCompact,"calibration":$calibJson,"errors":$errJson,"full_record":"$outFile","sf":"$sfDir"}"""
+    val line = fitLine(headlineMap, headlineSpread, 1500) { (hl, spr) =>
+      val spreadJson = spr.fold("")(kvs => s""""queries_spread":${jmap(kvs)},""")
+      s"""{"metric":"total","value":$total,"unit":"sec","value_median":$totalMed,"iterations":$benchPass,"n_queries":${med.size},"queries":${jmap(hl)},$spreadJson"ga_scale":$gaScaleJsonCompact,"calibration":$calibJson,"errors":$errJson,"full_record":"$outFile","sf":"$sfDir"}"""
+    }
     if (line.length > 1500)
-      System.err.println(s"[bench] WARNING: stdout line is ${line.length} chars (>1500); the driver tail may truncate it")
+      System.err.println(s"[bench] WARNING: stdout line is ${line.length} chars (>1500) with no headline left; the driver tail may truncate it")
     println(line)
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{ParquetSchema, Tables}
 import graft.operators.{Attribution, Ecommerce, Sessionization}
 import graft.ingest.Ingest
 import graft.functions.GaFunctions
@@ -375,7 +375,7 @@ private[graft] object Queries100to199 {
       val tmp = System.getProperty("java.io.tmpdir")
       val layout = new java.io.File(tmp, s"graft_skip_layout_$tag").toString
       val idx = new java.io.File(tmp, s"graft_skip_idx_$tag").toString
-      s.read.parquet(base).repartitionByRange(8, col("o_orderdate"))
+      ParquetSchema.read(s, base).repartitionByRange(8, col("o_orderdate"))
         .write.mode("overwrite").parquet(layout)
       SkippingIndex.build(s, layout, Seq("o_orderdate"), idx)
       val lo = java.sql.Timestamp.valueOf("1995-03-01 00:00:00")
@@ -402,8 +402,8 @@ private[graft] object Queries100to199 {
       import graft.plans.JoinElimination
       JoinElimination.register(s, s"$dir/orders.parquet", "o_custkey",
         s"$dir/customer.parquet", "c_custkey")
-      val o = s.read.parquet(s"$dir/orders.parquet")
-      val c = s.read.parquet(s"$dir/customer.parquet")
+      val o = ParquetSchema.read(s, s"$dir/orders.parquet")
+      val c = ParquetSchema.read(s, s"$dir/customer.parquet")
       val out = o.join(c, o("o_custkey") === c("c_custkey"))
         .select(o("o_orderpriority"), c("c_custkey"),
           round(o("o_totalprice") * 100).cast("long").as("price_cents"))
@@ -676,7 +676,7 @@ private[graft] object Queries100to199 {
       SummaryRewrite.materialize(s, base, sumDir,
         Seq("l_returnflag", "l_linestatus"),
         Seq(qtyL -> "s_qty", pc -> "s_price"))
-      val out = s.read.parquet(base)
+      val out = ParquetSchema.read(s, base)
         .filter(col("l_returnflag") =!= "X")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(sum(qtyL).as("sum_qty"), sum(pc).as("sum_price_cents"),

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{ParquetSchema, Tables}
 import graft.operators.{Attribution, Ecommerce, Sessionization}
 import graft.ingest.Ingest
 import graft.functions.GaFunctions
@@ -289,7 +289,7 @@ private[graft] object Queries200plus {
       val tag = Integer.toHexString(base.hashCode)
       val tmp = System.getProperty("java.io.tmpdir")
       val layout = new java.io.File(tmp, s"graft_countlog_$tag").toString
-      val shaped = s.read.parquet(base)
+      val shaped = ParquetSchema.read(s, base)
         .withColumn("opri", substring(col("o_orderpriority"), 1, 1))
       shaped.repartition(4)
         .write.mode("overwrite").partitionBy("opri").parquet(layout)
@@ -418,7 +418,7 @@ private[graft] object Queries200plus {
       val meta = lakeLayout(dir, "graft_grp_meta")
       val acc = lakeLayout(dir, "graft_gstream_acc")
       ensureLakeFixture(s, dir, "q253_group_stream")(fixQ233(s, dir))
-      val shaped = s.read.parquet(s"$dir/orders.parquet")
+      val shaped = ParquetSchema.read(s, s"$dir/orders.parquet")
         .withColumn("w", substring(col("o_orderpriority"), 1, 1))
         .select(col("o_orderkey"), col("o_totalprice"), col("w"))
       val cp = java.nio.file.Files
@@ -1197,7 +1197,7 @@ private[graft] object Queries200plus {
       import graft.sources.Manifest
       val layout = lakeLayout(dir, "graft_zord")
       ensureLakeFixture(s, dir, "q244_optimize_zorder")(fixQ244(s, dir))
-      val facts = s.read.parquet(s"$dir/orders.parquet")
+      val facts = ParquetSchema.read(s, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey").as("custkey"),
           round(col("o_totalprice") * 100).cast("long").as("price_cents"),
           pmod(col("o_custkey"), lit(128)).as("xk"),
@@ -1362,7 +1362,7 @@ private[graft] object Queries200plus {
       val rootB = lakeLayout(dir, "graft_dvg_roll")
       val meta = lakeLayout(dir, "graft_dvg_meta")
       ensureLakeFixture(s, dir, "q240_dv_group_erasure")(fixQ240(s, dir))
-      val facts = s.read.parquet(s"$dir/orders.parquet")
+      val facts = ParquetSchema.read(s, s"$dir/orders.parquet")
         .select(col("o_custkey").as("custkey"), col("o_totalprice"),
           substring(col("o_orderpriority"), 1, 1).as("w"))
       val roll = facts.groupBy("custkey")
@@ -1579,7 +1579,7 @@ private[graft] object Queries200plus {
       val rootB = lakeLayout(dir, "graft_ers_roll")
       val meta = lakeLayout(dir, "graft_ers_meta")
       ensureLakeFixture(s, dir, "q234_group_erasure")(fixQ234(s, dir))
-      val facts = s.read.parquet(s"$dir/orders.parquet")
+      val facts = ParquetSchema.read(s, s"$dir/orders.parquet")
         .select(col("o_custkey").as("custkey"), col("o_totalprice"),
           substring(col("o_orderpriority"), 1, 1).as("w"))
       val roll = facts
@@ -1629,7 +1629,7 @@ private[graft] object Queries200plus {
       // crash window: waves 4-5 landed AND committed to the facts
       // table's own manifest, with no group flip
       ensureLakeFixture(s, dir, "q233_group_snapshot")(fixQ233(s, dir))
-      val shaped = s.read.parquet(s"$dir/orders.parquet")
+      val shaped = ParquetSchema.read(s, s"$dir/orders.parquet")
         .withColumn("w", substring(col("o_orderpriority"), 1, 1))
         .select(col("o_orderkey"), col("o_totalprice"), col("w"))
       def aggOf(ws: Seq[String]) = shaped.where(col("w").isin(ws: _*))
@@ -1672,7 +1672,7 @@ private[graft] object Queries200plus {
       // fixture = waves 1-2 bootstrapped; waves 3-5 are committed by
       // the query itself, mid-stream (they ARE the operator)
       ensureLakeFixture(s, dir, "q232_manifest_change_feed")(fixQ232(s, dir))
-      val shaped = s.read.parquet(s"$dir/orders.parquet")
+      val shaped = ParquetSchema.read(s, s"$dir/orders.parquet")
         .withColumn("w", substring(col("o_orderpriority"), 1, 1))
         .select("o_orderkey", "o_totalprice", "w")
       shaped.limit(0).write.mode("overwrite").parquet(acc) // seed schema
@@ -1713,7 +1713,7 @@ private[graft] object Queries200plus {
       val tag = Integer.toHexString(base.hashCode)
       val tmp = System.getProperty("java.io.tmpdir")
       val layout = new java.io.File(tmp, s"graft_agglog_$tag").toString
-      val shaped = s.read.parquet(base)
+      val shaped = ParquetSchema.read(s, base)
         .withColumn("opri", substring(col("o_orderpriority"), 1, 1))
         .withColumn("price_cents",
           round(col("o_totalprice") * 100).cast("long"))
@@ -1755,7 +1755,7 @@ private[graft] object Queries200plus {
       val tag = Integer.toHexString(base.hashCode)
       val tmp = System.getProperty("java.io.tmpdir")
       val layout = new java.io.File(tmp, s"graft_uni_range_$tag").toString
-      s.read.parquet(base).repartitionByRange(8, col("o_orderdate"))
+      ParquetSchema.read(s, base).repartitionByRange(8, col("o_orderdate"))
         .write.mode("overwrite").parquet(layout)
       Manifest.bootstrap(s, layout)
       Manifest.writeColStats(s, layout, 1L, Seq("o_orderdate"))
@@ -1816,7 +1816,7 @@ private[graft] object Queries200plus {
       val idx = new java.io.File(tmp, s"graft_skiplog_idx_$tag").toString
       // overwrite wipes the layout INCLUDING its old manifest dir, so
       // every run bootstraps a fresh v1 over exactly these files
-      s.read.parquet(base).repartitionByRange(8, col("o_orderdate"))
+      ParquetSchema.read(s, base).repartitionByRange(8, col("o_orderdate"))
         .write.mode("overwrite").parquet(layout)
       Manifest.bootstrap(s, layout)
       // footer mode (round 12): min/max/nulls come from the parquet
@@ -2004,7 +2004,7 @@ private[graft] object Queries200plus {
       // artifact export is memoized setup (an offline index job);
       // the timed body is the SERVE path: read postings, align phrase
       val idx = postingIdx(s, dir)
-      InvertedIndex.phraseSearchFromIndex(s.read.parquet(idx),
+      InvertedIndex.phraseSearchFromIndex(ParquetSchema.read(s, idx),
         Seq("table", "hash"))
     }),
 

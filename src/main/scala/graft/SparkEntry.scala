@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.sources.Tables
+import graft.sources.{ParquetSchema, Tables}
 import graft.operators.{Attribution, Ecommerce, Sessionization}
 import graft.ingest.Ingest
 import graft.functions.GaFunctions
@@ -184,7 +184,7 @@ object SparkEntry {
     * (o_orderkey, custkey, price_cents, w) with w = first char of the
     * order priority (the partition wave). */
   private[graft] def ordersFacts(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/orders.parquet")
+    ParquetSchema.read(s, s"$dir/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey").as("custkey"),
         round(col("o_totalprice") * 100).cast("long").as("price_cents"),
         substring(col("o_orderpriority"), 1, 1).as("w"))
@@ -230,7 +230,7 @@ object SparkEntry {
   private[graft] def fixQ232(s: SparkSession, dir: String): Unit = {
     import graft.sources.Manifest
     val layout = lakeLayout(dir, "graft_feed")
-    val shaped = s.read.parquet(s"$dir/orders.parquet")
+    val shaped = ParquetSchema.read(s, s"$dir/orders.parquet")
       .withColumn("w", substring(col("o_orderpriority"), 1, 1))
       .select("o_orderkey", "o_totalprice", "w")
     shaped.where(col("w").isin("1", "2")).repartition(2)
@@ -247,7 +247,7 @@ object SparkEntry {
     val rootB = lakeLayout(dir, "graft_grp_agg")
     val meta = lakeLayout(dir, "graft_grp_meta")
     wipeRoots(s, rootA, rootB, meta)
-    val shaped = s.read.parquet(s"$dir/orders.parquet")
+    val shaped = ParquetSchema.read(s, s"$dir/orders.parquet")
       .withColumn("w", substring(col("o_orderpriority"), 1, 1))
       .select(col("o_orderkey"), col("o_totalprice"), col("w"))
     def aggOf(ws: Seq[String]) = shaped.where(col("w").isin(ws: _*))
@@ -278,7 +278,7 @@ object SparkEntry {
     val rootB = lakeLayout(dir, "graft_ers_roll")
     val meta = lakeLayout(dir, "graft_ers_meta")
     wipeRoots(s, rootA, rootB, meta)
-    val facts = s.read.parquet(s"$dir/orders.parquet")
+    val facts = ParquetSchema.read(s, s"$dir/orders.parquet")
       .select(col("o_custkey").as("custkey"), col("o_totalprice"),
         substring(col("o_orderpriority"), 1, 1).as("w"))
     facts.repartition(2).write.partitionBy("w").parquet(rootA)
@@ -298,7 +298,7 @@ object SparkEntry {
     val rootB = lakeLayout(dir, "graft_dvg_roll")
     val meta = lakeLayout(dir, "graft_dvg_meta")
     wipeRoots(s, rootA, rootB, meta)
-    val facts = s.read.parquet(s"$dir/orders.parquet")
+    val facts = ParquetSchema.read(s, s"$dir/orders.parquet")
       .select(col("o_custkey").as("custkey"), col("o_totalprice"),
         substring(col("o_orderpriority"), 1, 1).as("w"))
     facts.repartition(2).write.partitionBy("w").parquet(rootA)
@@ -315,7 +315,7 @@ object SparkEntry {
     import graft.sources.Manifest
     val layout = lakeLayout(dir, "graft_zord")
     wipeRoots(s, layout)
-    s.read.parquet(s"$dir/orders.parquet")
+    ParquetSchema.read(s, s"$dir/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey").as("custkey"),
         round(col("o_totalprice") * 100).cast("long").as("price_cents"),
         pmod(col("o_custkey"), lit(128)).as("xk"),

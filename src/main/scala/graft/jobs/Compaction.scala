@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetSchema
+
 /** Small-file compaction for a partitioned parquet tree — the
   * operational job every long-lived table needs (streaming sinks and
   * incremental appends accrete kilobyte files; at 100 TB the resulting
@@ -95,7 +97,7 @@ object Compaction {
       "false") // values round-trip as dir strings
     sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     import sess.implicits._
-    val df = sess.read.parquet(path)
+    val df = ParquetSchema.read(sess, path)
       .filter(col(partCol).isin(counts.keys.toSeq: _*))
     // loud mismatch guard: every budget key must exist in the data
     val dataValues = df.select(partCol).distinct().as[String].collect().toSet
@@ -116,7 +118,7 @@ object Compaction {
 
   /** The read-back frame, for parity checks. */
   def readBack(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetSchema.read(spark, path)
 
   /** ATOMIC compaction of an UNPARTITIONED manifest table — [[compact]]
     * under the [[graft.sources.Manifest]] commit protocol: one

@@ -6,7 +6,7 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Versioned
+import graft.sources.{ParquetSchema, Versioned}
 
 /** The delivery PACKAGING stage — everything the reference's SFTP
   * uploader does short of the socket itself
@@ -95,7 +95,7 @@ object Delivery {
   def uploadState(spark: SparkSession, outRoot: String): DataFrame = {
     val root = s"$outRoot/upload_state"
     Versioned.current(spark, root) match {
-      case Some(v) => spark.read.parquet(s"$root/$v")
+      case Some(v) => ParquetSchema.read(spark, s"$root/$v")
       case None =>
         import spark.implicits._
         Seq.empty[(String, String, Seq[String], String, String)]

@@ -41,7 +41,8 @@ object BigramLm {
   /** `(doc_id, n_bigrams, xent)`: per-document add-k bigram
     * cross-entropy; `xent` is null for docs with fewer than 2 tokens.
     *
-    * Profile (round 9, tools/ProfQ91 at sf0.1 on local[32], warm): the
+    * Profile (round 9, q91 at sf0.1 on local[32], warm; later per-query
+    * times are recorded in OPTIMIZATION_r14.md and OPTIMIZATION_r15.md): the
     * full score runs ≈ 2.0 s, a fold-free variant (plain `sum(c)`,
     * order-dependent) ≈ 1.9 s, and the cached tf table alone ≈ 0.6 s —
     * i.e. the bit-stability sorted fold costs ~5% of the query, the

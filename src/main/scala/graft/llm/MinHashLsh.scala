@@ -152,7 +152,8 @@ object MinHashLsh {
     * The hash-set table feeds three plan branches (band keys + both
     * verify sides). `cacheSets` persists it so the shingle+md5 stage runs
     * once instead of three times — at 32 cores this wins 2.5x wall-clock
-    * (1.4 s vs 3.6 s warm at sf0.1; tools/ProfDedup). The earlier
+    * (1.4 s vs 3.6 s warm at sf0.1, round 9; OPTIMIZATION_r14.md and
+    * OPTIMIZATION_r15.md record how q123 pays this shared build). The earlier
     * default-off measurement that found caching slower was taken at 4
     * cores, where the cache barrier serialized stages that had idle CPUs
     * to run on; with realistic parallelism total work dominates.

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Versioned
+import graft.sources.{ParquetSchema, Versioned}
 
 /** Persistent IVF-Flat index artifact — build ONCE, query MANY: the
   * production lifecycle the per-query arms (q35/q147/q161 fit their
@@ -115,7 +115,7 @@ object VectorIndex {
     // the partition column alone would read every cell directory)
     val probed = q.select(col("cell").cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq
-    val lists0 = spark.read.parquet(s"$root/$v/assignments")
+    val lists0 = ParquetSchema.read(spark, s"$root/$v/assignments")
       .filter(col("cell").cast("string").isin(probed: _*))
     // a quantized version scores against the int8 DIRECTION (cosine is
     // scale-invariant; the full-precision query keeps its own side exact)
@@ -145,7 +145,7 @@ object VectorIndex {
     Versioned.current(spark, root) match {
       case None => ("", Seq.empty)
       case Some(v) =>
-        val cents = spark.read.parquet(s"$root/$v/centroids")
+        val cents = ParquetSchema.read(spark, s"$root/$v/centroids")
           .orderBy("cell").collect()
           .map(_.getSeq[Double](1).toSeq).toSeq
         (v, cents)

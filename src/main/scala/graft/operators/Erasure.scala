@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetSchema
+
 /** Keyed erasure — the right-to-be-forgotten DELETE a serving store
   * must honor (GDPR art. 17 / CCPA): every row belonging to a set of
   * data subjects disappears from the table, an audit ledger records
@@ -80,7 +82,7 @@ object Erasure {
     try {
       // 1. narrow matched projection: keys + partition, persisted —
       // feeds the touched list AND the ledger counts
-      val matched = sess.read.parquet(targetPath)
+      val matched = ParquetSchema.read(sess, targetPath)
         .select((keys :+ partCol).map(col): _*)
         .join(broadcast(subj), keys, "left_semi")
         .persist()
@@ -113,7 +115,7 @@ object Erasure {
           .groupBy(col(partCol).cast("string").as("_p"))
           .agg(count(lit(1)).as("_m"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val totalPerPart = sess.read.parquet(targetPath)
+        val totalPerPart = ParquetSchema.read(sess, targetPath)
           .filter(col(partCol).cast("string").isin(touched: _*))
           .groupBy(col(partCol).cast("string").as("_p"))
           .agg(count(lit(1)).as("_n"))
@@ -123,7 +125,7 @@ object Erasure {
         // 2. rewrite affected partitions without the subjects' rows.
         // Inference is off, so partCol reads as the raw directory string
         // and writes back to the identical directory names.
-        val affected = sess.read.parquet(targetPath)
+        val affected = ParquetSchema.read(sess, targetPath)
           .filter(col(partCol).cast("string").isin(touched: _*))
         val surviving = affected.join(broadcast(subj), keys, "left_anti")
         surviving.write.mode(SaveMode.Overwrite)

@@ -113,7 +113,8 @@ object PageRank {
     // dst's fold state is bounded by the bucket width at level 1 and by
     // id-space/width at level 2. `div` truncates toward zero on both
     // engines and is monotone in src, so (bucket, src) order IS src
-    // order. The level-2 exchange ships one row per (dst, bucket) —
+    // order. `src` ids are non-negative here, and DuckDB 1.0.0's `//`
+    // truncates like Spark's `div` anyway (`-7 // 2 = -3`). The level-2 exchange ships one row per (dst, bucket) —
     // noise next to the contribution shuffle it rides behind.
     val bucketed = contribs
       .groupBy(col("dst"), expr(s"src div ${FoldBucketWidth}L").as("bk"))

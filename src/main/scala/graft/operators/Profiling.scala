@@ -72,7 +72,8 @@ object Profiling {
     * `exactDistinct = false` is the documented SCALE MODE, and via
     * [[profileAuto]] the DEFAULT for wide tables (round-9 verdict task
     * #6). Measured split on the q141 lineitem input (sf0.1, local[32],
-    * warm, tools/ProfProfile, round-10 re-run): full ≈ 2.5–2.6 s,
+    * warm, round-10 re-run; OPTIMIZATION_r14.md records q141 at 3.88 s
+    * with the base scan as its floor): full ≈ 2.5–2.6 s,
     * sketch-only ≈ 1.8–2.2 s — at THIS scale the one-scan base (C×4
     * aggregates incl. C HLLs) carries most of the cost and the exact
     * arm adds ~30%, so the round-8 "one-scan refactor didn't halve

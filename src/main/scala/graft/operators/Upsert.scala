@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetSchema
+
 /** Keyed MERGE/upsert — the Delta-style `WHEN MATCHED THEN UPDATE ALL /
   * WHEN NOT MATCHED THEN INSERT ALL` semantics (SURVEY §2.8's proper fix
   * for the reference's append-only session history), expressed as the
@@ -114,7 +116,7 @@ object Upsert {
       // typed the tree at bootstrap, so this round-trips value-identically
       // (and a string-typed source keeps `hour=00` verbatim, the
       // Compaction value-identity lesson)
-      val affected = sess.read.parquet(targetPath)
+      val affected = ParquetSchema.read(sess, targetPath)
         .filter(col(partCol).cast("string").isin(touched: _*))
         .withColumn(partCol, col(partCol).cast(source.schema(partCol).dataType))
       upsert(affected, src, keys)

@@ -12,6 +12,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, count}
 
+import graft.sources.ParquetSchema
+
 /** FK join elimination — the classic optimizer rewrite every warehouse
   * engine carries: an INNER equi-join from a fact table to a dimension
   * over a DECLARED foreign key is row-preserving (each fact row
@@ -82,8 +84,8 @@ object JoinElimination extends Rule[LogicalPlan] {
     * replaces the spec. */
   def register(spark: SparkSession, factPath: String, fk: String,
                dimPath: String, pk: String, validate: Boolean = true): Unit = {
-    val fact = spark.read.parquet(factPath)
-    val dim = spark.read.parquet(dimPath)
+    val fact = ParquetSchema.read(spark, factPath)
+    val dim = ParquetSchema.read(spark, dimPath)
     if (validate) {
       val nullFk = fact.filter(col(fk).isNull).limit(1).count()
       require(nullFk == 0, s"join-elimination: $factPath.$fk has NULLs")

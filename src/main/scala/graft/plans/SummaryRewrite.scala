@@ -12,6 +12,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, count, lit, sum}
 
+import graft.sources.ParquetSchema
+
 /** Materialized-summary rewrite — the optimizer half of an OLAP
   * engine's aggregate-navigator: a registered summary table (the q94
   * cube's persisted form) answers matching aggregates over its base
@@ -93,7 +95,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
     * same way or the keys never meet. */
   private def measureKey(spark: SparkSession, basePath: String,
                          c: Column): String = {
-    val optimized = spark.read.parquet(basePath).select(c)
+    val optimized = ParquetSchema.read(spark, basePath).select(c)
       .queryExecution.optimizedPlan
     val e = optimized.collectFirst { case p: Project =>
       p.projectList.head match {
@@ -112,9 +114,9 @@ object SummaryRewrite extends Rule[LogicalPlan] {
   def register(spark: SparkSession, basePath: String, summaryPath: String,
                dims: Seq[String], sums: Seq[(Column, String)],
                cnt: String): Unit = {
-    val baseAnalyzed = spark.read.parquet(basePath).queryExecution.analyzed
+    val baseAnalyzed = ParquetSchema.read(spark, basePath).queryExecution.analyzed
     val roots = rootsOf(baseAnalyzed)
-    val sumRel = spark.read.parquet(summaryPath).queryExecution.analyzed
+    val sumRel = ParquetSchema.read(spark, summaryPath).queryExecution.analyzed
       .collectFirst { case lr: LogicalRelation => lr }
       .getOrElse(throw new IllegalArgumentException(
         s"summary at $summaryPath did not produce a file relation"))
@@ -131,7 +133,7 @@ object SummaryRewrite extends Rule[LogicalPlan] {
                   dims: Seq[String], sums: Seq[(Column, String)]): Unit = {
     val aggs = sums.map { case (c, n) => sum(c).as(n) } :+
       count(lit(1)).as("cnt")
-    spark.read.parquet(basePath)
+    ParquetSchema.read(spark, basePath)
       .groupBy(dims.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
       .write.mode("overwrite").parquet(summaryPath)

@@ -61,7 +61,7 @@ object BloomFileIndex {
     val agg = toCol(new BloomFilterAggregate(
       toExpr(xxhash64(col(column))), Literal(expectedPerFile), Literal(numBits))
       .toAggregateExpression())
-    spark.read.parquet(tablePath)
+    ParquetSchema.read(spark, tablePath)
       .select(input_file_name().as("file"), col(column))
       .groupBy("file")
       .agg(agg.as("bloom"), count(lit(1)).as("n_rows"))
@@ -93,7 +93,7 @@ object BloomFileIndex {
     // already driver-resident); the blooms themselves never leave the
     // executors: kept rows are a broadcast semi-join of the old index
     // against the live path list
-    val oldIdx = spark.read.parquet(indexPath)
+    val oldIdx = ParquetSchema.read(spark, indexPath)
     val oldNorms = oldIdx.select("file").collect()
       .map(r => norm(r.getString(0))).toSet
     val keptCount = oldNorms.count(liveNorm)
@@ -106,7 +106,7 @@ object BloomFileIndex {
       .toAggregateExpression())
     val added =
       if (toAdd.isEmpty) oldIdx.limit(0)
-      else spark.read.option("basePath", rootP.toString).parquet(toAdd: _*)
+      else ParquetSchema.read(spark, toAdd, Map("basePath" -> rootP.toString))
         .select(input_file_name().as("file"), col(column))
         .groupBy("file")
         .agg(agg.as("bloom"), count(lit(1)).as("n_rows"))
@@ -132,7 +132,7 @@ object BloomFileIndex {
     * index table; the driver holds file PATHS only, never data. */
   def prunedPaths(spark: SparkSession, indexPath: String,
                   value: Column): (Seq[String], Long) = {
-    val idx = spark.read.parquet(indexPath)
+    val idx = ParquetSchema.read(spark, indexPath)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val total = idx.count()
@@ -151,5 +151,5 @@ object BloomFileIndex {
     * bloom membership is necessary, not sufficient. */
   def scan(spark: SparkSession, tablePath: String,
            files: Seq[String]): DataFrame =
-    spark.read.option("basePath", tablePath).parquet(files: _*)
+    ParquetSchema.read(spark, files, Map("basePath" -> tablePath))
 }

@@ -330,7 +330,7 @@ class ManifestFileIndex(
             if resolver(a.name, c) && l.value != null => l
         }.flatMap { lit =>
           try {
-            val idxDf = spark.read.parquet(idx)
+            val idxDf = ParquetSchema.read(spark, idx)
             val hitCol = org.apache.spark.sql.functions.call_function(
               "bloom_hit", org.apache.spark.sql.functions.col("bloom"),
               org.apache.spark.sql.functions.xxhash64(toCol(lit)))

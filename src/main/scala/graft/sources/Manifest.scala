@@ -240,8 +240,7 @@ object Manifest {
     val live = current(spark, root).map(_._2.toSet).getOrElse(Set.empty)
     val added = files.filterNot(live)
     if (added.nonEmpty) {
-      val batch = spark.read.option("basePath", rootP.toString)
-        .parquet(added.map(f => new Path(rootP, f).toString): _*)
+      val batch = scanOf(spark, rootP, added, None)
       val report = graft.operators.Expectations.check(batch, exps)
       val failed = report.where(!col("passed"))
         .collect().map(r => s"${r.getAs[String]("rule")}(${
@@ -305,9 +304,7 @@ object Manifest {
           else filesAt(spark, root, base).toSet
         val added = files.filterNot(liveSet)
         if (added.nonEmpty) {
-          val reader = spark.read.option("basePath", rootP.toString)
-          val batch = schemaAt(spark, root, base).fold(reader)(reader.schema)
-            .parquet(added.map(f => new Path(rootP, f).toString): _*)
+          val batch = scanOf(spark, rootP, added, schemaAt(spark, root, base))
           GraftTable.validateConstraints(batch, checks)
         }
       }
@@ -420,7 +417,6 @@ object Manifest {
     val (_, rootP) = fsOf(spark, root)
     require(files.nonEmpty,
       s"manifest snapshot of $root is empty — the table was fully erased")
-    val reader = spark.read.option("basePath", rootP.toString)
     // schema-in-log: declared schema beats inference — zero footer
     // reads, deterministic union schema across evolved files (absent
     // columns null-fill), partition types as recorded. COLUMN MAPPING
@@ -428,10 +424,23 @@ object Manifest {
     // its prior physical names (old files serve theirs, new files the
     // logical one — the absent twin null-fills), and the projection
     // coalesces the family back to the one logical column.
-    val base = schema.map(expandPhysical).fold(reader)(reader.schema)
-      .parquet(files.map(f => new Path(rootP, f).toString): _*)
+    val base = scanOf(spark, rootP, files, schema.map(expandPhysical))
     val dvd = DeletionVectors.dropDeleted(spark, root, base, dvs)
     schema.filter(hasColumnMapping).fold(dvd)(logicalProjection(dvd, _))
+  }
+
+  /** Parquet scan of root-relative `files` under `basePath` = the
+    * root: with `schema` declared when there is one, else with the
+    * schema one footer gives on the driver ([[ParquetSchema]]) — either
+    * way building the frame starts no Spark job. */
+  private[graft] def scanOf(spark: SparkSession, rootP: Path,
+                            files: Seq[String],
+                            schema: Option[org.apache.spark.sql.types.StructType])
+      : DataFrame = {
+    val paths = files.map(f => new Path(rootP, f).toString)
+    val opts = Map("basePath" -> rootP.toString)
+    schema.fold(ParquetSchema.read(spark, paths, opts))(
+      spark.read.options(opts).schema(_).parquet(paths: _*))
   }
 
   /** Snapshot-semantics read of an explicit FILE SUBSET at version `v`:
@@ -524,10 +533,8 @@ object Manifest {
     * duplicate (file, pos) pairs. */
   private def dmlScan(sess: SparkSession, root: String, rootP: Path,
                       files: Seq[String], v: Long): DataFrame = {
-    val reader = sess.read.option("basePath", rootP.toString)
     val mapped = schemaAt(sess, root, v).filter(hasColumnMapping)
-    val scan = mapped.map(expandPhysical).fold(reader)(reader.schema)
-      .parquet(files.map(f => new Path(rootP, f).toString): _*)
+    val scan = scanOf(sess, rootP, files, mapped.map(expandPhysical))
       .withColumn("__graft_path", col("_metadata.file_path"))
       .withColumn("__graft_pos", col("_metadata.row_index"))
     val dvs = dvsAt(sess, root, v)
@@ -748,8 +755,8 @@ object Manifest {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
       }.sum
-    } else spark.read.parquet(
-      files.map(f => new Path(rootP, f).toString): _*).count()
+    } else ParquetSchema.read(spark,
+      files.map(f => new Path(rootP, f).toString)).count()
 
   /** Materialize all live deletion vectors: rewrite exactly the files
     * a DV touches (minus their deleted rows) and drop every DV
@@ -779,8 +786,8 @@ object Manifest {
       case -1 => ""
       case i => rel.substring(0, i)
     }).toSeq.sortBy(_._1).foreach { case (dirRel, rels) =>
-      val scan = spark.read
-        .parquet(rels.map(r => new Path(rootP, r).toString): _*)
+      val scan = ParquetSchema.read(spark,
+        rels.map(r => new Path(rootP, r).toString))
       val survivors = DeletionVectors.dropDeleted(spark, root, scan, dvs)
       val scratch = new Path(rootP, s"_graft_stage/$uuid-purge")
       survivors.write.mode(SaveMode.Overwrite).parquet(scratch.toString)
@@ -1110,8 +1117,7 @@ object Manifest {
       if (missing.isEmpty) Map.empty
       else {
         val rootUri = rootP.toUri.getPath
-        spark.read.option("basePath", rootP.toString)
-          .parquet(missing.map(f => new Path(rootP, f).toString): _*)
+        scanOf(spark, rootP, missing, None)
           .groupBy(org.apache.spark.sql.functions.input_file_name().as("f"))
           .count().collect()
           .map { r =>
@@ -1212,8 +1218,7 @@ object Manifest {
       if (missing.isEmpty) Map.empty
       else {
         import org.apache.spark.sql.functions._
-        val df = spark.read.option("basePath", rootP.toString)
-          .parquet(missing.map(f => new Path(rootP, f).toString): _*)
+        val df = scanOf(spark, rootP, missing, None)
         val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
         cols.foreach(c => require(types.contains(c),
           s"column $c not in table schema ${types.keys.toSeq.sorted}"))

@@ -55,8 +55,8 @@ object ManifestCdc {
         if (files.isEmpty) throw new IllegalStateException(
           s"cannot infer a schema from the empty snapshot v$endV of " +
             s"$root — write a schema sidecar (Manifest.writeSchema)")
-        spark.read.option("basePath", root)
-          .parquet(files.map(f => new Path(root, f).toString): _*).schema
+        ParquetSchema.infer(spark, files.map(f => new Path(root, f).toString),
+          Map("basePath" -> root))
       }
     }
     val steps = all.filter(v => v > fromV && v <= toV)

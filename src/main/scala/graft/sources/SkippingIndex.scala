@@ -35,7 +35,7 @@ object SkippingIndex {
       min(col(c)).as(s"min_$c"),
       max(col(c)).as(s"max_$c"),
       sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nnull_$c")))
-    spark.read.parquet(tablePath)
+    ParquetSchema.read(spark, tablePath)
       .groupBy(col("_metadata.file_path").as("file"))
       .agg(count(lit(1)).as("n_rows"), aggs: _*)
       .coalesce(1) // O(files) rows — one footer beats many
@@ -56,9 +56,9 @@ object SkippingIndex {
     val idxDir = new Path(indexPath)
     val fs = idxDir.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(idxDir)) return build(spark, tablePath, cols, indexPath)
-    val table = spark.read.parquet(tablePath)
+    val table = ParquetSchema.read(spark, tablePath)
     val live = table.inputFiles.toSet
-    val existing = spark.read.parquet(indexPath)
+    val existing = ParquetSchema.read(spark, indexPath)
       .filter(col("file").isin(live.toSeq: _*))
       .localCheckpoint(true) // sever lineage: the overwrite below would
                              // otherwise read the dir it is replacing
@@ -70,7 +70,7 @@ object SkippingIndex {
       sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nnull_$c")))
     val freshStats =
       if (fresh.isEmpty) existing.limit(0)
-      else spark.read.parquet(fresh: _*)
+      else ParquetSchema.read(spark, fresh)
         .groupBy(col("_metadata.file_path").as("file"))
         .agg(count(lit(1)).as("n_rows"), aggs: _*)
     existing.unionByName(freshStats).coalesce(1)
@@ -158,7 +158,7 @@ object SkippingIndex {
     * pruning actually happening. */
   def prunedPaths(spark: SparkSession, indexPath: String, c: String,
                   lo: Any, hi: Any): (Seq[String], Long) = {
-    val idx = spark.read.parquet(indexPath)
+    val idx = ParquetSchema.read(spark, indexPath)
     val total = idx.count()
     val loK = if (lo == null) lit(true) else col(s"max_$c") >= lit(lo)
     val hiK = if (hi == null) lit(true) else col(s"min_$c") <= lit(hi)
@@ -176,6 +176,6 @@ object SkippingIndex {
   def scan(spark: SparkSession, tablePath: String,
            paths: Seq[String]): DataFrame =
     if (paths.isEmpty)
-      spark.read.parquet(tablePath).filter(lit(false))
-    else spark.read.parquet(paths: _*)
+      ParquetSchema.read(spark, tablePath).filter(lit(false))
+    else ParquetSchema.read(spark, paths)
 }

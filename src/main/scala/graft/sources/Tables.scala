@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 /** Loaders for the driver-provided testdata tables
   * (`/root/testdata/sf{N}/{name}.parquet`, see TESTDATA.md).
   *
-  * All loads are plain `spark.read.parquet` so Catalyst gets full predicate
-  * pushdown / column pruning on the scan. The only normalization applied is
+  * All loads are plain parquet scans so Catalyst gets full predicate
+  * pushdown / column pruning on the scan; the schema is read from the
+  * file's footer on the driver ([[ParquetSchema]]), so building a frame
+  * starts no Spark job. The only normalization applied is
   * the `events.ts` nanosecond column: the parquet type is TIMESTAMP(NANOS)
   * which Spark reads as Long (see [[graft.GraftSession]]); we truncate to
   * microseconds, which is exactly what DuckDB does when it reads the same
@@ -19,7 +21,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ParquetSchema.read(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")

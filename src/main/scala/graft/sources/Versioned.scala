@@ -76,7 +76,7 @@ object Versioned {
                     batch: org.apache.spark.sql.DataFrame,
                     keys: Seq[String], coalesce1: Boolean = false): Unit = {
     val cur = current(spark, root)
-    val existing = cur.map(v => spark.read.parquet(s"$root/$v"))
+    val existing = cur.map(v => ParquetSchema.read(spark, s"$root/$v"))
       .getOrElse(batch.limit(0))
     val merged = graft.operators.Upsert.upsert(existing, batch, keys)
     val next = nextName(cur)

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import graft.GraftSession
+import graft.sources.ParquetSchema
 
 object ProbeQ258 {
   def main(args: Array[String]): Unit = {
@@ -17,7 +18,7 @@ object ProbeQ258 {
     (1 to 2).foreach { pass =>
       println(s"=== pass $pass")
       val root = java.nio.file.Files.createTempDirectory("q258probe").toString
-      val facts = s.read.parquet(s"$dir/orders.parquet")
+      val facts = ParquetSchema.read(s, s"$dir/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey").as("custkey"),
           round(col("o_totalprice") * 100).cast("long").as("price_cents"),
           pmod(col("o_custkey"), lit(4)).cast("string").as("w"))

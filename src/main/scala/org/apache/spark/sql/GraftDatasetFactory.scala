@@ -1,6 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.{DataSource, FileStatusCache, InMemoryFileIndex, PartitioningUtils}
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to the `private[sql]` classic Dataset factory so graft's
   * custom logical operators (e.g. [[graft.plans.GreedyPackPlan]]) can be
@@ -20,4 +24,30 @@ object GraftDatasetFactory {
     classic.ExpressionUtils.column(e)
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** The listing `spark.read.options(options).parquet(paths: _*)`
+    * builds before it infers a schema (`DataSource.resolveRelation`):
+    * the same glob and existence checks (`private[sql]`), then an
+    * `InMemoryFileIndex` over the result. The Hadoop configuration the
+    * checks used comes back with it, for the footer read. */
+  def parquetFileIndex(spark: SparkSession, paths: Seq[String],
+                       options: Map[String, String])
+      : (InMemoryFileIndex, Configuration) = {
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+    val globbed = DataSource.checkAndGlobPathIfNecessary(paths, hadoopConf,
+      checkEmptyGlobPath = true, checkFilesExist = true,
+      enableGlobbing = CaseInsensitiveMap(options)
+        .get(DataSource.GLOB_PATHS_KEY).forall(_ == "true"))
+    (new InMemoryFileIndex(spark, globbed, options, None,
+      FileStatusCache.getOrCreate(spark)), hadoopConf)
+  }
+
+  /** The schema a file relation reports for an inferred `dataSchema`:
+    * every field nullable (`asNullable` is `private[spark]`), then the
+    * partition columns, a data column of the same name taking the
+    * partition type in place. */
+  def fileRelationSchema(spark: SparkSession, dataSchema: StructType,
+                         partitionSchema: StructType): StructType =
+    PartitioningUtils.mergeDataAndPartitionSchema(dataSchema.asNullable,
+      partitionSchema, spark.sessionState.conf.caseSensitiveAnalysis)._1
 }
