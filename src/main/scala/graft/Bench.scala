@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 import graft.sources.ParquetSchema
 
@@ -244,16 +243,7 @@ object Bench {
 
     // The suite JVM's Spark session is created only AFTER the ga_scale
     // child finished: the fork order is the round-12 fix (see above).
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", Some(cpus.toInt)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup (no benchmark data touched — a throwaway
     // synthetic parquet under /tmp): without it the alphabetically-first

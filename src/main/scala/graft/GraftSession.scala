@@ -15,6 +15,9 @@ import org.apache.spark.sql.SparkSession
   *    in [[graft.sources.Tables]] (truncation to micros matches DuckDB).
   *  - UTC session timezone for oracle parity (reference uses Europe/Berlin
   *    for its GA job — jobs that need it set it explicitly; see SURVEY §4).
+  *  - `file:` is [[graft.sources.GraftLocalFileSystem]]: permissions are
+  *    set in-process, not by forking `chmod` per file and directory
+  *    written. A caller's own `spark.hadoop.fs.file.impl` still wins.
   */
 object GraftSession {
   def builder(
@@ -40,14 +43,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.ui.enabled", "false")
-  }
-
-  /** Apply the graft defaults that can be set post-creation to an existing
-    * session (used by Verify/Bench which own their builder). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
   }
 
   def local(): SparkSession = {

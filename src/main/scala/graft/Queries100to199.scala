@@ -669,10 +669,10 @@ private[graft] object Queries100to199 {
       val base = s"$dir/lineitem.parquet"
       val qtyL = round(col("l_quantity")).cast("long")
       val pc = round(col("l_extendedprice") * 100).cast("long")
-      // deterministic per-base temp location: bench/verify re-runs
-      // overwrite in place instead of littering tmp with one dir per pass
-      val sumDir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_summary_" + Integer.toHexString(base.hashCode)).toString
+      // per-application, per-base location: bench/verify re-runs
+      // overwrite in place; a second JVM on the same sf dir gets its own
+      val sumDir = appScratch(s,
+        "summary_" + Integer.toHexString(base.hashCode))
       SummaryRewrite.materialize(s, base, sumDir,
         Seq("l_returnflag", "l_linestatus"),
         Seq(qtyL -> "s_qty", pc -> "s_price"))

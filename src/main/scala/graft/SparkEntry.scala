@@ -189,6 +189,20 @@ object SparkEntry {
         round(col("o_totalprice") * 100).cast("long").as("price_cents"),
         substring(col("o_orderpriority"), 1, 1).as("w"))
 
+  private val scratchRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** A scratch path private to this Spark application, under
+    * `java.io.tmpdir/graft-<applicationId>/`: re-runs inside one JVM
+    * overwrite in place, and two JVMs on the same sf dir never delete
+    * each other's files. The directory is removed at JVM exit. */
+  private[graft] def appScratch(s: SparkSession, name: String): String = {
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft-${s.sparkContext.applicationId}")
+    if (scratchRoots.add(root.getPath))
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root))
+    new java.io.File(root, name).toString
+  }
+
   /** Deterministic /tmp layout path for a lakehouse fixture. */
   private[graft] def lakeLayout(dir: String, prefix: String): String = {
     val tag = Integer.toHexString(s"$dir/orders.parquet".hashCode)

@@ -118,4 +118,24 @@ class SummaryRewriteSpec extends SparkTestBase {
     assert(!SummaryRewrite.readsOnlySummaries(aggQuery))
     assert(aggQuery.collect().nonEmpty)
   }
+
+  test("q177 materializes its summary under this application's own " +
+    "scratch directory; a re-run overwrites it in place") {
+    val own = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft-${spark.sparkContext.applicationId}")
+    def summaries = Option(own.listFiles()).toSeq.flatten.filter(_.getName.startsWith("summary_"))
+    def parts(d: java.io.File) = d.list().filter(_.endsWith(".parquet")).toSet
+    try {
+      val q177 = SparkEntry.queries("q177_summary_rewrite")
+      val rows = q177(spark, sf).collect().toSet
+      assert(rows.nonEmpty && rows.forall(_.getAs[Boolean]("gate_rewritten")))
+      assert(summaries.size == 1, s"summaries under $own: ${summaries.map(_.getName)}")
+      val first = parts(summaries.head)
+      assert(first.nonEmpty)
+      assert(q177(spark, sf).collect().toSet == rows)
+      assert(summaries.size == 1, "the re-run wrote no second summary directory")
+      assert(parts(summaries.head).intersect(first).isEmpty,
+        "the re-run replaced the summary's files")
+    } finally SummaryRewrite.clear()
+  }
 }
