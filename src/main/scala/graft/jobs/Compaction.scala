@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
-import graft.sources.ParquetSchema
+import graft.sources.{Manifest, ParquetSchema}
 
 /** Small-file compaction for a partitioned parquet tree — the
   * operational job every long-lived table needs (streaming sinks and
@@ -22,11 +22,11 @@ import graft.sources.ParquetSchema
   * to a subset, leaving the rest byte-untouched (CompactionSpec pins
   * that).
   *
-  * Value-identity discipline: partition-column TYPE INFERENCE is
-  * disabled for the rewrite read, so values round-trip as the exact
-  * directory strings (`hour=00` stays `00`, never re-inferred to int 0
-  * and rewritten as a NEW `hour=0` directory family alongside the old
-  * one — silent row duplication). Budgets join on the Hive-unescaped
+  * Value-identity discipline: the rewrite read declares the partition
+  * column STRING ([[ParquetSchema.readRaw]]), so values round-trip as
+  * the exact directory strings (`hour=00` stays `00`, never re-inferred
+  * to int 0 and rewritten as a NEW `hour=0` directory family alongside
+  * the old one — silent row duplication). Budgets join on the Hive-unescaped
   * value, and a loud require rejects any budget key the data does not
   * carry rather than silently defaulting.
   *
@@ -86,18 +86,8 @@ object Compaction {
     val counts = selected.map { case (value, (bytes, _)) =>
       value -> math.max(1L, (bytes + targetBytes - 1) / targetBytes)
     }
-    // The rewrite needs non-default SQL-conf semantics (no partition
-    // type inference, dynamic overwrite). SQL confs are per-SESSION
-    // state: running on a cloned session confines them to this job —
-    // concurrent queries on the caller's session keep their semantics,
-    // and two concurrent compact() calls cannot restore each other's
-    // values out of order (the clone is discarded, nothing to restore).
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled",
-      "false") // values round-trip as dir strings
-    sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    import sess.implicits._
-    val df = ParquetSchema.read(sess, path)
+    import spark.implicits._
+    val df = ParquetSchema.readRaw(spark, Seq(path), Seq(partCol))
       .filter(col(partCol).isin(counts.keys.toSeq: _*))
     // loud mismatch guard: every budget key must exist in the data
     val dataValues = df.select(partCol).distinct().as[String].collect().toSet
@@ -112,6 +102,7 @@ object Compaction {
       .repartition(col(partCol), col("_salt"))
       .drop("_n", "_salt")
       .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic") // this write only
       .partitionBy(partCol)
       .parquet(path)
   }
@@ -134,25 +125,18 @@ object Compaction {
                         targetBytes: Long = 128L * 1024 * 1024,
                         keepVersions: Int = 1,
                         afterStage: () => Unit = () => ()): Long = {
-    import graft.sources.Manifest
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled",
-      "false")
-    Manifest.bootstrap(sess, path)
-    val (v0, live) = Manifest.current(sess, path).get
+    Manifest.bootstrap(spark, path)
+    val (v0, live) = Manifest.current(spark, path).get
     if (live.isEmpty) return v0
-    val (fs, rootP) = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      (p.getFileSystem(sess.sessionState.newHadoopConf()), p)
-    }
+    val (fs, rootP) = Manifest.fsOf(spark, path)
     // log-served sizes: zero per-file status calls (round-13 #2)
-    val bytes = Manifest.fileSizes(sess, path, live).values.sum
+    val bytes = Manifest.fileSizes(spark, path, live).values.sum
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val dvs = Manifest.dvsAt(sess, path, v0)
+    val dvs = Manifest.dvsAt(spark, path, v0)
     if (live.size <= n && dvs.isEmpty) return v0 // already compact
-    val packed = Manifest.read(sess, path).repartition(n)
-    val created = Manifest.stageUniqueParts(sess, fs, rootP, Nil, packed)
+    val packed = Manifest.readSubset(spark, path, live, v0).repartition(n)
+    val created = Manifest.stageUniqueParts(spark, fs, rootP, Nil, packed)
     // seam between stage and publish (the commitPartitionReplacementCas
     // discipline): the spec injects the racing commit here to pin both
     // loser outcomes deterministically
@@ -162,8 +146,8 @@ object Compaction {
     // being rewritten aborts loudly (round-13 verdict #3). All of the
     // base's DV refs become inert (every base file is replaced) and
     // drop with the commit.
-    val v = Manifest.commitRewriteCas(sess, path, v0, live.toSet, created)
-    if (keepVersions > 0) Manifest.vacuum(sess, path, keepVersions)
+    val v = Manifest.commitRewriteCas(spark, path, v0, live.toSet, created)
+    if (keepVersions > 0) Manifest.vacuum(spark, path, keepVersions)
     v
   }
 
@@ -208,23 +192,16 @@ object Compaction {
                           keepVersions: Int = 1,
                           partitionPredicate: Option[String] = None,
                           afterStage: () => Unit = () => ()): Long = {
-    import graft.sources.Manifest
     require(partCols.nonEmpty, "use compactAtomicFlat for unpartitioned")
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled",
-      "false")
-    import sess.implicits._
-    Manifest.bootstrap(sess, path)
-    val (v0, live) = Manifest.current(sess, path).get
+    import spark.implicits._
+    Manifest.bootstrap(spark, path)
+    val (v0, live) = Manifest.current(spark, path).get
     if (live.isEmpty) return v0
-    val (fs, rootP) = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      (p.getFileSystem(sess.sessionState.newHadoopConf()), p)
-    }
+    val (fs, rootP) = Manifest.fsOf(spark, path)
     // per-leaf byte budget from the LIVE list (crash debris excluded),
     // sizes log-served (round-13 verdict #2)
-    val sizes = Manifest.fileSizes(sess, path, live)
+    val sizes = Manifest.fileSizes(spark, path, live)
     val byLeaf = live.groupBy(Manifest.leafDirOf(_, partCols))
     val budgets = byLeaf.map { case (leaf, fls) =>
       val bytes = fls.map(f => sizes.getOrElse(f, 0L)).sum
@@ -233,13 +210,13 @@ object Compaction {
     val inScope = partitionPredicate match {
       case None => byLeaf.keySet
       case Some(sql) =>
-        scopeLeaves(sess, path, v0, byLeaf.keys.toSeq, partCols, sql)
+        scopeLeaves(spark, path, v0, byLeaf.keys.toSeq, partCols, sql)
     }
     // live files a live DV references: their leaves carry merge-on-read
     // debt and qualify regardless of fragmentation
-    val dvs = Manifest.dvsAt(sess, path, v0)
+    val dvs = Manifest.dvsAt(spark, path, v0)
     val dvFiles = graft.sources.DeletionVectors
-      .filesWithDeletes(sess, path, dvs).filter(live.toSet)
+      .filesWithDeletes(spark, path, dvs).filter(live.toSet)
     val selected = byLeaf.filter { case (leaf, fls) =>
       inScope(leaf) && (fls.size > budgets(leaf) || fls.exists(dvFiles))
     }
@@ -248,7 +225,7 @@ object Compaction {
     // scan exactly the selected leaves' files (declared schema, column
     // mapping, DV filter — the Manifest.read semantics, pruned to the
     // selection)
-    val snapshot = Manifest.readSubset(sess, path, selFiles, v0)
+    val snapshot = Manifest.readSubset(spark, path, selFiles, v0)
     // leaf key = the escaped directory string, rebuilt per row — the
     // same normalization leafDirOf uses, so the budget join is exact
     val leafCol = concat_ws("/", partCols.map(c =>
@@ -261,7 +238,7 @@ object Compaction {
         pmod(hash(struct(snapshot.columns.map(col): _*)), col("_n")))
       .repartition(col("_leaf"), col("_salt"))
       .drop("_leaf", "_n", "_salt")
-    val created = Manifest.stageUniqueParts(sess, fs, rootP, partCols, salted)
+    val created = Manifest.stageUniqueParts(spark, fs, rootP, partCols, salted)
     // seam between stage and publish — the spec's race-injection point
     afterStage()
     // CAS publish coexisting with live writers (round-13 verdict #3):
@@ -269,8 +246,8 @@ object Compaction {
     // being rewritten abort loudly. Old DV refs survive only while a
     // carried file still needs one (an out-of-scope DV'd leaf); refs
     // to rewritten files are inert either way.
-    val v = Manifest.commitRewriteCas(sess, path, v0, selFiles.toSet, created)
-    if (keepVersions > 0) Manifest.vacuum(sess, path, keepVersions)
+    val v = Manifest.commitRewriteCas(spark, path, v0, selFiles.toSet, created)
+    if (keepVersions > 0) Manifest.vacuum(spark, path, keepVersions)
     v
   }
 
@@ -279,20 +256,19 @@ object Compaction {
     * value table (typed via the schema-in-log sidecar when present so
     * numeric predicates compare numerically, not lexically). Loud on
     * anything but a partition-column predicate. */
-  private def scopeLeaves(sess: SparkSession, path: String, v: Long,
+  private def scopeLeaves(spark: SparkSession, path: String, v: Long,
                           leaves: Seq[String], partCols: Seq[String],
                           whereSql: String): Set[String] = {
-    import graft.sources.Manifest
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val rows = leaves.map { l =>
       org.apache.spark.sql.Row.fromSeq(
         l +: Manifest.partitionValuesOf(l + "/f", partCols))
     }
-    val raw = sess.createDataFrame(
-      sess.sparkContext.parallelize(rows, 1),
+    val raw = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1),
       StructType(StructField("__leaf", StringType) +:
         partCols.map(StructField(_, StringType))))
-    val schema = Manifest.schemaAt(sess, path, v)
+    val schema = Manifest.schemaAt(spark, path, v)
     val typed = partCols.foldLeft(raw) { (df, c) =>
       schema.flatMap(_.fields.find(_.name == c)) match {
         case Some(f) => df.withColumn(c, col(c).cast(f.dataType))
@@ -367,17 +343,10 @@ object Compaction {
     require(partitionPredicate.isEmpty || partCols.nonEmpty,
       "a partition-scoped ZORDER needs a partitioned table")
     import graft.operators.ZOrder
-    import graft.sources.Manifest
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled",
-      "false")
-    Manifest.bootstrap(sess, path)
-    val (v0, live) = Manifest.current(sess, path).get
+    Manifest.bootstrap(spark, path)
+    val (v0, live) = Manifest.current(spark, path).get
     if (live.isEmpty) return v0
-    val (fs, rootP) = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      (p.getFileSystem(sess.sessionState.newHadoopConf()), p)
-    }
+    val (fs, rootP) = Manifest.fsOf(spark, path)
     // `OPTIMIZE … WHERE … ZORDER BY` (the Delta composition): cluster
     // ONLY the leaves whose partition values satisfy the predicate —
     // every in-scope leaf is rewritten (clustering is a layout choice,
@@ -389,33 +358,32 @@ object Compaction {
       case None => live
       case Some(sql) =>
         val byLeaf = live.groupBy(Manifest.leafDirOf(_, partCols))
-        val inScope = scopeLeaves(sess, path, v0, byLeaf.keys.toSeq,
+        val inScope = scopeLeaves(spark, path, v0, byLeaf.keys.toSeq,
           partCols, sql)
         byLeaf.filter(kv => inScope(kv._1)).values.flatten.toSeq.sorted
     }
     if (selFiles.isEmpty) return v0 // nothing in scope
-    val snapshot = // DV-filtered: in-scope deletes materialize here
-      if (partitionPredicate.isEmpty) Manifest.read(sess, path)
-      else Manifest.readSubset(sess, path, selFiles, v0)
+    // DV-filtered: in-scope deletes materialize here
+    val snapshot = Manifest.readSubset(spark, path, selFiles, v0)
     val clustered =
       ZOrder.layoutByN(snapshot, zCols.map(col), zBits, numFiles)
-    val created = Manifest.stageUniqueParts(sess, fs, rootP, partCols, clustered)
+    val created = Manifest.stageUniqueParts(spark, fs, rootP, partCols, clustered)
     // replacement of exactly the selected files; pending DVs on them
     // are materialized by the rewrite, out-of-scope DVs stay live.
     // CAS publish: interleaved appends rebase into the clustered
     // manifest (unclustered but live — correctness first); removals
     // of / new DVs on the files being rewritten abort loudly.
-    val v = Manifest.commitRewriteCas(sess, path, v0, selFiles.toSet, created)
+    val v = Manifest.commitRewriteCas(spark, path, v0, selFiles.toSet, created)
     val cols = if (statsCols.nonEmpty) statsCols else zCols
-    Manifest.writeStats(sess, path, v)
-    Manifest.writeColStats(sess, path, v, cols)
+    Manifest.writeStats(spark, path, v)
+    Manifest.writeColStats(spark, path, v, cols)
     // derived-artifact refresh is part of the OPTIMIZE, not a separate
     // chore someone forgets: the clustered files replace every indexed
     // one, so without this the bloom index prunes nothing until the
     // next manual refresh
     (bloomColumn, bloomIndexPath) match {
       case (Some(c), Some(idx)) =>
-        graft.sources.BloomFileIndex.refresh(sess, path, c, idx): Unit
+        graft.sources.BloomFileIndex.refresh(spark, path, c, idx): Unit
       case _ => ()
     }
     v

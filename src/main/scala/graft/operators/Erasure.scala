@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.ParquetSchema
+import graft.sources.{Manifest, ManifestGroup, ParquetSchema}
 
 /** Keyed erasure — the right-to-be-forgotten DELETE a serving store
   * must honor (GDPR art. 17 / CCPA): every row belonging to a set of
@@ -59,10 +59,11 @@ object Erasure {
     *      the audit trail proves every request was processed — appends
     *      with `batch_id` and the touched-partition count.
     *
-    * Like [[Upsert.upsertPartitionScoped]] this runs on a cloned
-    * session (inference off, dynamic overwrite scoped to this call)
-    * and stages output before the partition swap; the Compaction
-    * caveat about mid-commit crashes applies. */
+    * Like [[Upsert.upsertPartitionScoped]] this runs in the caller's
+    * session (raw-string partition scans, dynamic overwrite as an
+    * option of the rewrite alone) and stages output before the
+    * partition swap; the Compaction caveat about mid-commit crashes
+    * applies. */
   def erasePartitionScoped(spark: SparkSession, targetPath: String,
                            partCol: String, subjects: DataFrame,
                            keys: Seq[String], batchId: String,
@@ -70,19 +71,17 @@ object Erasure {
     require(keys.nonEmpty, "erase needs at least one key column")
     require(!keys.contains(partCol),
       s"$partCol partitions the tree; key on the subject id columns")
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val root = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = root.getFileSystem(sess.sessionState.newHadoopConf())
+    val (fs, root) = Manifest.fsOf(spark, targetPath)
     require(fs.exists(root), s"erasure target $targetPath does not exist")
-    // re-root on the clone + single evaluation (the Upsert discipline)
-    val subj = sess.createDataFrame(subjects.rdd, subjects.schema)
-      .select(keys.map(col): _*).distinct().persist()
+    // single evaluation of the subject keys
+    val subj = subjects.select(keys.map(col): _*).distinct().persist()
     try {
+      // partCol reads as the raw directory string, so the rewrite below
+      // writes back to the identical directory names
+      val target = ParquetSchema.readRaw(spark, Seq(targetPath), Seq(partCol))
       // 1. narrow matched projection: keys + partition, persisted —
       // feeds the touched list AND the ledger counts
-      val matched = ParquetSchema.read(sess, targetPath)
+      val matched = target
         .select((keys :+ partCol).map(col): _*)
         .join(broadcast(subj), keys, "left_semi")
         .persist()
@@ -115,7 +114,7 @@ object Erasure {
           .groupBy(col(partCol).cast("string").as("_p"))
           .agg(count(lit(1)).as("_m"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val totalPerPart = ParquetSchema.read(sess, targetPath)
+        val totalPerPart = target
           .filter(col(partCol).cast("string").isin(touched: _*))
           .groupBy(col(partCol).cast("string").as("_p"))
           .agg(count(lit(1)).as("_n"))
@@ -123,12 +122,11 @@ object Erasure {
         val fullyErased = touched.filter(p =>
           matchedPerPart.getOrElse(p, 0L) == totalPerPart(p))
         // 2. rewrite affected partitions without the subjects' rows.
-        // Inference is off, so partCol reads as the raw directory string
-        // and writes back to the identical directory names.
-        val affected = ParquetSchema.read(sess, targetPath)
+        val affected = target
           .filter(col(partCol).cast("string").isin(touched: _*))
         val surviving = affected.join(broadcast(subj), keys, "left_anti")
         surviving.write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic") // this write only
           .partitionBy(partCol).parquet(targetPath)
         // 3. the write commits first, the directory deletes follow — a
         // crash between them leaves extra-but-consistent data.
@@ -170,28 +168,23 @@ object Erasure {
                                  keys: Seq[String], batchId: String,
                                  ledgerPath: Option[String] = None,
                                  keepVersions: Int = 1): Unit = {
-    import graft.sources.Manifest
     require(keys.nonEmpty, "erase needs at least one key column")
     require(partCols.nonEmpty,
       "use deleteMatching (merge-on-read) for unpartitioned trees")
     partCols.foreach(pc => require(!keys.contains(pc),
       s"$pc partitions the tree; key on the subject id columns"))
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    val root = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = root.getFileSystem(sess.sessionState.newHadoopConf())
+    val (fs, root) = Manifest.fsOf(spark, targetPath)
     require(fs.exists(root), s"erasure target $targetPath does not exist")
-    Manifest.bootstrap(sess, targetPath) // adopt a plain tree idempotently
-    val subj = sess.createDataFrame(subjects.rdd, subjects.schema)
-      .select(keys.map(col): _*).distinct().persist()
+    Manifest.bootstrap(spark, targetPath) // adopt a plain tree idempotently
+    val subj = subjects.select(keys.map(col): _*).distinct().persist()
     try {
-      val (base, live) = Manifest.current(sess, targetPath).get
-      val (touched, created, ledger) = stageErasure(sess, targetPath,
+      val (base, live) = Manifest.current(spark, targetPath).get
+      val (touched, created, ledger) = stageErasure(spark, targetPath,
         partCols, base, live, subj, keys, Seq(lit(batchId).as("batch_id")))
       if (touched.nonEmpty) {
-        Manifest.commitLeafReplacementCas(sess, targetPath, partCols, base,
+        Manifest.commitLeafReplacementCas(spark, targetPath, partCols, base,
           touched, created)
-        Manifest.vacuum(sess, targetPath, keepVersions)
+        Manifest.vacuum(spark, targetPath, keepVersions)
       }
       ledgerPath.foreach(lp =>
         ledger.write.mode(SaveMode.Append).parquet(lp))
@@ -215,13 +208,12 @@ object Erasure {
     *      leaf stages no file.
     *
     * Returns (touched leaf dirs, staged files, ledger). */
-  private def stageErasure(sess: SparkSession, root: String,
+  private def stageErasure(spark: SparkSession, root: String,
                            partCols: Seq[String], base: Long,
                            live: Seq[String], subj: DataFrame,
                            keys: Seq[String], extra: Seq[Column])
       : (Set[String], Seq[String], DataFrame) = {
-    import graft.sources.Manifest
-    val matched = Manifest.readSubset(sess, root, live, base)
+    val matched = Manifest.readSubset(spark, root, live, base)
       .select((keys ++ partCols).map(col): _*)
       .join(broadcast(subj), keys, "left_semi")
       .persist()
@@ -240,11 +232,10 @@ object Erasure {
       val created =
         if (touched.isEmpty) Nil
         else {
-          val rootP = new org.apache.hadoop.fs.Path(root)
-          val fs = rootP.getFileSystem(sess.sessionState.newHadoopConf())
-          val affected = Manifest.readSubset(sess, root,
+          val (fs, rootP) = Manifest.fsOf(spark, root)
+          val affected = Manifest.readSubset(spark, root,
             live.filter(f => touched(Manifest.leafDirOf(f, partCols))), base)
-          Manifest.stageUniqueParts(sess, fs, rootP, partCols,
+          Manifest.stageUniqueParts(spark, fs, rootP, partCols,
             affected.join(broadcast(subj), keys, "left_anti"))
         }
       (touched, created, ledger)
@@ -281,14 +272,10 @@ object Erasure {
                        batchId: String,
                        ledgerPath: Option[String] = None)
       : (Long, Map[String, Long]) = {
-    import graft.sources.{Manifest, ManifestGroup}
     require(keys.nonEmpty, "erase needs at least one key column")
     members.foreach { case (root, pc) => require(!keys.contains(pc),
       s"$pc partitions $root; key on the subject id columns") }
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    val subj = sess.createDataFrame(subjects.rdd, subjects.schema)
-      .select(keys.map(col): _*).distinct().persist()
+    val subj = subjects.select(keys.map(col): _*).distinct().persist()
     try {
       // members stage independently (separate roots, nothing shared
       // until the group publish) — overlap their Spark jobs so the next
@@ -296,8 +283,8 @@ object Erasure {
       // is preserved, so ledger writes and the flip map are identical
       // to the sequential form
       val staged = graft.Par.ordered(members) { case (root, partCol) =>
-        Manifest.bootstrap(sess, root)
-        val (base, live) = Manifest.current(sess, root).get
+        Manifest.bootstrap(spark, root)
+        val (base, live) = Manifest.current(spark, root).get
         if (live.isEmpty) {
           // an empty member holds nobody's data; ledger still proves
           // every request was processed against it
@@ -308,7 +295,7 @@ object Erasure {
             .coalesce(1).localCheckpoint(true)
           (root, None, ledger)
         } else {
-          val (touched, created, ledger) = stageErasure(sess, root,
+          val (touched, created, ledger) = stageErasure(spark, root,
             Seq(partCol), base, live, subj, keys,
             Seq(lit(root).as("member"), lit(batchId).as("batch_id")))
           val commit =
@@ -361,7 +348,6 @@ object Erasure {
                    keys: Seq[String], batchId: String,
                    ledgerPath: Option[String] = None)
       : (Long, Map[String, Long]) = {
-    import graft.sources.{Manifest, ManifestGroup}
     require(keys.nonEmpty, "erase needs at least one key column")
     val subj = subjects.select(keys.map(col): _*).distinct().persist()
     try {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.ParquetSchema
+import graft.sources.{Manifest, ParquetSchema}
 
 /** Keyed MERGE/upsert — the Delta-style `WHEN MATCHED THEN UPDATE ALL /
   * WHEN NOT MATCHED THEN INSERT ALL` semantics (SURVEY §2.8's proper fix
@@ -70,8 +70,9 @@ object Upsert {
     * row carries the SAME partition value as the target row it updates
     * — otherwise the stale twin in the unscanned partition survives.
     *
-    * Runs on a cloned session (the Compaction discipline): dynamic
-    * overwrite + inference-off stay scoped to this merge. In-place
+    * Runs in the caller's session (the Compaction discipline): the
+    * scan declares `partCol` a string ([[ParquetSchema.readRaw]]) and
+    * dynamic overwrite is an option of this write alone. In-place
     * read/rewrite is safe because dynamic overwrite stages output and
     * swaps partitions at COMMIT, after all source reads — the
     * Compaction caveat about mid-commit crashes applies identically. */
@@ -80,21 +81,16 @@ object Upsert {
                             source: DataFrame, keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "upsert needs at least one key column")
     require(!keys.contains(partCol), s"$partCol partitions the tree; key on the id columns")
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val root = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = root.getFileSystem(sess.sessionState.newHadoopConf())
-    // re-root the source on the clone (RDDs are context-, not session-,
-    // scoped) so the overwrite semantics above govern its write — no
-    // driver materialization involved
-    // Persist the re-rooted source: it is consumed up to three times
+    val (fs, root) = Manifest.fsOf(spark, targetPath)
+    // Persist a re-rooted copy of the source (a plan of its own, so the
+    // caller's cache of `source` is never unpersisted here, and no
+    // driver materialization): it is consumed up to three times
     // (isEmpty/bootstrap write, touched-partition collect, merge write).
     // Without the pin an expensive source triples its compute, and a
     // NON-DETERMINISTIC one could yield a touched-partition list that
     // diverges from the rows actually written — leaving stale twins in
     // partitions the scan never visited. One evaluation ends both risks.
-    val src = sess.createDataFrame(source.rdd, source.schema).persist()
+    val src = spark.createDataFrame(source.rdd, source.schema).persist()
     try {
       if (!fs.exists(root)) {
         // bootstrap: the whole source is new partitions. An EMPTY first
@@ -111,16 +107,17 @@ object Upsert {
       require(!touched.contains(null),
         s"source rows with NULL $partCol cannot be partition-scoped " +
           "(they would land in the Hive default partition outside the scan scope)")
-      // inference is off, so the pruned read carries partCol as the raw
-      // directory string; cast it back to the SOURCE's type — the source
-      // typed the tree at bootstrap, so this round-trips value-identically
+      // the raw scan carries partCol as the directory string; cast it
+      // back to the SOURCE's type — the source typed the tree at
+      // bootstrap, so this round-trips value-identically
       // (and a string-typed source keeps `hour=00` verbatim, the
       // Compaction value-identity lesson)
-      val affected = ParquetSchema.read(sess, targetPath)
+      val affected = ParquetSchema.readRaw(spark, Seq(targetPath), Seq(partCol))
         .filter(col(partCol).cast("string").isin(touched: _*))
         .withColumn(partCol, col(partCol).cast(source.schema(partCol).dataType))
       upsert(affected, src, keys)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic") // this write only
         .partitionBy(partCol)
         .parquet(targetPath)
     } finally src.unpersist()
@@ -147,41 +144,37 @@ object Upsert {
                                   targetPath: String, partCols: Seq[String],
                                   source: DataFrame, keys: Seq[String],
                                   keepVersions: Int = 1): Unit = {
-    import graft.sources.Manifest
     require(keys.nonEmpty, "upsert needs at least one key column")
     require(partCols.nonEmpty, "use upsert()/mergeDv for unpartitioned")
     partCols.foreach(pc => require(!keys.contains(pc),
       s"$pc partitions the tree; key on the id columns"))
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    val root = new org.apache.hadoop.fs.Path(targetPath)
-    val fs = root.getFileSystem(sess.sessionState.newHadoopConf())
-    val src = sess.createDataFrame(source.rdd, source.schema).persist()
+    val (fs, root) = Manifest.fsOf(spark, targetPath)
+    val src = spark.createDataFrame(source.rdd, source.schema).persist()
     try {
       if (!fs.exists(root)) {
         // bootstrap: a brand-new table, the whole source = new leaves
         if (!src.isEmpty) {
           src.write.partitionBy(partCols: _*).parquet(targetPath)
-          Manifest.bootstrap(sess, targetPath)
+          Manifest.bootstrap(spark, targetPath)
         }
         return
       }
-      Manifest.bootstrap(sess, targetPath) // adopt a plain tree idempotently
+      Manifest.bootstrap(spark, targetPath) // adopt a plain tree idempotently
       val touched = PartitionScope.touchedLeaves(src, partCols)
       if (touched.isEmpty) return
-      val (base, live) = Manifest.current(sess, targetPath).get
+      val (base, live) = Manifest.current(spark, targetPath).get
       val inLeaves = live.filter(f => touched(Manifest.leafDirOf(f, partCols)))
       val merged =
         if (inLeaves.isEmpty) src // only new leaves: pure insert
         else {
-          val affected = Manifest.readSubset(sess, targetPath, inLeaves, base)
+          val affected = Manifest.readSubset(spark, targetPath, inLeaves, base)
           upsert(affected.select(affected.columns.map(c =>
             col(c).cast(source.schema(c).dataType).as(c)): _*), src, keys)
         }
-      val created = Manifest.stageUniqueParts(sess, fs, root, partCols, merged)
-      Manifest.commitLeafReplacementCas(sess, targetPath, partCols, base,
+      val created = Manifest.stageUniqueParts(spark, fs, root, partCols, merged)
+      Manifest.commitLeafReplacementCas(spark, targetPath, partCols, base,
         touched, created)
-      Manifest.vacuum(sess, targetPath, keepVersions)
+      Manifest.vacuum(spark, targetPath, keepVersions)
     } finally src.unpersist()
   }
 }

@@ -34,7 +34,8 @@ import graft.sources.ParquetSchema
   *    must match the registration exactly — SUM reassociates, which is
   *    only sound for the exact-arithmetic integer/decimal measures
   *    this engine aggregates with anyway) or `count(<literal>)`
-  *    (rewritten to `sum(cnt)`), undistincted and unfiltered;
+  *    (rewritten to `sum(cnt)`), undistincted and unfiltered, or a
+  *    constant (kept as it is);
   *  - the aggregate is GROUPED: a global `count(*)` over an empty base
   *    returns 0 while `sum(cnt)` over an empty summary returns NULL,
   *    so global aggregates are left alone.
@@ -217,6 +218,9 @@ object SummaryRewrite extends Rule[LogicalPlan] {
           case _ => return None
         }
         Alias(merged, name)(exprId = al.exprId)
+      // a constant (folded into the output list, e.g. q177's gate
+      // column) reads no row: it rides along unchanged
+      case al: Alias if al.child.foldable => al
       case _ => return None
     }
     val newGroupings = groupNames.map(dimAttr)

@@ -61,7 +61,7 @@ object Manifest {
 
   private val DvPrefix = "#dv\t"
 
-  private[sources] def fsOf(spark: SparkSession, root: String): (FileSystem, Path) = {
+  private[graft] def fsOf(spark: SparkSession, root: String): (FileSystem, Path) = {
     val p = new Path(root)
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
@@ -387,9 +387,9 @@ object Manifest {
 
   /** Snapshot read: exactly the current manifest's files, with
     * partition columns still parsed from the directory names
-    * (`basePath`). Partition-column type inference stays ON here (the
-    * default read semantics); writers that need raw-string identity run
-    * on their own cloned sessions as before. */
+    * (`basePath`). Partition-column type inference follows the session
+    * here (the default read semantics); writers read through
+    * [[readSubset]], which keeps the raw strings. */
   def read(spark: SparkSession, root: String): DataFrame = {
     val (v, files) = current(spark, root).getOrElse(throw new IllegalArgumentException(
       s"no committed manifest under $root — bootstrap() it first"))
@@ -412,8 +412,8 @@ object Manifest {
 
   private def readFiles(spark: SparkSession, root: String,
                         files: Seq[String], dvs: Seq[String],
-                        schema: Option[org.apache.spark.sql.types.StructType]
-                          = None): DataFrame = {
+                        schema: Option[org.apache.spark.sql.types.StructType],
+                        raw: Boolean = false): DataFrame = {
     val (_, rootP) = fsOf(spark, root)
     require(files.nonEmpty,
       s"manifest snapshot of $root is empty — the table was fully erased")
@@ -424,7 +424,7 @@ object Manifest {
     // its prior physical names (old files serve theirs, new files the
     // logical one — the absent twin null-fills), and the projection
     // coalesces the family back to the one logical column.
-    val base = scanOf(spark, rootP, files, schema.map(expandPhysical))
+    val base = scanOf(spark, rootP, files, schema.map(expandPhysical), raw)
     val dvd = DeletionVectors.dropDeleted(spark, root, base, dvs)
     schema.filter(hasColumnMapping).fold(dvd)(logicalProjection(dvd, _))
   }
@@ -432,26 +432,33 @@ object Manifest {
   /** Parquet scan of root-relative `files` under `basePath` = the
     * root: with `schema` declared when there is one, else with the
     * schema one footer gives on the driver ([[ParquetSchema]]) — either
-    * way building the frame starts no Spark job. */
+    * way building the frame starts no Spark job. `raw` is the writers'
+    * scan ([[ParquetSchema.readRaw]]): the partition columns the
+    * files' directories name read as the raw strings in any session,
+    * so a rewrite stages each row back under its exact directory. */
   private[graft] def scanOf(spark: SparkSession, rootP: Path,
                             files: Seq[String],
-                            schema: Option[org.apache.spark.sql.types.StructType])
-      : DataFrame = {
+                            schema: Option[org.apache.spark.sql.types.StructType],
+                            raw: Boolean = false): DataFrame = {
     val paths = files.map(f => new Path(rootP, f).toString)
     val opts = Map("basePath" -> rootP.toString)
-    schema.fold(ParquetSchema.read(spark, paths, opts))(
+    if (raw) ParquetSchema.readRaw(spark, paths, files.headOption.toSeq
+      .flatMap(_.split('/').init.filter(_.contains('=')).map(seg =>
+        ExternalCatalogUtils.unescapePathName(seg.takeWhile(_ != '=')))),
+      opts, schema)
+    else schema.fold(ParquetSchema.read(spark, paths, opts))(
       spark.read.options(opts).schema(_).parquet(paths: _*))
   }
 
-  /** Snapshot-semantics read of an explicit FILE SUBSET at version `v`:
-    * declared schema, column mapping, DV filter — the full
-    * [[read]]/[[readVersion]] contract, pruned to `files` (the
+  /** Snapshot-semantics read of an explicit FILE SUBSET at version `v`
+    * for a writer: declared schema, column mapping, DV filter — the
+    * full [[read]]/[[readVersion]] contract, pruned to `files` (the
     * incremental-compaction scan shape: only the selected leaves'
-    * files are opened). */
+    * files are opened), partition columns as the raw strings. */
   def readSubset(spark: SparkSession, root: String, files: Seq[String],
                  v: Long): DataFrame =
     readFiles(spark, root, files, dvsAt(spark, root, v),
-      schemaAt(spark, root, v))
+      schemaAt(spark, root, v), raw = true)
 
   /** StructField metadata key listing a renamed column's PRIOR physical
     * names, oldest first — the schema-in-log column-mapping record
@@ -522,24 +529,24 @@ object Manifest {
     deleteRows(spark, root, _.where(cond), maxAttempts, afterPlan)
 
   /** The DML matching scan: the LIVE rows of version `v` (its deletion
-    * vectors applied) as inference-off parquet over `files`, with the
-    * raw (path, pos) bookkeeping columns materialized — and, when the
+    * vectors applied) as a raw [[scanOf]] over `files`, with the raw
+    * (path, pos) bookkeeping columns materialized — and, when the
     * version's effective schema declares a COLUMN MAPPING (a rename),
     * the physical twins expanded and collapsed back to logical names,
     * so predicates and assignments written against the current schema
-    * match rows in pre-rename files. Unmapped tables keep the exact
-    * inference-off raw read (the value-identity discipline).
+    * match rows in pre-rename files. Partition values stay the raw
+    * directory strings (the value-identity discipline).
     * Already-deleted rows never re-match, so DV artifacts never hold
     * duplicate (file, pos) pairs. */
-  private def dmlScan(sess: SparkSession, root: String, rootP: Path,
+  private def dmlScan(spark: SparkSession, root: String, rootP: Path,
                       files: Seq[String], v: Long): DataFrame = {
-    val mapped = schemaAt(sess, root, v).filter(hasColumnMapping)
-    val scan = scanOf(sess, rootP, files, mapped.map(expandPhysical))
+    val mapped = schemaAt(spark, root, v).filter(hasColumnMapping)
+    val scan = scanOf(spark, rootP, files, mapped.map(expandPhysical), raw = true)
       .withColumn("__graft_path", col("_metadata.file_path"))
       .withColumn("__graft_pos", col("_metadata.row_index"))
-    val dvs = dvsAt(sess, root, v)
+    val dvs = dvsAt(spark, root, v)
     val live = if (dvs.isEmpty) scan else scan.where(DeletionVectors
-      .rowFilter(sess, root, dvs, deleted = false,
+      .rowFilter(spark, root, dvs, deleted = false,
         col("__graft_path"), col("__graft_pos")))
     mapped.fold(live)(m =>
       logicalProjection(live, m, keep = Seq("__graft_path", "__graft_pos")))
@@ -582,14 +589,6 @@ object Manifest {
                          maxAttempts: Int,
                          afterPlan: () => Unit): (Long, Long) = {
     val (fs, rootP) = fsOf(spark, root)
-    // VALUE-IDENTITY (the Compaction discipline): the operator scan
-    // reads partition values as the raw directory strings — inference
-    // would turn `m=09` into int 9, and a downstream staged rewrite
-    // would then create a NEW `m=9` directory family beside the old
-    // one (silent corruption). Scoped to a cloned session.
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled",
-      "false")
     var attempt = 0
     while (attempt < maxAttempts) {
       val (v, files) = current(spark, root).getOrElse(
@@ -600,8 +599,8 @@ object Manifest {
       // (path, pos) materialize as REAL columns before the matcher runs:
       // `_metadata` is a scan-level pseudo-column that does not survive
       // a matcher's own joins/projects (e.g. deleteMatching's semi-join)
-      val (dvName, n) = writeDv(sess, root, fs, rootP,
-        matcher(dmlScan(sess, root, rootP, files, v))).getOrElse(
+      val (dvName, n) = writeDv(spark, root, fs, rootP,
+        matcher(dmlScan(spark, root, rootP, files, v))).getOrElse(
         return (v, 0L))
       afterPlan()
       tryCommit(spark, root, files, v, Some(dvs :+ dvName)) match {
@@ -639,11 +638,6 @@ object Manifest {
                   validate: DataFrame => Unit = _ => ()): (Long, Long) = {
     require(set.nonEmpty, "updateWhere needs at least one assignment")
     val (fs, rootP) = fsOf(spark, root)
-    // value-identity: inference-off scan (see deleteRows) — the staged
-    // rewrite must put rows back under their EXACT directory strings
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled",
-      "false")
     var attempt = 0
     while (attempt < maxAttempts) {
       val (v, files) = current(spark, root).getOrElse(
@@ -651,15 +645,15 @@ object Manifest {
           s"no committed manifest under $root — bootstrap() it first"))
       if (files.isEmpty) return (v, 0L) // empty table: nothing to update
       val dvs = dvsAt(spark, root, v)
-      val live = dmlScan(sess, root, rootP, files, v)
+      val live = dmlScan(spark, root, rootP, files, v)
       set.keys.foreach { c => require(
-        live.columns.exists(sess.sessionState.analyzer.resolver(_, c)),
+        live.columns.exists(spark.sessionState.analyzer.resolver(_, c)),
         s"assignment targets unknown column $c") }
       // matched rows once: both the DV (old positions) and the staged
       // rewrite (new values) derive from this frame
       val matched = live.where(cond)
         .localCheckpoint(true) // sever lineage: evaluate the match ONCE
-      val (dvName, n) = writeDv(sess, root, fs, rootP, matched)
+      val (dvName, n) = writeDv(spark, root, fs, rootP, matched)
         .getOrElse(return (v, 0L))
       val dvPath = new Path(rootP, dvName)
       val updated = set.foldLeft(
@@ -672,7 +666,7 @@ object Manifest {
       try validate(updated) catch { case e: Throwable =>
         fs.delete(dvPath, true); throw e
       }
-      val created = stageUniqueParts(sess, fs, rootP, partCols, updated)
+      val created = stageUniqueParts(spark, fs, rootP, partCols, updated)
       tryCommit(spark, root, files ++ created, v, Some(dvs :+ dvName)) match {
         case Some(nv) => return (nv, n)
         case None => // lost the slot: discard artifacts, re-plan
@@ -702,10 +696,6 @@ object Manifest {
               preMaterialized: Boolean = false): (Long, Long, Long) = {
     require(keys.nonEmpty, "mergeDv needs at least one key column")
     val (fs, rootP) = fsOf(spark, root)
-    // value-identity: inference-off scan (see deleteRows)
-    val sess = spark.newSession()
-    sess.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled",
-      "false")
     bootstrap(spark, root) // adopt a fresh/plain root (no-op otherwise)
     // one evaluation for all attempts; preMaterialized = the caller
     // already checkpointed (and possibly validated) exactly this frame
@@ -720,7 +710,7 @@ object Manifest {
       val dvs = dvsAt(spark, root, v)
       val dv =
         if (files.isEmpty) None // pure insert into an empty table
-        else writeDv(sess, root, fs, rootP, dmlScan(sess, root, rootP, files, v)
+        else writeDv(spark, root, fs, rootP, dmlScan(spark, root, rootP, files, v)
           .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi"))
       val created = stageUniqueParts(spark, fs, rootP, partCols, src)
       tryCommit(spark, root, files ++ created, v,
@@ -749,10 +739,13 @@ object Manifest {
     if (files.isEmpty) 0L
     else if (files.length <= 64) {
       val conf = spark.sessionState.newHadoopConf()
+      // read options over the session's conf: a bare open(InputFile)
+      // builds a fresh Configuration, re-parsing the XML defaults
+      val opts = org.apache.parquet.HadoopReadOptions.builder(conf).build()
       files.map { f =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromPath(new Path(rootP, f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in, opts)
         try r.getRecordCount finally r.close()
       }.sum
     } else ParquetSchema.read(spark,
@@ -1202,8 +1195,9 @@ object Manifest {
         (Map.empty[(String, String), (String, String, String, String, String, String)],
           needed)
       else {
+        val conf = spark.sessionState.newHadoopConf()
         val res = needed.map(f =>
-          f -> footerColStats(spark, new Path(rootP, f), cols))
+          f -> footerColStats(conf, new Path(rootP, f), cols))
         (res.collect { case (f, Some(m)) =>
            m.map { case (c, t) => (f, c) -> t } }.flatten.toMap,
          res.collect { case (f, None) => f })
@@ -1288,8 +1282,8 @@ object Manifest {
     * double, INT96, decimal, absent/truncated statistics): the whole
     * file then falls back to the scan pass. Driver-side footer read,
     * zero record-level IO, zero Spark jobs. */
-  private def footerColStats(spark: SparkSession, file: Path,
-                             cols: Seq[String])
+  private def footerColStats(conf: org.apache.hadoop.conf.Configuration,
+                             file: Path, cols: Seq[String])
       : Option[Map[String, (String, String, String, String, String, String)]] = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.hadoop.ParquetFileReader
@@ -1300,8 +1294,8 @@ object Manifest {
     val esc = ExternalCatalogUtils.escapePathName _
     def unsupported(): Nothing = throw FooterUnsupported
     try {
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        file, spark.sessionState.newHadoopConf()))
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf).build())
       try {
         val footer = reader.getFooter
         val schema = footer.getFileMetaData.getSchema

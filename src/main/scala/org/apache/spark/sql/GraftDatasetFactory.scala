@@ -3,7 +3,8 @@ package org.apache.spark.sql
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
-import org.apache.spark.sql.execution.datasources.{DataSource, FileStatusCache, InMemoryFileIndex, PartitioningUtils}
+import org.apache.spark.sql.execution.datasources.{DataSource, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
 /** Bridge to the `private[sql]` classic Dataset factory so graft's
@@ -29,25 +30,31 @@ object GraftDatasetFactory {
     * builds before it infers a schema (`DataSource.resolveRelation`):
     * the same glob and existence checks (`private[sql]`), then an
     * `InMemoryFileIndex` over the result. The Hadoop configuration the
-    * checks used comes back with it, for the footer read. */
+    * checks used comes back with it, for the footer read.
+    * `partitionTypes` declares partition column types the way a
+    * `.schema(…)` read does: a declared column is cast from its raw
+    * directory value, never inferred. */
   def parquetFileIndex(spark: SparkSession, paths: Seq[String],
-                       options: Map[String, String])
+                       options: Map[String, String],
+                       partitionTypes: Option[StructType])
       : (InMemoryFileIndex, Configuration) = {
     val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
     val globbed = DataSource.checkAndGlobPathIfNecessary(paths, hadoopConf,
       checkEmptyGlobPath = true, checkFilesExist = true,
       enableGlobbing = CaseInsensitiveMap(options)
         .get(DataSource.GLOB_PATHS_KEY).forall(_ == "true"))
-    (new InMemoryFileIndex(spark, globbed, options, None,
+    (new InMemoryFileIndex(spark, globbed, options, partitionTypes,
       FileStatusCache.getOrCreate(spark)), hadoopConf)
   }
 
-  /** The schema a file relation reports for an inferred `dataSchema`:
-    * every field nullable (`asNullable` is `private[spark]`), then the
-    * partition columns, a data column of the same name taking the
-    * partition type in place. */
-  def fileRelationSchema(spark: SparkSession, dataSchema: StructType,
-                         partitionSchema: StructType): StructType =
-    PartitioningUtils.mergeDataAndPartitionSchema(dataSchema.asNullable,
-      partitionSchema, spark.sessionState.conf.caseSensitiveAnalysis)._1
+  /** The frame `spark.read.options(options).parquet(…)` builds over an
+    * already listed `index` (`DataSource.resolveRelation`'s relation:
+    * the index's partition schema, `dataSchema` made nullable), so the
+    * paths are not globbed, checked and listed a second time. */
+  def parquetRelation(spark: SparkSession, index: InMemoryFileIndex,
+                      dataSchema: StructType,
+                      options: Map[String, String]): DataFrame =
+    ofRows(spark, LogicalRelation(HadoopFsRelation(index,
+      index.partitionSchema, dataSchema.asNullable, None,
+      new ParquetFileFormat, CaseInsensitiveMap(options))(spark)))
 }

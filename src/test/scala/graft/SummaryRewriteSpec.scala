@@ -138,4 +138,19 @@ class SummaryRewriteSpec extends SparkTestBase {
         "the re-run replaced the summary's files")
     } finally SummaryRewrite.clear()
   }
+
+  test("a constant output column rides the rewrite: the frame q177 " +
+    "returns reads only the summary") {
+    withSummary { _ =>
+      val tagged = aggQuery.withColumn("tag", lit(true))
+      assert(SummaryRewrite.readsOnlySummaries(tagged),
+        s"expected summary scan, got:\n${tagged.queryExecution.optimizedPlan}")
+    }
+    try {
+      val df = SparkEntry.queries("q177_summary_rewrite")(spark, sf)
+      assert(SummaryRewrite.readsOnlySummaries(df),
+        s"expected summary scan, got:\n${df.queryExecution.optimizedPlan}")
+      assert(df.collect().forall(_.getAs[Boolean]("gate_rewritten")))
+    } finally SummaryRewrite.clear()
+  }
 }
