@@ -201,30 +201,6 @@ object DailyJob {
     graft.operators.Upsert.upsertPartitionScoped(spark, historyRoot,
       "date", sessions, Seq("fullVisitorId", "visitId"))
 
-  /** The scale form of the six daily overwrites: ONE partitioned write
-    * per type with DYNAMIC partition overwrite — partition columns come
-    * from the data (`to_date(timestamp)`), and Spark replaces exactly
-    * the (year, month, day) partitions present in this batch, leaving
-    * every other day untouched. The path-per-day `run` writer must
-    * hand-build the target directory and trusts the caller to pass the
-    * matching jobDate; this one cannot clobber a day it didn't compute,
-    * which is the property a 1000-executor backfill needs (re-running
-    * any subset of days is idempotent and order-free). Layout is
-    * identical to `run`'s (`daily/type=X/year=/month=/day=`), so
-    * [[GaCatalog]] and every reader are unchanged.
-    *
-    * Restores the session's partitionOverwriteMode afterwards (the
-    * STATIC default would wipe sibling days — the failure mode the spec
-    * pins). */
-  def writeDailyPartitioned(spark: SparkSession, out: GaPipeline.Outputs,
-      outRoot: String, days: Seq[String],
-      catalogDb: Option[String] = Some("ga")): Unit =
-    writeTablesPartitioned(spark, Seq(
-      "sessions" -> out.sessions, "pageviews" -> out.pageviews,
-      "events" -> out.events, "products" -> out.products,
-      "transactions" -> out.transactions, "items" -> out.items),
-      outRoot, days, catalogDb)
-
   /** GROUP-ATOMIC daily export — the reference's six-table fan-out
     * (sessions + five hit types, `functions/ga_pipeline.py` export)
     * made TRANSACTIONAL: every table's day partitions stage as
@@ -287,7 +263,12 @@ object DailyJob {
     published
   }
 
-  /** Generic core: any (type, table-with-`timestamp`) set. */
+  /** ONE partitioned write per (type, table-with-`timestamp`) under
+    * DYNAMIC partition overwrite: Spark replaces exactly the
+    * `year=/month=/day=` leaves of `days` present in the batch and
+    * leaves every other day untouched (the STATIC default would wipe
+    * sibling days). Restores the session's partitionOverwriteMode
+    * afterwards. */
   def writeTablesPartitioned(spark: SparkSession,
       tables: Seq[(String, DataFrame)], outRoot: String, days: Seq[String],
       catalogDb: Option[String] = Some("ga")): Unit = {

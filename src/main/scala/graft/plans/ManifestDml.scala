@@ -264,9 +264,9 @@ case class GraftUpdateCommand(root: String, set: Map[String, DmlExpr],
   * commit: append publishes live + staged; static OVERWRITE is a full
   * replacement (DV refs cleared — every old file is gone, its deletes
   * inert); dynamic OVERWRITE replaces exactly the partitions the
-  * batch wrote. CAS loop: append and dynamic rebase onto interleaved
-  * commits (staged files are immutable); `rows_affected` = rows
-  * written. */
+  * batch wrote. Publishes through [[Manifest.commitAtHead]]: the
+  * batch stages once, and a lost slot re-picks the publish list at the
+  * new head; `rows_affected` = rows written. */
 case class GraftInsertCommand(root: String, query: LogicalPlan,
                               overwrite: Boolean, dynamic: Boolean,
                               partCols: Seq[String],
@@ -274,10 +274,10 @@ case class GraftInsertCommand(root: String, query: LogicalPlan,
   extends LeafRunnableCommand with DmlOutput {
   override def innerChildren: Seq[LogicalPlan] = Seq(query)
   override def run(spark: SparkSession): Seq[Row] = {
-    val (fs, rootP) = {
-      val p = new org.apache.hadoop.fs.Path(root)
-      (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-    }
+    if (overwrite && dynamic && partCols.isEmpty)
+      throw new UnsupportedOperationException(
+        "dynamic INSERT OVERWRITE needs a partitioned manifest table")
+    val (fs, rootP) = Manifest.fsOf(spark, root)
     // With declared CHECK constraints the batch is checkpointed once,
     // validated, and that SAME frame is staged (a violating INSERT
     // leaves no files and no commit; a non-deterministic source can
@@ -297,31 +297,24 @@ case class GraftInsertCommand(root: String, query: LogicalPlan,
       }
     val created = Manifest.stageUniqueParts(spark, fs, rootP, partCols, df)
     val n = Manifest.stagedRowCount(spark, fs, rootP, created)
-    var attempt = 0
-    while (attempt < 10) {
-      val (base, live) = Manifest.current(spark, root).getOrElse(
-        throw new IllegalStateException(s"no committed manifest under $root"))
-      val publish =
-        if (!overwrite) (live ++ created, None)
-        else if (!dynamic) (created, Some(Seq.empty[String]))
-        else {
-          if (partCols.isEmpty) throw new UnsupportedOperationException(
-            "dynamic INSERT OVERWRITE needs a partitioned manifest table")
-          // replacement is per LEAF partition at any depth: only the
-          // exact leaves this batch wrote are swapped
-          val touched = created.map(Manifest.leafDirOf(_, partCols)).toSet
-          (live.filterNot(f => touched(Manifest.leafDirOf(f, partCols))) ++
-            created, None)
-        }
-      Manifest.tryCommit(spark, root, publish._1, base, publish._2) match {
-        case Some(v) =>
-          spark.catalog.refreshByPath(root)
-          return Seq(Row(v, n))
-        case None => attempt += 1 // rebase: staged files are immutable
+    // the live files a publish keeps: all (append), none (static
+    // OVERWRITE — their DV refs go with them), or those outside the
+    // exact LEAF partitions, at any depth, this batch wrote (dynamic)
+    val keep: String => Boolean =
+      if (!overwrite) _ => true
+      else if (!dynamic) _ => false
+      else {
+        val touched = created.map(Manifest.leafDirOf(_, partCols)).toSet
+        f => !touched(Manifest.leafDirOf(f, partCols))
       }
+    // the staged files are immutable: a lost slot re-picks the publish
+    // list at the new head and discards nothing
+    val (v, _) = Manifest.commitAtHead(spark, root, 10) {
+      (_, live, dvs) => Some(Manifest.HeadPublish(live.filter(keep) ++ created,
+        if (overwrite && !dynamic) Nil else dvs, Nil, n))
     }
-    throw new IllegalStateException(
-      s"lost the INSERT commit race 10 times under $root")
+    spark.catalog.refreshByPath(root)
+    Seq(Row(v, n))
   }
 }
 

@@ -37,11 +37,21 @@ import org.apache.spark.sql.functions.col
   *  - VACUUM deletes unreferenced files AFTER the publish — pure
   *    garbage collection, never part of the correctness story.
   *
-  * Single-writer contract (documented, like the reference's daily
-  * batch): concurrent commits to one table need a compare-and-swap on
-  * the version, which a filesystem rename gives (second rename to the
-  * same name fails) — but this engine's jobs are serialized per table,
-  * so contention handling stays minimal.
+  * Concurrent writers (the reference runs up to two daily jobs at
+  * once): every publish claims version `v + 1` through [[tryCommit]]'s
+  * compare-and-swap, and a loser follows one of two rules.
+  *
+  *  - RE-PLAN AT THE HEAD ([[commitAtHead]]): DELETE, UPDATE, MERGE
+  *    and INSERT plan cheaply against the head, so a loser discards
+  *    what it wrote and plans again over the winner's snapshot. This
+  *    is what keeps keys unique: two MERGEs that both insert one new
+  *    key would, rebased, publish two rows for it; re-planned, the
+  *    loser's DV hides the winner's row.
+  *  - REBASE OR ABORT ([[commitRewriteCas]]): the copy-on-write
+  *    writers (OPTIMIZE, [[purgeDeletes]], partition and leaf
+  *    replacement, RENAME COLUMN) staged against an older version;
+  *    re-planning would repeat their rewrite, so a loser carries in
+  *    commits outside its scope and aborts on one inside it.
   *
   * Scale shape: the manifest is O(files) text, written once per commit
   * and read once per query plan; the staging write is sized by the
@@ -256,11 +266,11 @@ object Manifest {
   /** The compare-and-swap primitive of the commit protocol: attempt to
     * publish `files` as version `base + 1`, where `base` is the version
     * the caller PLANNED against. Exactly one of N racers for the same
-    * slot wins; losers get None and must re-read the log, re-validate
-    * against what actually landed, and rebase or abort (the loser path
-    * the round-10 verdict named missing — reference envelope allows two
-    * concurrent runs, `cloudformation/collector-ga.yaml:432-434`
-    * `MaxConcurrentRuns: 2`).
+    * slot wins; losers get None and must re-read the log, then re-plan
+    * ([[commitAtHead]]) or rebase or abort ([[commitRewriteCas]]) —
+    * the reference envelope allows two concurrent runs
+    * (`cloudformation/collector-ga.yaml:432-434`, `MaxConcurrentRuns:
+    * 2`).
     *
     * Atomicity of the slot claim is filesystem-specific, chosen per
     * scheme: HDFS-class stores reject a rename whose destination
@@ -513,10 +523,10 @@ object Manifest {
     *
     * Semantics are AS-OF the snapshot the predicate evaluated against:
     * on a CAS loss the artifact is discarded and the whole delete
-    * recomputes against the new current version (rows a racing append
-    * added ARE then candidates — same contract as running the DELETE a
-    * moment later). Already-deleted rows never re-match (the matching
-    * scan is itself DV-filtered), so DV artifacts never hold duplicate
+    * recomputes against the new head ([[commitAtHead]]; rows a racing
+    * append added ARE then candidates — same contract as running the
+    * DELETE a moment later). Already-deleted rows never re-match (the
+    * matching scan is itself DV-filtered), so DV artifacts never hold duplicate
     * (file, pos) pairs and per-file deleted counts stay exact for
     * [[countRows]].
     *
@@ -524,9 +534,8 @@ object Manifest {
     * commits nothing and returns the current version with 0. */
   def deleteWhere(spark: SparkSession, root: String,
                   cond: org.apache.spark.sql.Column,
-                  maxAttempts: Int = 10,
-                  afterPlan: () => Unit = () => ()): (Long, Long) =
-    deleteRows(spark, root, _.where(cond), maxAttempts, afterPlan)
+                  maxAttempts: Int = 10): (Long, Long) =
+    deleteRows(spark, root, _.where(cond), maxAttempts)
 
   /** The DML matching scan: the LIVE rows of version `v` (its deletion
     * vectors applied) as a raw [[scanOf]] over `files`, with the raw
@@ -577,41 +586,22 @@ object Manifest {
                      subjects: DataFrame, keys: Seq[String],
                      maxAttempts: Int = 10): (Long, Long) =
     deleteRows(spark, root, _.join(subjects.select(keys.map(col): _*)
-      .distinct(), keys, "left_semi"), maxAttempts, () => ())
+      .distinct(), keys, "left_semi"), maxAttempts)
 
-  /** `afterPlan` is the race-injection seam between an attempt's DV
-    * write and its CAS (the commitPartitionReplacementCas `afterStage`
-    * discipline): a spec lands a rival commit there to pin the loser
-    * path — discard the artifact, re-read the log, re-plan against the
-    * NEW snapshot — deterministically. */
   private def deleteRows(spark: SparkSession, root: String,
                          matcher: DataFrame => DataFrame,
-                         maxAttempts: Int,
-                         afterPlan: () => Unit): (Long, Long) = {
+                         maxAttempts: Int): (Long, Long) = {
     val (fs, rootP) = fsOf(spark, root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val (v, files) = current(spark, root).getOrElse(
-        throw new IllegalArgumentException(
-          s"no committed manifest under $root — bootstrap() it first"))
-      if (files.isEmpty) return (v, 0L) // empty table: nothing to delete
-      val dvs = dvsAt(spark, root, v)
+    commitAtHead(spark, root, maxAttempts) { (v, files, dvs) =>
+      if (files.isEmpty) None // empty table: nothing to delete
       // (path, pos) materialize as REAL columns before the matcher runs:
       // `_metadata` is a scan-level pseudo-column that does not survive
       // a matcher's own joins/projects (e.g. deleteMatching's semi-join)
-      val (dvName, n) = writeDv(spark, root, fs, rootP,
-        matcher(dmlScan(spark, root, rootP, files, v))).getOrElse(
-        return (v, 0L))
-      afterPlan()
-      tryCommit(spark, root, files, v, Some(dvs :+ dvName)) match {
-        case Some(nv) => return (nv, n)
-        case None => // lost the slot: discard and re-plan on the new snapshot
-          fs.delete(new Path(rootP, dvName), true)
-          attempt += 1
+      else writeDv(spark, root, fs, rootP,
+        matcher(dmlScan(spark, root, rootP, files, v))).map {
+        case (dvName, n) => HeadPublish(files, dvs :+ dvName, Seq(dvName), n)
       }
     }
-    throw new IllegalStateException(
-      s"lost the delete commit race $maxAttempts times under $root")
   }
 
   /** MERGE-ON-READ UPDATE: one atomic commit that (a) marks every row
@@ -638,45 +628,34 @@ object Manifest {
                   validate: DataFrame => Unit = _ => ()): (Long, Long) = {
     require(set.nonEmpty, "updateWhere needs at least one assignment")
     val (fs, rootP) = fsOf(spark, root)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val (v, files) = current(spark, root).getOrElse(
-        throw new IllegalArgumentException(
-          s"no committed manifest under $root — bootstrap() it first"))
-      if (files.isEmpty) return (v, 0L) // empty table: nothing to update
-      val dvs = dvsAt(spark, root, v)
-      val live = dmlScan(spark, root, rootP, files, v)
-      set.keys.foreach { c => require(
-        live.columns.exists(spark.sessionState.analyzer.resolver(_, c)),
-        s"assignment targets unknown column $c") }
-      // matched rows once: both the DV (old positions) and the staged
-      // rewrite (new values) derive from this frame
-      val matched = live.where(cond)
-        .localCheckpoint(true) // sever lineage: evaluate the match ONCE
-      val (dvName, n) = writeDv(spark, root, fs, rootP, matched)
-        .getOrElse(return (v, 0L))
-      val dvPath = new Path(rootP, dvName)
-      val updated = set.foldLeft(
-        matched.drop("__graft_path", "__graft_pos")) {
-        case (df, (c, e)) => df.withColumn(c, e)
-      }
-      // write-time gate (SQL CHECK constraints): the post-assignment
-      // rows must satisfy every declared check before anything stages;
-      // a violation discards the DV artifact and commits nothing
-      try validate(updated) catch { case e: Throwable =>
-        fs.delete(dvPath, true); throw e
-      }
-      val created = stageUniqueParts(spark, fs, rootP, partCols, updated)
-      tryCommit(spark, root, files ++ created, v, Some(dvs :+ dvName)) match {
-        case Some(nv) => return (nv, n)
-        case None => // lost the slot: discard artifacts, re-plan
-          fs.delete(dvPath, true)
-          created.foreach(c => fs.delete(new Path(rootP, c), false))
-          attempt += 1
+    commitAtHead(spark, root, maxAttempts) { (v, files, dvs) =>
+      if (files.isEmpty) None // empty table: nothing to update
+      else {
+        val live = dmlScan(spark, root, rootP, files, v)
+        set.keys.foreach { c => require(
+          live.columns.exists(spark.sessionState.analyzer.resolver(_, c)),
+          s"assignment targets unknown column $c") }
+        // matched rows once: both the DV (old positions) and the staged
+        // rewrite (new values) derive from this frame
+        val matched = live.where(cond)
+          .localCheckpoint(true) // sever lineage: evaluate the match ONCE
+        writeDv(spark, root, fs, rootP, matched).map { case (dvName, n) =>
+          val updated = set.foldLeft(
+            matched.drop("__graft_path", "__graft_pos")) {
+            case (df, (c, e)) => df.withColumn(c, e)
+          }
+          // write-time gate (SQL CHECK constraints): the post-assignment
+          // rows must satisfy every declared check before anything
+          // stages; a violation discards the DV artifact and commits
+          // nothing
+          try validate(updated) catch { case e: Throwable =>
+            fs.delete(new Path(rootP, dvName), true); throw e
+          }
+          val created = stageUniqueParts(spark, fs, rootP, partCols, updated)
+          HeadPublish(files ++ created, dvs :+ dvName, dvName +: created, n)
+        }
       }
     }
-    throw new IllegalStateException(
-      s"lost the update commit race $maxAttempts times under $root")
   }
 
   /** MERGE-ON-READ keyed MERGE (upsert): one atomic commit in which
@@ -702,28 +681,17 @@ object Manifest {
     val src = if (preMaterialized) source else source.localCheckpoint(true)
     val nSrc = src.count()
     if (nSrc == 0L) return (current(spark, root).get._1, 0L, 0L)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val (v, files) = current(spark, root).getOrElse(
-        throw new IllegalArgumentException(
-          s"no committed manifest under $root — bootstrap() it first"))
-      val dvs = dvsAt(spark, root, v)
-      val dv =
-        if (files.isEmpty) None // pure insert into an empty table
-        else writeDv(spark, root, fs, rootP, dmlScan(spark, root, rootP, files, v)
-          .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi"))
-      val created = stageUniqueParts(spark, fs, rootP, partCols, src)
-      tryCommit(spark, root, files ++ created, v,
-        Some(dvs ++ dv.map(_._1))) match {
-        case Some(nv) => return (nv, dv.fold(0L)(_._2), nSrc)
-        case None =>
-          dv.foreach(d => fs.delete(new Path(rootP, d._1), true))
-          created.foreach(c => fs.delete(new Path(rootP, c), false))
-          attempt += 1
-      }
+    val (v, matched) = commitAtHead(spark, root, maxAttempts) {
+      (v, files, dvs) =>
+        val dv =
+          if (files.isEmpty) None // pure insert into an empty table
+          else writeDv(spark, root, fs, rootP, dmlScan(spark, root, rootP, files, v)
+            .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi"))
+        val created = stageUniqueParts(spark, fs, rootP, partCols, src)
+        Some(HeadPublish(files ++ created, dvs ++ dv.map(_._1),
+          dv.map(_._1).toSeq ++ created, dv.fold(0L)(_._2)))
     }
-    throw new IllegalStateException(
-      s"lost the merge commit race $maxAttempts times under $root")
+    (v, matched, nSrc)
   }
 
   /** Exact row count of freshly STAGED files — `rows_affected` for a
@@ -889,6 +857,48 @@ object Manifest {
       if (base <= 0L) Set.empty[String]
       else filesAt(spark, root, base).filter(inScope).toSet
     commitRewriteCas(spark, root, base, replaced, created, inScope, maxAttempts)
+  }
+
+  /** One [[commitAtHead]] attempt's publish: the new version's live
+    * `files` and deletion-vector refs, the root-relative paths the
+    * attempt wrote that a lost slot discards, and the rows it affected. */
+  private[graft] case class HeadPublish(files: Seq[String], dvs: Seq[String],
+                                        discard: Seq[String], rows: Long)
+
+  /** THE publish of every writer that plans at the head (DELETE,
+    * UPDATE, MERGE, INSERT): each attempt reads the head `(v, files,
+    * dvs)` and hands it to `plan`, which returns None (nothing to
+    * commit — `(v, 0)` is returned) or a [[HeadPublish]] claimed as
+    * version `v + 1` through [[tryCommit]]. A lost slot deletes the
+    * attempt's `discard` paths and re-plans at the new head, so the
+    * writer's predicate, keys and DV always evaluate against the
+    * snapshot it publishes over (serializable: a MERGE re-planned over
+    * a rival's insert of the same key hides that row instead of adding
+    * a second). A writer whose staging was planned against an older
+    * version publishes through [[commitRewriteCas]] instead. Returns
+    * (committed version, rows). */
+  private[graft] def commitAtHead(spark: SparkSession, root: String,
+      maxAttempts: Int)(
+      plan: (Long, Seq[String], Seq[String]) => Option[HeadPublish])
+      : (Long, Long) = {
+    val (fs, rootP) = fsOf(spark, root)
+    var attempt = 0
+    while (attempt < maxAttempts) {
+      val (v, files) = current(spark, root).getOrElse(
+        throw new IllegalArgumentException(
+          s"no committed manifest under $root — bootstrap() it first"))
+      plan(v, files, dvsAt(spark, root, v)) match {
+        case None => return (v, 0L)
+        case Some(p) => tryCommit(spark, root, p.files, v, Some(p.dvs)) match {
+          case Some(nv) => return (nv, p.rows)
+          case None => // lost the slot: discard and re-plan at the head
+            p.discard.foreach(d => fs.delete(new Path(rootP, d), true))
+            attempt += 1
+        }
+      }
+    }
+    throw new IllegalStateException(
+      s"lost the commit race $maxAttempts times under $root")
   }
 
   /** THE publish of every writer that planned against version `base`:

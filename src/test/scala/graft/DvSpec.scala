@@ -544,14 +544,13 @@ class DvSpec extends SparkTestBase {
     "re-plans on the rival's snapshot, and both deletes land — " +
     "versions linear, no duplicate positions") {
     val path = freshTable()
-    var injected = false
-    val (v, n) = Manifest.deleteWhere(spark, path, col("id") === 2L,
-      afterPlan = () => if (!injected) {
-        injected = true
-        // rival lands a FULL delete commit inside the loser's window
-        val (rv, rn) = Manifest.deleteWhere(spark, path, col("id") === 5L)
-        assert(rv == 2L && rn == 1L)
-      })
+    val (v, n) = RivalCommit.around(path)({
+      // rival lands a FULL delete commit inside the loser's window
+      val (rv, rn) = Manifest.deleteWhere(spark, path, col("id") === 5L)
+      assert(rv == 2L && rn == 1L)
+    }) {
+      Manifest.deleteWhere(spark, path, col("id") === 2L)
+    }
     assert(v == 3L && n == 1L, "loser re-plans and takes the next slot")
     assert(snap(path) == Set(1L, 3L, 4L, 6L, 7L))
     assert(Manifest.dvsAt(spark, path, 3L).size == 2)
@@ -559,6 +558,56 @@ class DvSpec extends SparkTestBase {
     // countRows stays exact across the raced artifacts
     Manifest.writeStats(spark, path, 3L)
     assert(Manifest.countRows(spark, path) == 5L)
+  }
+
+  test("MERGE racing a MERGE that inserts the same new key: the loser " +
+    "re-plans at the head and its DV hides the rival's row — one row " +
+    "per key, versions linear") {
+    val path = freshTable()
+    val (v, matched, written) = RivalCommit.around(path)({
+      val (rv, rm, rw) = Manifest.mergeDv(spark, path,
+        Seq((8L, "d4", 81L)).toDF("id", "day", "v"), Seq("id"), Seq("day"))
+      assert(rv == 2L && rm == 0L && rw == 1L)
+    }) {
+      Manifest.mergeDv(spark, path,
+        Seq((8L, "d4", 82L), (1L, "d1", 11L)).toDF("id", "day", "v"),
+        Seq("id"), Seq("day"))
+    }
+    val rows = Manifest.read(spark, path).select("id", "v").as[(Long, Long)]
+      .collect().toSeq
+    assert(rows.groupBy(_._1).forall(_._2.size == 1), s"duplicate key: $rows")
+    assert(rows.toMap == Map(1L -> 11L, 2L -> 20L, 3L -> 30L, 4L -> 40L,
+      5L -> 50L, 6L -> 60L, 7L -> 70L, 8L -> 82L))
+    assert(Manifest.versions(spark, path) == Seq(1L, 2L, 3L))
+    assert(v == 3L && matched == 2L && written == 2L,
+      "the re-planned MERGE matches the rival's key 8 and key 1")
+  }
+
+  test("UPDATE racing a DELETE of another row in the same file: both " +
+    "land, countRows is exact, no (file, pos) pair is duplicated") {
+    val path = Files.createTempDirectory("graft_dv_race").toString + "/t"
+    Seq((1L, "d1", 10L), (2L, "d1", 20L), (3L, "d2", 30L))
+      .toDF("id", "day", "v").coalesce(1)
+      .write.partitionBy("day").parquet(path)
+    Manifest.bootstrap(spark, path)
+    val (v, n) = RivalCommit.around(path)({
+      val (rv, rn) = Manifest.deleteWhere(spark, path, col("id") === 2L)
+      assert(rv == 2L && rn == 1L)
+    }) {
+      Manifest.updateWhere(spark, path, col("id") === 1L,
+        Map("v" -> lit(111L)), partCols = Seq("day"))
+    }
+    assert(v == 3L && n == 1L, "the update re-plans and takes the next slot")
+    assert(Manifest.read(spark, path).select("id", "v").as[(Long, Long)]
+      .collect().toSet == Set((1L, 111L), (3L, 30L)))
+    assert(Manifest.versions(spark, path) == Seq(1L, 2L, 3L))
+    val pairs = spark.read
+      .parquet(Manifest.dvsAt(spark, path, v).map(d => s"$path/$d"): _*)
+      .select("file", "pos").as[(String, Long)].collect().toSeq
+    assert(pairs.size == 2 && pairs.distinct.size == pairs.size,
+      s"DV pairs: $pairs")
+    Manifest.writeStats(spark, path, v)
+    assert(Manifest.countRows(spark, path) == 2L)
   }
 
   test("VERSION AS OF through the catalog: a version-pinned " +

@@ -517,6 +517,31 @@ class SqlOpsSpec extends SparkTestBase {
     assert(spark.table(name).agg(sum("score")).as[Long].head() == 190L)
   }
 
+  test("INSERT INTO racing an append between stage and publish: the " +
+    "insert re-picks its publish list at the head and both batches stay " +
+    "live") {
+    val (root, name) = mkTable()                              // v1
+    val rootP = new org.apache.hadoop.fs.Path(root)
+    var rivalFiles: Seq[String] = Nil
+    val res = RivalCommit.around(root) {
+      rivalFiles = Manifest.stageUniqueParts(spark,
+        rootP.getFileSystem(spark.sessionState.newHadoopConf()), rootP,
+        Seq("day"), Seq((8L, "d8", 80L)).toDF("id", "day", "v"))
+      val (cur, live) = Manifest.current(spark, root).get
+      assert(Manifest.tryCommit(spark, root, live ++ rivalFiles, cur)
+        .isDefined)                                           // v2: rival
+    } {
+      spark.sql(s"INSERT INTO $name VALUES (9, 90, 'd9')")    // v3
+        .as[(Long, Long)].head()
+    }
+    assert(res == (3L, 1L), s"the insert took the next slot: $res")
+    val live = Manifest.current(spark, root).get._2
+    assert(rivalFiles.nonEmpty && rivalFiles.forall(live.contains),
+      "the rival's appended file must stay live")
+    assert(ids(s"SELECT id FROM $name") == Set(1L, 2L, 3L, 4L, 8L, 9L))
+    assert(Manifest.versions(spark, root) == Seq(1L, 2L, 3L))
+  }
+
   test("RENAME COLUMN refusal shapes: partition columns, name " +
     "collisions (logical AND prior physical), CHECK references") {
     val (_, name) = mkTable()
