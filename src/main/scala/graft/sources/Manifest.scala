@@ -467,8 +467,23 @@ object Manifest {
     * files are opened), partition columns as the raw strings. */
   def readSubset(spark: SparkSession, root: String, files: Seq[String],
                  v: Long): DataFrame =
-    readFiles(spark, root, files, dvsAt(spark, root, v),
-      schemaAt(spark, root, v), raw = true)
+    readSubsets(spark, root, Seq(files), v).head
+
+  /** [[readSubset]] of each of `groups`, one frame per group, all with
+    * one schema: the version's DV list and schema sidecar are read once
+    * for every group. With no sidecar, the first file by path across
+    * the groups gives the schema (the footer one read of all of them
+    * would infer from), declared for every group. */
+  private[graft] def readSubsets(spark: SparkSession, root: String,
+                                 groups: Seq[Seq[String]],
+                                 v: Long): Seq[DataFrame] = {
+    val dvs = dvsAt(spark, root, v)
+    val schema = schemaAt(spark, root, v).orElse(
+      if (groups.size < 2) None
+      else Some(scanOf(spark, fsOf(spark, root)._2,
+        Seq(groups.flatten.min), None, raw = true).schema))
+    groups.map(readFiles(spark, root, _, dvs, schema, raw = true))
+  }
 
   /** StructField metadata key listing a renamed column's PRIOR physical
     * names, oldest first — the schema-in-log column-mapping record
@@ -679,17 +694,23 @@ object Manifest {
     // one evaluation for all attempts; preMaterialized = the caller
     // already checkpointed (and possibly validated) exactly this frame
     val src = if (preMaterialized) source else source.localCheckpoint(true)
-    val nSrc = src.count()
-    if (nSrc == 0L) return (current(spark, root).get._1, 0L, 0L)
+    // the batch stages ONCE (the GraftInsertCommand order): its rows
+    // come from the staged footers, not a count job, and a lost slot
+    // re-plans only the DV — the staged files publish at any head
+    val created = stageUniqueParts(spark, fs, rootP, partCols, src)
+    val nSrc = stagedRowCount(spark, fs, rootP, created)
+    if (nSrc == 0L) {
+      created.foreach(f => fs.delete(new Path(rootP, f), false))
+      return (current(spark, root).get._1, 0L, 0L)
+    }
     val (v, matched) = commitAtHead(spark, root, maxAttempts) {
       (v, files, dvs) =>
         val dv =
           if (files.isEmpty) None // pure insert into an empty table
           else writeDv(spark, root, fs, rootP, dmlScan(spark, root, rootP, files, v)
             .join(src.select(keys.map(col): _*).distinct(), keys, "left_semi"))
-        val created = stageUniqueParts(spark, fs, rootP, partCols, src)
         Some(HeadPublish(files ++ created, dvs ++ dv.map(_._1),
-          dv.map(_._1).toSeq ++ created, dv.fold(0L)(_._2)))
+          dv.map(_._1).toSeq, dv.fold(0L)(_._2)))
     }
     (v, matched, nSrc)
   }

@@ -98,12 +98,13 @@ object ParquetSchema {
                       partitionTypes: Option[StructType])
       : Option[(InMemoryFileIndex, StructType)] = {
     val conf = spark.sessionState.conf
-    if (new ParquetOptions(options, conf).mergeSchema ||
-        paths.size == 1 && FileStreamSink.hasMetadata(paths,
-          spark.sessionState.newHadoopConfWithOptions(options), conf))
+    if (new ParquetOptions(options, conf).mergeSchema) return None
+    // one Hadoop conf for the sink check, the listing and the footer
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+    if (paths.size == 1 && FileStreamSink.hasMetadata(paths, hadoopConf, conf))
       return None
-    val (index, hadoopConf) = GraftDatasetFactory.parquetFileIndex(spark,
-      paths, options, partitionTypes)
+    val index = GraftDatasetFactory.parquetFileIndex(spark, paths, options,
+      partitionTypes, hadoopConf)
     val files = index.allFiles().sortBy(_.getPath.toString)
     val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
       ParquetFileWriter.PARQUET_METADATA_FILE)

@@ -28,24 +28,34 @@ object GraftDatasetFactory {
 
   /** The listing `spark.read.options(options).parquet(paths: _*)`
     * builds before it infers a schema (`DataSource.resolveRelation`):
-    * the same glob and existence checks (`private[sql]`), then an
-    * `InMemoryFileIndex` over the result. The Hadoop configuration the
-    * checks used comes back with it, for the footer read.
-    * `partitionTypes` declares partition column types the way a
-    * `.schema(…)` read does: a declared column is cast from its raw
-    * directory value, never inferred. */
+    * the same glob and existence checks (`private[sql]`) under
+    * `hadoopConf` (the session's, with `options`), then an
+    * `InMemoryFileIndex` over the result. `partitionTypes` declares
+    * partition column types the way a `.schema(…)` read does: a
+    * declared column is cast from its raw directory value, never
+    * inferred. */
   def parquetFileIndex(spark: SparkSession, paths: Seq[String],
                        options: Map[String, String],
-                       partitionTypes: Option[StructType])
-      : (InMemoryFileIndex, Configuration) = {
-    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+                       partitionTypes: Option[StructType],
+                       hadoopConf: Configuration): InMemoryFileIndex = {
     val globbed = DataSource.checkAndGlobPathIfNecessary(paths, hadoopConf,
       checkEmptyGlobPath = true, checkFilesExist = true,
       enableGlobbing = CaseInsensitiveMap(options)
         .get(DataSource.GLOB_PATHS_KEY).forall(_ == "true"))
-    (new InMemoryFileIndex(spark, globbed, options, partitionTypes,
-      FileStatusCache.getOrCreate(spark)), hadoopConf)
+    new InMemoryFileIndex(spark, globbed, options, partitionTypes,
+      FileStatusCache.getOrCreate(spark))
   }
+
+  /** One frame whose partitions are `frames`' partitions, in order: a
+    * job over it runs each frame's partitions as its own tasks — unlike
+    * `union`, which merges single-partition children into ONE partition
+    * (`spark.sql.unionOutputPartitioning`, on by default). Each frame is
+    * planned on its own and read through one RDD scan; `frames` share
+    * one schema. */
+  def concat(spark: SparkSession, frames: Seq[DataFrame]): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(
+      spark.sparkContext.union(frames.map(_.queryExecution.toRdd)),
+      frames.head.schema.asNullable)
 
   /** The frame `spark.read.options(options).parquet(…)` builds over an
     * already listed `index` (`DataSource.resolveRelation`'s relation:

@@ -287,6 +287,104 @@ class CompactionSpec extends SparkTestBase {
     assert(Manifest.filesAt(spark, path, v).size == 1)
     assert(Manifest.read(spark, path).count() == 60L)
   }
+
+  /** A `(w, m)`-partitioned manifest table: `files` files per leaf of
+    * `rows` rows each, ids 1..; returns (path, ids). */
+  private def fragmented(leaves: Seq[String], files: Int,
+                         rows: Int): (String, Set[Long]) = {
+    import graft.sources.Manifest
+    val path = Files.createTempDirectory("compact_bins").toString + "/t"
+    val written = for {
+      (w, li) <- leaves.zipWithIndex; f <- 0 until files
+    } yield {
+      val ids = (1 to rows).map(r => ((li * files + f) * rows + r).toLong)
+      ids.map((_, w, "x")).toDF("id", "w", "m").coalesce(1)
+        .write.mode("append").partitionBy("w", "m").parquet(path)
+      ids
+    }
+    Manifest.bootstrap(spark, path)
+    (path, written.flatten.toSet)
+  }
+
+  private def ids(path: String): Set[Long] =
+    graft.sources.Manifest.read(spark, path).select("id").as[Long].collect().toSet
+
+  test("a partitioned OPTIMIZE stages every bin in ONE Spark job whose " +
+    "plan has no shuffle and no broadcast exchange") {
+    import graft.sources.Manifest
+    val (path, all) = fragmented(Seq("1", "2", "3"), files = 4, rows = 25)
+    assert(Manifest.current(spark, path).get._2.size == 12)
+    var v = 0L
+    val seen = SparkWatch.during(spark) {
+      v = Compaction.compactAtomicLeaves(spark, path, Seq("w", "m"),
+        targetBytes = 1L << 30, keepVersions = 0)
+    }
+    // the salted shuffle + broadcast budget join it replaced ran 3 jobs
+    assert(seen.jobs == 1, s"${seen.jobs} jobs")
+    assert(seen.tasks == 3, s"one task per bin: ${seen.tasks} tasks")
+    assert(seen.plans.exists(_.toString.contains("InsertIntoHadoopFsRelation")),
+      s"the staging write's plan was not seen: ${seen.plans}")
+    assert(seen.exchanges.isEmpty, s"exchanges: ${seen.exchanges}")
+    assert(Manifest.filesAt(spark, path, v).size == 3, "one file per leaf")
+    assert(ids(path) == all)
+  }
+
+  test("with a small targetBytes a leaf packs into min(budget, files) " +
+    "files, largest file into the lightest bin; content is identical " +
+    "and the previous version replays") {
+    import graft.sources.Manifest
+    val sizes = Map("a" -> 10L, "b" -> 7L, "c" -> 5L, "d" -> 4L, "e" -> 1L)
+    assert(Compaction.pack(Seq("e", "d", "c", "b", "a"), sizes, 2) ==
+      Seq(Seq("a", "d"), Seq("b", "c", "e")))
+    assert(Compaction.pack(Seq("a", "b"), sizes, 5) == Seq(Seq("a"), Seq("b")))
+
+    val (path, all) = fragmented(Seq("1"), files = 8, rows = 40)
+    val (v0, live) = Manifest.current(spark, path).get
+    val bytes = live.map(f => new java.io.File(path, f).length()).sum
+    val target = bytes / 3
+    val budget = (bytes + target - 1) / target
+    assert(budget >= 3 && budget < live.size, s"budget $budget")
+    val v = Compaction.compactAtomicLeaves(spark, path, Seq("w", "m"),
+      targetBytes = target, keepVersions = 0)
+    val after = Manifest.filesAt(spark, path, v)
+    assert(after.size == math.min(budget, live.size.toLong),
+      s"${after.size} files for budget $budget: $after")
+    assert(after.toSet.intersect(live.toSet).isEmpty)
+    assert(ids(path) == all, "content must be identical")
+    assert(Manifest.readVersion(spark, path, v0).select("id").as[Long]
+      .collect().toSet == all, "the previous version replays")
+  }
+
+  test("a DV'd leaf whose rows are all deleted publishes no file for " +
+    "that leaf") {
+    import graft.sources.Manifest
+    val (path, all) = fragmented(Seq("1", "2"), files = 1, rows = 10)
+    Manifest.deleteWhere(spark, path, col("w") === "1")
+    val v = Compaction.compactAtomicLeaves(spark, path, Seq("w", "m"),
+      targetBytes = 1L << 30, keepVersions = 0)
+    val after = Manifest.filesAt(spark, path, v)
+    assert(after.nonEmpty && after.forall(_.startsWith("w=2/")),
+      s"the emptied leaf must publish no file: $after")
+    assert(Manifest.dvsAt(spark, path, v).isEmpty)
+    assert(ids(path) == all.filter(_ > 10L))
+  }
+
+  test("compactAtomicFlat takes the same path: one job, no shuffle") {
+    import graft.sources.Manifest
+    val path = Files.createTempDirectory("compact_flat").toString + "/t"
+    (1L to 80L).toDF("id").repartition(8).write.parquet(path)
+    Manifest.bootstrap(spark, path)
+    var v = 0L
+    val seen = SparkWatch.during(spark) {
+      v = Compaction.compactAtomicFlat(spark, path,
+        targetBytes = 1L << 30, keepVersions = 0)
+    }
+    // the repartition(n) shuffle it replaced ran 2 jobs
+    assert(seen.jobs == 1 && seen.tasks == 1, s"${seen.jobs} jobs, ${seen.tasks} tasks")
+    assert(seen.exchanges.isEmpty, s"exchanges: ${seen.exchanges}")
+    assert(Manifest.filesAt(spark, path, v).size == 1)
+    assert(ids(path) == (1L to 80L).toSet)
+  }
 }
 
 /** Local filesystem whose `getFileStatus` calls are counted — the

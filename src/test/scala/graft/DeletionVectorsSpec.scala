@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.LinkedBlockingQueue
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -28,33 +26,8 @@ class DeletionVectorsSpec extends SparkTestBase {
   private def ids(df: DataFrame): Set[Long] =
     df.select("id").as[Long].collect().toSet
 
-  /** Spark jobs started while `body` runs. A marker job closes the
-    * window: the listener bus is FIFO, so once the marker's start is
-    * seen every earlier start has been delivered too. */
-  private def jobsDuring(body: => Unit): Int = {
-    val seen = new LinkedBlockingQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobDescription("dv-spec-marker")
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      var n = 0
-      var d = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-      while (d != null && d != "dv-spec-marker") {
-        n += 1
-        d = seen.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-      }
-      assert(d != null, "marker job never reached the listener")
-      n
-    } finally sc.removeSparkListener(l)
-  }
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = SparkWatch.during(spark)(body).jobs
 
   test("a snapshot read of a DV'd version has no join and no " +
     "deletion-vector scan in its executed plan") {

@@ -748,4 +748,69 @@ class DvSpec extends SparkTestBase {
       assert(ids(spark.table("dv_plain2")) == Set(2L, 3L, 4L, 5L, 6L, 7L))
     } finally q2.stop()
   }
+
+  private def dataFilesOnDisk(path: String): Set[String] = {
+    val (fs, rootP) = Manifest.fsOf(spark, path)
+    Manifest.listDataFiles(fs, rootP).toSet
+  }
+
+  test("MERGE with an empty source into an unpartitioned table publishes " +
+    "no version, returns 0 rows and leaves no staged file behind") {
+    val path = Files.createTempDirectory("graft_dv_empty").toString + "/t"
+    Seq((1L, 10L), (2L, 20L)).toDF("id", "v").coalesce(1).write.parquet(path)
+    Manifest.bootstrap(spark, path)
+    val before = dataFilesOnDisk(path)
+    val (v, matched, written) = Manifest.mergeDv(spark, path,
+      Seq.empty[(Long, Long)].toDF("id", "v"), Seq("id"))
+    assert((v, matched, written) == (1L, 0L, 0L))
+    assert(Manifest.versions(spark, path) == Seq(1L))
+    assert(dataFilesOnDisk(path) == before, "the empty staged batch is deleted")
+  }
+
+  test("a MERGE runs no count query: the batch's rows come from the " +
+    "staged footers") {
+    val path = freshTable()
+    val batch = Seq((2L, "d1", 21L), (9L, "d4", 90L)).toDF("id", "day", "v")
+    var out = (0L, 0L, 0L)
+    val seen = SparkWatch.during(spark) {
+      out = Manifest.mergeDv(spark, path, batch, Seq("id"), Seq("day"))
+    }
+    assert(out == (2L, 1L, 2L))
+    // 7 when MERGE still counted its batch: the count query ran 2 (its
+    // adaptive shuffle stage and its result)
+    assert(seen.jobs == 5, s"${seen.jobs} jobs")
+  }
+
+  test("a MERGE that loses its slot re-plans only its DV: the batch staged " +
+    "before the race publishes as is, exactly once, one row per key") {
+    val path = freshTable()
+    val v1Files = Manifest.filesAt(spark, path, 1L).toSet
+    var stagedBeforeRace = Set.empty[String]
+    val (v, matched, written) = RivalCommit.around(path)({
+      stagedBeforeRace = dataFilesOnDisk(path) -- v1Files
+      Manifest.mergeDv(spark, path,
+        Seq((8L, "d4", 81L)).toDF("id", "day", "v"), Seq("id"), Seq("day"))
+      ()
+    }) {
+      Manifest.mergeDv(spark, path,
+        Seq((8L, "d4", 82L), (1L, "d1", 11L)).toDF("id", "day", "v"),
+        Seq("id"), Seq("day"))
+    }
+    assert((v, matched, written) == (3L, 2L, 2L))
+    val loserFiles = Manifest.filesAt(spark, path, 3L).toSet --
+      Manifest.filesAt(spark, path, 2L)
+    assert(stagedBeforeRace.nonEmpty && loserFiles == stagedBeforeRace,
+      s"published $loserFiles, staged before the race $stagedBeforeRace")
+    assert(dataFilesOnDisk(path) == Manifest.filesAt(spark, path, 3L).toSet,
+      "no second staging of the batch and no orphan")
+    val (fs, rootP) = Manifest.fsOf(spark, path)
+    val dvsOnDisk = fs.listStatus(new org.apache.hadoop.fs.Path(rootP,
+      Manifest.DvDir)).map(s => s"${Manifest.DvDir}/${s.getPath.getName}").toSet
+    assert(dvsOnDisk == Manifest.dvsAt(spark, path, 3L).toSet,
+      "the lost attempt's DV artifact is discarded")
+    val rows = Manifest.read(spark, path).select("id", "v").as[(Long, Long)]
+      .collect().toSeq
+    assert(rows.groupBy(_._1).forall(_._2.size == 1), s"duplicate key: $rows")
+    assert(rows.toMap.get(8L).contains(82L) && rows.toMap.get(1L).contains(11L))
+  }
 }
