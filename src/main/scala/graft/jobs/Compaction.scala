@@ -1,120 +1,31 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, GraftDatasetFactory, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.{GraftDatasetFactory, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Manifest, ParquetSchema}
+import graft.sources.Manifest
 
-/** Small-file compaction for a partitioned parquet tree — the
-  * operational job every long-lived table needs (streaming sinks and
-  * incremental appends accrete kilobyte files; at 100 TB the resulting
-  * open/seek overhead dominates scan time long before bytes do).
+/** Small-file compaction for a manifest table — the operational job
+  * every long-lived table needs (streaming sinks and incremental
+  * appends accrete kilobyte files; at 100 TB the resulting open/seek
+  * overhead dominates scan time long before bytes do). The SQL
+  * `OPTIMIZE` runs [[compactAtomicFlat]] on an unpartitioned table and
+  * [[compactAtomicLeaves]] on a partitioned one.
   *
-  * Per HIVE partition the job computes the current byte size, derives a
-  * target file count `ceil(bytes / targetBytes)` (min 1), and rewrites
-  * the partition with AT MOST that many files: rows are salted by
-  * `pmod(hash(whole row), n)` and shuffled by (partition cols, salt) —
-  * each shuffle task writes one file per partition value it holds, so a
-  * partition lands in ≤ n files (~targetBytes each; hash collisions can
-  * merge salt groups, never split them). Dynamic partition overwrite
-  * replaces EXACTLY the rewritten partitions; `partitions` scopes a run
-  * to a subset, leaving the rest byte-untouched (CompactionSpec pins
-  * that).
+  * Both know each leaf's files and sizes from the commit log and
+  * bin-pack them, one task and one file per bin, with no salt and no
+  * shuffle. The packed files stage next to the files they replace and
+  * one commit publishes them, so a crash anywhere leaves readers on
+  * exactly the old or exactly the new snapshot. Content is preserved
+  * verbatim; only layout changes.
   *
-  * Value-identity discipline: the rewrite read declares the partition
-  * column STRING ([[ParquetSchema.readRaw]]), so values round-trip as
-  * the exact directory strings (`hour=00` stays `00`, never re-inferred
-  * to int 0 and rewritten as a NEW `hour=0` directory family alongside
-  * the old one — silent row duplication). Budgets join on the Hive-unescaped
-  * value, and a loud require rejects any budget key the data does not
-  * carry rather than silently defaulting.
-  *
-  * Scale shape: one metadata listing (driver-side, O(files) — the thing
-  * being fixed; acceptable because it shrinks), one shuffle sized by the
-  * data rewritten, per-row budget lookup via a broadcast join on the
-  * O(partitions) counts table (not an O(partitions)-arm CASE), no
-  * collect of row data. Content is preserved verbatim; only layout
-  * changes. In-place rewrite is safe here because dynamic overwrite
-  * stages output and swaps partitions at COMMIT, after all source
-  * reads — but a mid-commit crash can lose the partition being
-  * swapped, so a production run points the write at a staging tree and
-  * renames (the TrainingArtifact versioning discipline).
-  *
-  * The manifest compactions ([[compactAtomicFlat]],
-  * [[compactAtomicLeaves]]) do not salt or shuffle: they know each
-  * leaf's files from the commit log and bin-pack them, one task and one
-  * file per bin.
+  * Value identity: the rewrite scans declare the partition columns
+  * STRING ([[Manifest.readSubsets]]), so values round-trip as the
+  * exact directory strings (`hour=00` stays `00`, never re-inferred to
+  * int 0 and rewritten as a NEW `hour=0` directory family alongside the
+  * old one — silent row duplication).
   */
 object Compaction {
-
-  /** Returns (unescaped partition value → (bytes, files)) for a
-    * one-level `col=value` partitioned tree. Listed via Hadoop's
-    * FileSystem API so every storage the table can live on (hdfs://,
-    * s3a://, file:, bare local paths) works — a java.io.File walk would
-    * silently return nothing for URI paths and turn compact() into a
-    * no-op on exactly the storage where small-file compaction matters.
-    * A root that does not exist fails loudly for the same reason. */
-  def partitionStats(spark: SparkSession, path: String): Map[String, (Long, Long)] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(root), s"compaction root does not exist: $path")
-    val parts = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-    parts.map { d =>
-      val name = d.getPath.getName
-      val files = fs.listStatus(d.getPath)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      val raw = name.substring(name.indexOf('=') + 1)
-      ExternalCatalogUtils.unescapePathName(raw) ->
-        ((files.map(_.getLen).sum, files.length.toLong))
-    }.toMap
-  }
-
-  /** Compacts partitions of `path` (one-level partitioning by `partCol`)
-    * to files of ~`targetBytes`; `partitions` (unescaped values) limits
-    * the rewrite to a subset — others are left byte-identical. */
-  def compact(spark: SparkSession, path: String, partCol: String,
-              targetBytes: Long = 128L * 1024 * 1024,
-              partitions: Option[Set[String]] = None): Unit = {
-    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val stats = partitionStats(spark, path)
-    val selected = partitions match {
-      case Some(ps) =>
-        val missing = ps.diff(stats.keySet)
-        require(missing.isEmpty,
-          s"partitions not present under $path: ${missing.toSeq.sorted.mkString(", ")}")
-        stats.view.filterKeys(ps).toMap
-      case None => stats
-    }
-    if (selected.isEmpty) return
-    val counts = selected.map { case (value, (bytes, _)) =>
-      value -> math.max(1L, (bytes + targetBytes - 1) / targetBytes)
-    }
-    import spark.implicits._
-    val df = ParquetSchema.readRaw(spark, Seq(path), Seq(partCol))
-      .filter(col(partCol).isin(counts.keys.toSeq: _*))
-    // loud mismatch guard: every budget key must exist in the data
-    val dataValues = df.select(partCol).distinct().as[String].collect().toSet
-    val unmatched = counts.keySet.diff(dataValues)
-    require(unmatched.isEmpty,
-      s"budget keys carry no data (value-identity broken?): ${unmatched.toSeq.sorted.mkString(", ")}")
-    val budget = broadcast(counts.toSeq.toDF(partCol, "_n"))
-    val salted = df.join(budget, partCol)
-      .withColumn("_salt",
-        pmod(hash(struct(df.columns.map(col): _*)), col("_n")))
-    salted
-      .repartition(col(partCol), col("_salt"))
-      .drop("_n", "_salt")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic") // this write only
-      .partitionBy(partCol)
-      .parquet(path)
-  }
-
-  /** The read-back frame, for parity checks. */
-  def readBack(spark: SparkSession, path: String): DataFrame =
-    ParquetSchema.read(spark, path)
 
   /** ATOMIC compaction of an UNPARTITIONED manifest table — the
     * one-leaf case of [[compactAtomicLeaves]]: the DV-filtered snapshot
@@ -141,8 +52,8 @@ object Compaction {
       keepVersions, afterStage)
   }
 
-  /** ATOMIC compaction of a partitioned manifest table — [[compact]]
-    * under the [[graft.sources.Manifest]] commit protocol (the
+  /** ATOMIC compaction of a partitioned manifest table under the
+    * [[graft.sources.Manifest]] commit protocol (the
     * compacted files stage as fresh appends next to the small files
     * they replace, one rename publishes; crash anywhere = old or new
     * snapshot) — at any partitioning depth (one level is

@@ -125,41 +125,8 @@ object DailyJob {
     * legitimately changed (reopened across the day boundary, revenue
     * restated) keeps its stale history row; this mode REPLACES it.
     *
-    * The history path is both input and output, so the merged frame is
-    * materialized to a staging tree first and swapped in by rename
-    * (the TrainingArtifact versioning discipline): a crash before the
-    * swap leaves the previous history untouched, and a crash INSIDE the
-    * two-rename window leaves it intact under `__old` (recover by
-    * renaming back). On local/HDFS the renames are atomic; an S3
-    * deployment points the staging write at the committer-backed output
-    * path instead. Between the two renames the path briefly does not
-    * exist — fine for a nightly batch with no concurrent readers; a
-    * LIVE table the streaming/daily composition reads continuously
-    * should use [[mergeHistoryVersioned]] (pointer swap, no window) or
-    * [[mergeHistoryPartitioned]] instead. */
-  def mergeHistory(spark: SparkSession, historyPath: String,
-                   sessions: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val existing = GaPipeline.loadHistory(spark, historyPath)
-    val merged = graft.operators.Upsert.upsert(existing, sessions,
-      Seq("fullVisitorId", "visitId"))
-    val staging = historyPath + "__staging"
-    merged.write.mode("overwrite").parquet(staging) // materializes the read
-    val fs = new Path(historyPath).getFileSystem(spark.sessionState.newHadoopConf())
-    val dst = new Path(historyPath)
-    val old = new Path(historyPath + "__old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(dst)) require(fs.rename(dst, old), s"swap-out failed: $dst")
-    require(fs.rename(new Path(staging), dst), s"swap-in failed: $staging")
-    fs.delete(old, true)
-  }
-
-  /** Reader-safe MERGE for LIVE history tables — closes
-    * [[mergeHistory]]'s swap window (between its two renames the
-    * history path does not exist, so a concurrent reader fails and
-    * crash recovery from `__old` is manual; tolerable for a nightly
-    * batch, not for a table the streaming/daily composition reads
-    * continuously). Versioned-directory + pointer-file layout:
+    * Reader-safe for LIVE history tables, through a versioned-directory
+    * + pointer-file layout:
     *
     *   <root>/_CURRENT       one-line pointer: the active version dir
     *   <root>/v=00000042/    immutable, complete parquet trees
@@ -187,19 +154,20 @@ object DailyJob {
       .map(v => GaPipeline.loadHistory(spark, s"$root/$v"))
       .getOrElse(GaPipeline.loadHistory(spark, s"$root/__nonexistent"))
 
-  /** The 100 TB form of [[mergeHistory]]: the history lives as a
-    * `date=`-partitioned tree and the merge is PARTITION-SCOPED
-    * ([[graft.operators.Upsert.upsertPartitionScoped]]) — only the
-    * dates present in the batch are read and rewritten; a year of
-    * untouched days is neither scanned nor written (where
-    * [[mergeHistory]] rewrites the whole table per batch). The key
-    * contract holds by construction: a session's partition is its
-    * start `date`, and a reopened session keeps its start date, so the
-    * updated row lands in the same partition as the stale one. */
+  /** The 100 TB form of the history merge: the history lives as a
+    * `date=`-partitioned manifest table and the merge is
+    * PARTITION-SCOPED ([[graft.operators.Upsert.upsertPartitionScopedAtomic]])
+    * — only the dates present in the batch are read and rewritten, and
+    * one manifest commit publishes them; a year of untouched days is
+    * neither scanned nor written (where [[mergeHistoryVersioned]]
+    * rewrites the whole table per batch). The key contract holds by
+    * construction: a session's partition is its start `date`, and a
+    * reopened session keeps its start date, so the updated row lands in
+    * the same partition as the stale one. */
   def mergeHistoryPartitioned(spark: SparkSession, historyRoot: String,
                               sessions: DataFrame): Unit =
-    graft.operators.Upsert.upsertPartitionScoped(spark, historyRoot,
-      "date", sessions, Seq("fullVisitorId", "visitId"))
+    graft.operators.Upsert.upsertPartitionScopedAtomic(spark, historyRoot,
+      Seq("date"), sessions, Seq("fullVisitorId", "visitId"))
 
   /** GROUP-ATOMIC daily export — the reference's six-table fan-out
     * (sessions + five hit types, `functions/ga_pipeline.py` export)
@@ -261,33 +229,6 @@ object DailyJob {
       }
     }
     published
-  }
-
-  /** ONE partitioned write per (type, table-with-`timestamp`) under
-    * DYNAMIC partition overwrite: Spark replaces exactly the
-    * `year=/month=/day=` leaves of `days` present in the batch and
-    * leaves every other day untouched (the STATIC default would wipe
-    * sibling days). Restores the session's partitionOverwriteMode
-    * afterwards. */
-  def writeTablesPartitioned(spark: SparkSession,
-      tables: Seq[(String, DataFrame)], outRoot: String, days: Seq[String],
-      catalogDb: Option[String] = Some("ga")): Unit = {
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      tables.foreach { case (tpe, df) =>
-        val d = to_date(col("timestamp"))
-        df.filter(d.isin(days: _*))
-          .withColumn("year", date_format(d, "yyyy"))
-          .withColumn("month", date_format(d, "MM"))
-          .withColumn("day", date_format(d, "dd"))
-          .write.mode("overwrite")
-          .partitionBy("year", "month", "day")
-          .parquet(s"$outRoot/daily/type=$tpe")
-      }
-      catalogDb.foreach(db => GaCatalog.register(spark, outRoot, db))
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
   }
 
   def main(args: Array[String]): Unit = {

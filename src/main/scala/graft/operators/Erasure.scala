@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Manifest, ManifestGroup, ParquetSchema}
+import graft.sources.{Manifest, ManifestGroup}
 
 /** Keyed erasure — the right-to-be-forgotten DELETE a serving store
   * must honor (GDPR art. 17 / CCPA): every row belonging to a set of
@@ -12,20 +12,22 @@ import graft.sources.{Manifest, ManifestGroup, ParquetSchema}
   * partitions that actually held the subjects' rows.
   *
   * Complements [[Upsert]]: MERGE replaces matched rows with new
-  * versions; erasure removes them. The partition-scoped form differs
-  * from `upsertPartitionScoped` in one fundamental way: a deletion
-  * request carries NO partition column — a subject's rows may sit under
-  * any partition — so the touched-partition set cannot be read off the
-  * source batch. It comes from one narrow key+partition projection of
-  * the target (columnar scan of two thin columns, the same stats pass a
-  * table format answers from its file-level indexes), after which only
-  * the affected partitions are read in full and rewritten.
+  * versions; erasure removes them. A deletion request carries NO
+  * partition column — a subject's rows may sit under any partition —
+  * so, unlike [[Upsert.upsertPartitionScopedAtomic]], the touched
+  * leaves cannot be read off the request batch. They come from one
+  * narrow key+partition projection of the target (columnar scan of a
+  * few thin columns, the same stats pass a table format answers from
+  * its file-level indexes), after which only the affected leaves are
+  * read in full and rewritten.
   *
-  * The second difference is the fully-erased partition: dynamic
-  * partition overwrite replaces only partitions PRESENT in the output,
-  * so a partition whose every row matched a subject would survive the
-  * rewrite untouched — the exact opposite of a deletion guarantee.
-  * Those directories are removed explicitly after the commit.
+  * Every form publishes through the [[graft.sources.Manifest]] commit
+  * log: copy-on-write for one table ([[erasePartitionScopedAtomic]])
+  * or a [[graft.sources.ManifestGroup]] of tables
+  * ([[eraseGroupAtomic]]), deletion vectors for a group
+  * ([[eraseGroupDv]]). In the copy-on-write forms a leaf whose every
+  * row matched stages no file, so it leaves the snapshot with the
+  * commit.
   */
 object Erasure {
 
@@ -39,130 +41,22 @@ object Erasure {
       keys, "left_anti")
   }
 
-  /** Partition-scoped erasure against a `partCol`-partitioned parquet
-    * tree, with an audit ledger. Steps:
-    *
-    *   1. ONE narrow projection (keys + partCol) of the target,
-    *      semi-joined against the broadcast subject batch, persisted —
-    *      it answers both the touched-partition list and the per-subject
-    *      erased-row counts. Column pruning makes this a thin scan even
-    *      when the table is wide.
-    *   2. Affected partitions (partition-pruned read) are anti-joined
-    *      and rewritten under dynamic partition overwrite — untouched
-    *      partitions keep their files byte-identical.
-    *   3. Partitions whose every row was erased are deleted via the
-    *      filesystem (dynamic overwrite cannot: they are absent from
-    *      the output). The write commits BEFORE the deletes, so a crash
-    *      between them leaves extra-but-consistent data, never loss.
-    *   4. If `ledgerPath` is set, one row per requested subject key —
-    *      including keys that matched nothing, n_rows_erased = 0, so
-    *      the audit trail proves every request was processed — appends
-    *      with `batch_id` and the touched-partition count.
-    *
-    * Like [[Upsert.upsertPartitionScoped]] this runs in the caller's
-    * session (raw-string partition scans, dynamic overwrite as an
-    * option of the rewrite alone) and stages output before the
-    * partition swap; the Compaction caveat about mid-commit crashes
-    * applies. */
-  def erasePartitionScoped(spark: SparkSession, targetPath: String,
-                           partCol: String, subjects: DataFrame,
-                           keys: Seq[String], batchId: String,
-                           ledgerPath: Option[String] = None): Unit = {
-    require(keys.nonEmpty, "erase needs at least one key column")
-    require(!keys.contains(partCol),
-      s"$partCol partitions the tree; key on the subject id columns")
-    val (fs, root) = Manifest.fsOf(spark, targetPath)
-    require(fs.exists(root), s"erasure target $targetPath does not exist")
-    // single evaluation of the subject keys
-    val subj = subjects.select(keys.map(col): _*).distinct().persist()
-    try {
-      // partCol reads as the raw directory string, so the rewrite below
-      // writes back to the identical directory names
-      val target = ParquetSchema.readRaw(spark, Seq(targetPath), Seq(partCol))
-      // 1. narrow matched projection: keys + partition, persisted —
-      // feeds the touched list AND the ledger counts
-      val matched = target
-        .select((keys :+ partCol).map(col): _*)
-        .join(broadcast(subj), keys, "left_semi")
-        .persist()
-      val touched = matched.select(col(partCol).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      val erasedPerKey = matched.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("n_rows_erased"))
-      // ledger rows cover EVERY requested key (zeros included).
-      // localCheckpoint(eager) BEFORE the rewrite: the ledger's lineage
-      // reads the very files the rewrite replaces and the delete
-      // removes — materialize now, write after the erasure completes.
-      val ledger = subj
-        .join(erasedPerKey, keys, "left")
-        .select(keys.map(col) ++ Seq(
-          coalesce(col("n_rows_erased"), lit(0L)).as("n_rows_erased"),
-          lit(batchId).as("batch_id"),
-          lit(touched.size.toLong).as("n_partitions_touched")): _*)
-        // bounded by the request batch — keep the audit file count sane
-        .coalesce(1)
-        .localCheckpoint(true)
-      if (touched.nonEmpty) {
-        // Fully-erased detection must happen BEFORE the rewrite (after
-        // it, such a partition still holds its ORIGINAL files — dynamic
-        // overwrite only replaces partitions present in the output — so
-        // it is indistinguishable from an untouched one). A partition is
-        // fully erased iff its matched count equals its total count; the
-        // total is a zero-data-column count over the pruned partitions
-        // (row-group metadata reads).
-        val matchedPerPart = matched
-          .groupBy(col(partCol).cast("string").as("_p"))
-          .agg(count(lit(1)).as("_m"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val totalPerPart = target
-          .filter(col(partCol).cast("string").isin(touched: _*))
-          .groupBy(col(partCol).cast("string").as("_p"))
-          .agg(count(lit(1)).as("_n"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val fullyErased = touched.filter(p =>
-          matchedPerPart.getOrElse(p, 0L) == totalPerPart(p))
-        // 2. rewrite affected partitions without the subjects' rows.
-        val affected = target
-          .filter(col(partCol).cast("string").isin(touched: _*))
-        val surviving = affected.join(broadcast(subj), keys, "left_anti")
-        surviving.write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic") // this write only
-          .partitionBy(partCol).parquet(targetPath)
-        // 3. the write commits first, the directory deletes follow — a
-        // crash between them leaves extra-but-consistent data.
-        fullyErased.foreach { p =>
-          // Hive-escape the value exactly as the writer did when it
-          // created the directory (spaces, colons, ... in part values)
-          val dir = s"$partCol=" + org.apache.spark.sql.catalyst.catalog
-            .ExternalCatalogUtils.escapePathName(p)
-          fs.delete(new org.apache.hadoop.fs.Path(root, dir), true)
-        }
-      }
-      // 4. audit trail last: a ledger row states the erasure COMPLETED
-      ledgerPath.foreach(lp =>
-        ledger.write.mode(SaveMode.Append).parquet(lp))
-      matched.unpersist()
-    } finally subj.unpersist()
-  }
-
-  /** ATOMIC partition-scoped erasure — [[erasePartitionScoped]] under
-    * the [[graft.sources.Manifest]] commit protocol, at any
-    * partitioning depth (the reference's own layout is three-level
-    * `year=/month=/day=`, `collector-ga.yaml:199` — a GDPR batch
-    * against it must prune and replace LEAVES; one level is
-    * `Seq(partCol)`). The two crash hazards of the dynamic-overwrite
-    * form disappear structurally: surviving rows stage as fresh
-    * appended files (nothing overwritten), and a FULLY-erased leaf
-    * needs no filesystem delete at all — it simply has no staged
+  /** Partition-scoped erasure of one manifest table, with an audit
+    * ledger, at any partitioning depth (the reference's own layout is
+    * three-level `year=/month=/day=`, `collector-ga.yaml:199` — a GDPR
+    * batch against it must prune and replace LEAVES; one level is
+    * `Seq(partCol)`). Surviving rows stage as fresh appended files
+    * (nothing overwritten), and a FULLY-erased leaf has no staged
     * files, so it is absent from the published manifest the instant
     * the rename lands (vacuum reclaims the bytes afterwards). The
     * publish is [[graft.sources.Manifest.commitLeafReplacementCas]]
     * against the version the erasure read: a concurrent commit to a
     * touched leaf aborts loudly instead of resurrecting or dropping
     * rows. Crash anywhere: manifest readers see exactly the old or
-    * exactly the new snapshot. Ledger semantics unchanged (every
-    * requested key gets a row, zeros included), written AFTER the
-    * commit so a ledger row still means the erasure is live. */
+    * exactly the new snapshot. The ledger has one row per requested
+    * key, zeros included, so the audit trail proves every request was
+    * processed; it is written AFTER the commit, so a ledger row means
+    * the erasure is live. */
   def erasePartitionScopedAtomic(spark: SparkSession, targetPath: String,
                                  partCols: Seq[String], subjects: DataFrame,
                                  keys: Seq[String], batchId: String,
@@ -357,7 +251,7 @@ object Erasure {
         Manifest.bootstrap(spark, root)
         val empty = Manifest.current(spark, root).forall(_._2.isEmpty)
         // ledger BEFORE the delete (its lineage reads the pre-delete
-        // snapshot), eagerly pinned — the erasePartitionScoped rule
+        // snapshot), eagerly pinned — the stageErasure rule
         val erasedPerKey =
           if (empty) subj.limit(0).withColumn("n_rows_erased", lit(0L))
           else Manifest.read(spark, root)

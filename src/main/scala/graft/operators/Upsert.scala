@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.{Manifest, ParquetSchema}
+import graft.sources.Manifest
 
 /** Keyed MERGE/upsert — the Delta-style `WHEN MATCHED THEN UPDATE ALL /
   * WHEN NOT MATCHED THEN INSERT ALL` semantics (SURVEY §2.8's proper fix
@@ -20,9 +20,9 @@ import graft.sources.{Manifest, ParquetSchema}
   * Shape: one equi-join on the key columns (the target side is the big
   * table — at scale the join prunes to the key projection and AQE
   * broadcasts the day-sized source) plus a union; no window, no
-  * collect. Writing the result back follows the staging-then-swap
-  * discipline ([[graft.jobs.TrainingArtifact]]) since the target path is
-  * also an input.
+  * collect. A partitioned table is merged in place by
+  * [[upsertPartitionScopedAtomic]], which reads only the touched leaves
+  * and publishes through the manifest commit log.
   */
 object Upsert {
 
@@ -57,89 +57,28 @@ object Upsert {
       .unionByName(source, allowMissingColumns = true)
   }
 
-  /** PARTITION-SCOPED merge against a `partCol`-partitioned parquet
-    * tree — the file-pruning shape a lakehouse MERGE has, and the 100 TB
-    * answer to [[upsert]]'s whole-table rewrite: only partitions
-    * carrying source rows are READ (partition-pruned scan) and
-    * REWRITTEN (dynamic partition overwrite); a year of untouched daily
-    * partitions is neither scanned nor written. New partition values in
-    * the source become inserts of whole new partitions.
+  /** PARTITION-SCOPED merge against a partitioned manifest table — the
+    * file-pruning shape a lakehouse MERGE has, and the 100 TB answer to
+    * [[upsert]]'s whole-table rewrite — at any partitioning depth (the
+    * reference's own serving layout is three-level
+    * `year=/month=/day=`; one level is `Seq(partCol)`). The touched set
+    * is the distinct LEAF tuples the source carries; only the live
+    * files under those leaves are READ (a manifest file subset — exact
+    * by construction, no per-level `isin` over-selecting the cross
+    * product); the merged leaves STAGE as fresh uniquely-named files
+    * (old files untouched) and publish through
+    * [[graft.sources.Manifest.commitLeafReplacementCas]] against the
+    * version the merge read — a concurrent commit to a touched leaf
+    * aborts loudly instead of being dropped. Files outside the touched
+    * leaves are carried by reference, byte-untouched; only then are the
+    * replaced files vacuumed. A crash at ANY point leaves manifest
+    * readers on exactly the old or exactly the new snapshot. An absent
+    * target bootstraps from the source; an empty source writes nothing.
     *
     * Contract the caller owns (true for session history keyed by start
-    * date): a key's rows live under ONE partition value, and a source
-    * row carries the SAME partition value as the target row it updates
-    * — otherwise the stale twin in the unscanned partition survives.
-    *
-    * Runs in the caller's session (the Compaction discipline): the
-    * scan declares `partCol` a string ([[ParquetSchema.readRaw]]) and
-    * dynamic overwrite is an option of this write alone. In-place
-    * read/rewrite is safe because dynamic overwrite stages output and
-    * swaps partitions at COMMIT, after all source reads — the
-    * Compaction caveat about mid-commit crashes applies identically. */
-  def upsertPartitionScoped(spark: org.apache.spark.sql.SparkSession,
-                            targetPath: String, partCol: String,
-                            source: DataFrame, keys: Seq[String]): Unit = {
-    require(keys.nonEmpty, "upsert needs at least one key column")
-    require(!keys.contains(partCol), s"$partCol partitions the tree; key on the id columns")
-    val (fs, root) = Manifest.fsOf(spark, targetPath)
-    // Persist a re-rooted copy of the source (a plan of its own, so the
-    // caller's cache of `source` is never unpersisted here, and no
-    // driver materialization): it is consumed up to three times
-    // (isEmpty/bootstrap write, touched-partition collect, merge write).
-    // Without the pin an expensive source triples its compute, and a
-    // NON-DETERMINISTIC one could yield a touched-partition list that
-    // diverges from the rows actually written — leaving stale twins in
-    // partitions the scan never visited. One evaluation ends both risks.
-    val src = spark.createDataFrame(source.rdd, source.schema).persist()
-    try {
-      if (!fs.exists(root)) {
-        // bootstrap: the whole source is new partitions. An EMPTY first
-        // batch writes nothing — a zero-file tree would make every later
-        // read of the target fail schema inference (an empty day is
-        // normal for a streaming sink's first triggers, not an error).
-        if (!src.isEmpty) src.write.partitionBy(partCol).parquet(targetPath)
-        return
-      }
-      // O(batch partitions) driver list — the "partitions touched" set a
-      // table format would read from its transaction log
-      val touched = src.select(col(partCol).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      require(!touched.contains(null),
-        s"source rows with NULL $partCol cannot be partition-scoped " +
-          "(they would land in the Hive default partition outside the scan scope)")
-      // the raw scan carries partCol as the directory string; cast it
-      // back to the SOURCE's type — the source typed the tree at
-      // bootstrap, so this round-trips value-identically
-      // (and a string-typed source keeps `hour=00` verbatim, the
-      // Compaction value-identity lesson)
-      val affected = ParquetSchema.readRaw(spark, Seq(targetPath), Seq(partCol))
-        .filter(col(partCol).cast("string").isin(touched: _*))
-        .withColumn(partCol, col(partCol).cast(source.schema(partCol).dataType))
-      upsert(affected, src, keys)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic") // this write only
-        .partitionBy(partCol)
-        .parquet(targetPath)
-    } finally src.unpersist()
-  }
-
-  /** ATOMIC partition-scoped merge — [[upsertPartitionScoped]] with the
-    * [[graft.sources.Manifest]] commit protocol closing its documented
-    * crash window, at any partitioning depth (the reference's own
-    * serving layout is three-level `year=/month=/day=`; one level is
-    * `Seq(partCol)`). The touched set is the distinct LEAF tuples the
-    * source carries; only the live files under those leaves are READ
-    * (a manifest file subset — exact by construction, no per-level
-    * `isin` over-selecting the cross product); the merged leaves STAGE
-    * as fresh uniquely-named files (old files untouched) and publish
-    * through [[graft.sources.Manifest.commitLeafReplacementCas]]
-    * against the version the merge read — a concurrent commit to a
-    * touched leaf aborts loudly instead of being dropped. Files
-    * outside the touched leaves are carried by reference,
-    * byte-untouched; only then are the replaced files vacuumed. A
-    * crash at ANY point leaves manifest readers on exactly the old or
-    * exactly the new snapshot. Same key/partition contract per leaf as
-    * the non-atomic form. */
+    * date): a key's rows live under ONE leaf, and a source row carries
+    * the SAME partition values as the target row it updates —
+    * otherwise the stale twin in the unscanned leaf survives. */
   def upsertPartitionScopedAtomic(spark: org.apache.spark.sql.SparkSession,
                                   targetPath: String, partCols: Seq[String],
                                   source: DataFrame, keys: Seq[String],
@@ -149,6 +88,11 @@ object Upsert {
     partCols.foreach(pc => require(!keys.contains(pc),
       s"$pc partitions the tree; key on the id columns"))
     val (fs, root) = Manifest.fsOf(spark, targetPath)
+    // One evaluation of the source, in a plan of its own so the
+    // caller's cache of `source` is never unpersisted here: it feeds the
+    // bootstrap check, the touched leaves and the merge, and a
+    // non-deterministic source could otherwise stage rows outside the
+    // leaves it named.
     val src = spark.createDataFrame(source.rdd, source.schema).persist()
     try {
       if (!fs.exists(root)) {

@@ -6,11 +6,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Upsert
 
 /** Streaming MERGE sink — the continuous face of
-  * [[graft.operators.Upsert.upsertPartitionScoped]]: each micro-batch
-  * of keyed rows is merged into a partitioned serving table, so a
-  * session finalized in batch N and RE-finalized in batch N+3 (late
-  * data reopened it within the watermark) UPDATES its serving row
-  * instead of appending a duplicate. Composed with
+  * [[graft.operators.Upsert.upsertPartitionScopedAtomic]]: each
+  * micro-batch of keyed rows is merged into a partitioned manifest
+  * serving table, so a session finalized in batch N and RE-finalized in
+  * batch N+3 (late data reopened it within the watermark) UPDATES its
+  * serving row instead of appending a duplicate. Composed with
   * [[StreamingSessionize.sessionWindowAgg]] this is the full
   * fixed-semantics successor of the reference's daily pipeline:
   * stream → watermarked session windows → keyed merge into serving.
@@ -22,12 +22,13 @@ import graft.operators.Upsert
   * anti-join-append). The merge doubles as the exactly-once mechanism;
   * no transactional sink needed.
   *
-  * Scale shape per batch: partition-pruned read of ONLY the serving
-  * partitions the batch touches, one key equi-join, dynamic partition
-  * overwrite of exactly those partitions — batch-sized work against an
-  * arbitrarily large serving table. The caller owns the
-  * upsertPartitionScoped contract (a key's rows live under one
-  * partition value, batch rows carry that value).
+  * Scale shape per batch: a read of ONLY the live files under the
+  * serving partitions the batch touches, one key equi-join, and one
+  * manifest commit replacing exactly those partitions — batch-sized
+  * work against an arbitrarily large serving table; a crash mid-batch
+  * leaves manifest readers on the previous batch's snapshot. The caller
+  * owns the upsertPartitionScopedAtomic contract (a key's rows live
+  * under one partition value, batch rows carry that value).
   */
 object StreamingUpsert {
 
@@ -42,7 +43,6 @@ object StreamingUpsert {
   def run(rows: DataFrame, servingRoot: String, checkpointDir: String,
           partCol: String, keys: Seq[String],
           outputMode: String = "append",
-          atomic: Boolean = false,
           mergeOnRead: Boolean = false): StreamingQuery =
     rows.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -60,21 +60,13 @@ object StreamingUpsert {
           // with a scheduled purgeDeletes amortizing materialization.
           // Redelivery stays idempotent: re-merging a batch replaces
           // rows with identical versions.
-          // atomic = the manifest-committed copy-on-write merge: a
-          // crash mid-batch leaves manifest readers on the previous
-          // batch's snapshot, never a partition mix; plain mode keeps
-          // the dynamic-overwrite path for readers that list
-          // directories.
           if (mergeOnRead) {
             graft.sources.Manifest.mergeDv(batch.sparkSession,
               servingRoot, batch, keys, Seq(partCol))
             ()
-          } else if (atomic)
+          } else
             Upsert.upsertPartitionScopedAtomic(batch.sparkSession,
               servingRoot, Seq(partCol), batch, keys)
-          else
-            Upsert.upsertPartitionScoped(batch.sparkSession, servingRoot,
-              partCol, batch, keys)
         }
       }
       .start()

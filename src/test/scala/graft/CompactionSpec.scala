@@ -6,25 +6,36 @@ import org.apache.spark.sql.functions._
 
 import graft.jobs.Compaction
 
-/** Small-file compaction: content-preserving, bounded file counts,
-  * untouched partitions survive the dynamic overwrite. */
+/** Small-file compaction of manifest tables: content-preserving,
+  * bounded file counts, untouched leaves carried byte-identically. */
 class CompactionSpec extends SparkTestBase {
   import spark.implicits._
 
   test("compaction shrinks a fragmented tree, preserves content exactly") {
+    import graft.sources.Manifest
     val path = Files.createTempDirectory("compact").toString + "/t"
     val docs = graft.sources.Tables.documents(spark, sf)
     // fragment: ~20 files per lang partition
     docs.repartition(20).write.partitionBy("lang").parquet(path)
-    val before = Compaction.partitionStats(spark, path)
+    Manifest.bootstrap(spark, path)
+    // leaf -> (bytes, files) of the snapshot at version v
+    def stats(v: Long): Map[String, (Long, Long)] = {
+      val files = Manifest.filesAt(spark, path, v)
+      val sizes = Manifest.fileSizes(spark, path, files)
+      files.groupBy(Manifest.leafDirOf(_, Seq("lang"))).map {
+        case (leaf, fls) => leaf -> ((fls.map(sizes).sum, fls.size.toLong))
+      }
+    }
+    val before = stats(Manifest.current(spark, path).get._1)
     assert(before.nonEmpty && before.values.forall(_._2 >= 10),
       s"fixture not fragmented: $before")
     val expected = docs.collect().toSet
 
     // 64 KiB target → a handful of files per partition
-    Compaction.compact(spark, path, "lang", targetBytes = 64L * 1024)
+    val v = Compaction.compactAtomicLeaves(spark, path, Seq("lang"),
+      targetBytes = 64L * 1024)
 
-    val after = Compaction.partitionStats(spark, path)
+    val after = stats(v)
     assert(after.keySet == before.keySet, "partition set changed")
     after.foreach { case (p, (bytes, files)) =>
       val target = math.max(1L, (before(p)._1 + 64 * 1024 - 1) / (64 * 1024))
@@ -33,55 +44,58 @@ class CompactionSpec extends SparkTestBase {
       assert(files < before(p)._2, s"$p did not shrink: $files")
     }
     // content round trip: exact same rows, column order restored by select
-    val back = Compaction.readBack(spark, path)
+    val back = Manifest.read(spark, path)
       .select(docs.columns.map(col): _*).collect().toSet
     assert(back == expected)
   }
 
   test("a scoped run rewrites only the named partition; others stay byte-identical") {
+    import graft.sources.Manifest
     val path = Files.createTempDirectory("compact2").toString + "/t"
-    val a = Seq((1L, "x", "en"), (2L, "y", "en")).toDF("id", "v", "lang")
-    val b = Seq((3L, "z", "de")).toDF("id", "v", "lang")
-    a.unionByName(b).repartition(5).write.partitionBy("lang").parquet(path)
+    Seq((1L, "x", "en"), (3L, "z", "de")).toDF("id", "v", "lang")
+      .write.partitionBy("lang").parquet(path)
+    Seq((2L, "y", "en"), (4L, "w", "de")).toDF("id", "v", "lang")
+      .write.mode("append").partitionBy("lang").parquet(path)
     def files(dir: String): Set[(String, Long)] =
       Option(new java.io.File(path, dir).listFiles()).getOrElse(Array.empty)
         .filter(f => f.getName.endsWith(".parquet"))
         .map(f => f.getName -> f.length()).toSet
+    // both leaves fragmented: only the predicate keeps de out
+    assert(files("lang=en").size == 2 && files("lang=de").size == 2,
+      "fixture not fragmented")
     val deBefore = files("lang=de")
-    assert(deBefore.nonEmpty)
 
-    Compaction.compact(spark, path, "lang", targetBytes = 1L << 30,
-      partitions = Some(Set("en")))
+    val v = Compaction.compactAtomicLeaves(spark, path, Seq("lang"),
+      targetBytes = 1L << 30, partitionPredicate = Some("lang = 'en'"))
 
     // en compacted to one file; de's file names AND sizes are untouched
-    assert(Compaction.partitionStats(spark, path)("en")._2 == 1L)
-    assert(files("lang=de") == deBefore, "dynamic overwrite touched de")
-    val back = Compaction.readBack(spark, path)
+    assert(Manifest.filesAt(spark, path, v).count(_.startsWith("lang=en/")) == 1)
+    assert(files("lang=de") == deBefore, "the scoped rewrite touched de")
+    val back = Manifest.read(spark, path)
       .select("id", "v", "lang").as[(Long, String, String)].collect().toSet
-    assert(back == Set((1L, "x", "en"), (2L, "y", "en"), (3L, "z", "de")))
-  }
-
-  test("unknown partition names fail loudly instead of compacting nothing") {
-    val path = Files.createTempDirectory("compact3").toString + "/t"
-    Seq((1L, "en")).toDF("id", "lang").write.partitionBy("lang").parquet(path)
-    val e = intercept[IllegalArgumentException] {
-      Compaction.compact(spark, path, "lang", partitions = Some(Set("xx")))
-    }
-    assert(e.getMessage.contains("xx"))
+    assert(back == Set((1L, "x", "en"), (2L, "y", "en"), (3L, "z", "de"),
+      (4L, "w", "de")))
   }
 
   test("typed-looking partition values round-trip as directory strings") {
     // hour=00..02: inference would read these as INT 0..2 and the
     // rewrite would emit a SECOND hour=0.. directory family next to the
-    // originals — every row then read twice. The inference-off rewrite
+    // originals — every row then read twice. The raw-string rewrite
     // must keep the zero-padded names.
     val path = Files.createTempDirectory("compact4").toString + "/t"
-    Seq((1L, "00"), (2L, "00"), (3L, "01"), (4L, "02"))
-      .toDF("id", "hour").repartition(4)
-      .write.partitionBy("hour").parquet(path)
-    Compaction.compact(spark, path, "hour", targetBytes = 1L << 30)
+    Seq((1L, "00"), (3L, "01"), (4L, "02"))
+      .toDF("id", "hour").write.partitionBy("hour").parquet(path)
+    Seq((2L, "00")).toDF("id", "hour")
+      .write.mode("append").partitionBy("hour").parquet(path)
+    def files00(): Int = new java.io.File(path, "hour=00").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(files00() == 2, "fixture: hour=00 must be fragmented")
+    Compaction.compactAtomicLeaves(spark, path, Seq("hour"),
+      targetBytes = 1L << 30)
+    assert(files00() == 1, "hour=00 must be rewritten")
     val dirs = Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory).map(_.getName).toSet
+      .filter(f => f.isDirectory && !f.getName.startsWith("_"))
+      .map(_.getName).toSet
     assert(dirs == Set("hour=00", "hour=01", "hour=02"),
       s"directory families changed: $dirs")
     val back = spark.read.parquet(path).select("id").as[Long].collect().toSet

@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Erasure
 
-/** Right-to-be-forgotten erasure: pure anti-join semantics and the
-  * partition-scoped scale path — only partitions holding subject rows
-  * rewritten, fully-erased partitions actually GONE, audit ledger rows
-  * for every request including no-match zeros. */
+/** Right-to-be-forgotten erasure: pure anti-join semantics, the
+  * streaming erasure sink, and the partition-scoped manifest path's
+  * no-match case — nothing rewritten, a ledger row for every request.
+  * The partition-scoped rewrite itself (partial and fully-erased
+  * leaves) is pinned in ManifestSpec and MultiLevelPartitionSpec. */
 class ErasureSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -20,58 +21,6 @@ class ErasureSpec extends SparkTestBase {
     val out = Erasure.erase(target, subjects, Seq("user_id"))
       .as[(Long, String, Long)].collect().toSet
     assert(out == Set((2L, "b", 20L), (3L, "c", 30L)))
-  }
-
-  test("partition-scoped erasure: partial partition rewritten, fully-" +
-    "erased partition deleted, untouched partition byte-identical, " +
-    "ledger covers every request incl. zero-match") {
-    val base = Files.createTempDirectory("erase_ps").toString
-    val path = s"$base/t"
-    val ledger = s"$base/ledger"
-    // day 01: users 1,2 (erase 1 → partial); day 02: user 3 only
-    // (erase 3 → fully erased); day 03: user 4 (untouched)
-    val t0 = Seq(
-      (1L, "2024-01-01", 10L), (2L, "2024-01-01", 20L),
-      (3L, "2024-01-02", 30L), (3L, "2024-01-02", 31L),
-      (4L, "2024-01-03", 40L)).toDF("user_id", "day", "v")
-    t0.write.partitionBy("day").parquet(path)
-    def partFiles(day: String): Map[String, Long] = {
-      val d = new java.io.File(s"$path/day=$day")
-      if (!d.exists()) Map.empty
-      else d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
-    val before03 = partFiles("2024-01-03")
-    assert(before03.nonEmpty)
-    Thread.sleep(1100) // mtime granularity guard
-    // subjects: 1 (partial day 01), 3 (all of day 02), 99 (no rows)
-    val subjects = Seq(Tuple1(1L), Tuple1(3L), Tuple1(99L)).toDF("user_id")
-    Erasure.erasePartitionScoped(spark, path, "day", subjects,
-      Seq("user_id"), "req-2024-06-01", Some(ledger))
-    // untouched partition: same files, same mtimes
-    assert(partFiles("2024-01-03") == before03)
-    // fully-erased partition directory is gone from disk
-    assert(!new java.io.File(s"$path/day=2024-01-02").exists(),
-      "a partition whose every row matched must be deleted, not survive " +
-        "dynamic overwrite")
-    // remaining data: exactly the non-subject rows
-    val out = spark.read.parquet(path)
-      .select(col("user_id"), col("day").cast("string"), col("v"))
-      .as[(Long, String, Long)].collect().toSet
-    assert(out == Set((2L, "2024-01-01", 20L), (4L, "2024-01-03", 40L)))
-    // and equals the pure-transform semantics exactly
-    val ref = Erasure.erase(t0, subjects, Seq("user_id"))
-      .as[(Long, String, Long)].collect().toSet
-    assert(out == ref)
-    // ledger: one row per requested subject, zero-match included
-    val led = spark.read.parquet(ledger)
-      .select(col("user_id"), col("n_rows_erased"), col("batch_id"),
-        col("n_partitions_touched"))
-      .as[(Long, Long, String, Long)].collect().toSet
-    assert(led == Set(
-      (1L, 1L, "req-2024-06-01", 2L),
-      (3L, 2L, "req-2024-06-01", 2L),
-      (99L, 0L, "req-2024-06-01", 2L)))
   }
 
   test("streaming erasure: requests in batch 2 erase rows admitted in " +
@@ -126,7 +75,7 @@ class ErasureSpec extends SparkTestBase {
     }
     val before = allFiles()
     Thread.sleep(1100)
-    Erasure.erasePartitionScoped(spark, path, "day",
+    Erasure.erasePartitionScopedAtomic(spark, path, Seq("day"),
       Seq(Tuple1(77L)).toDF("user_id"), Seq("user_id"), "req-x", Some(ledger))
     assert(allFiles() == before, "no partitions may be rewritten")
     val led = spark.read.parquet(ledger)

@@ -186,52 +186,6 @@ class GaPipelineSpec extends SparkTestBase {
       "re-run must not double-append (the reference defect, fixed)")
   }
 
-  test("mergeHistory: a reopened session's row is REPLACED where the " +
-    "anti-join mode would keep it stale") {
-    val tmp = Files.createTempDirectory("gamerge").toString
-    val paths = DailyJob.Paths("fixtures/ga/enriched", tmp, "2019-09-23")
-    DailyJob.run(spark, paths, catalogDb = None, idempotentHistory = true)
-    val before = spark.read.parquet(paths.historyPath)
-    val n = before.count()
-    assert(n > 0)
-    val key = before.orderBy("fullVisitorId", "visitId")
-      .select("fullVisitorId", "visitId").head()
-    val (kVis, kId) = (key.getString(0), key.get(1))
-    // the "re-run with a mutated session": same keys, one session's
-    // revenue restated
-    val restated = before.withColumn("totals_transactionRevenue",
-      when(col("fullVisitorId") === kVis && col("visitId") === kId,
-        lit("999990000")).otherwise(col("totals_transactionRevenue")))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.filter(!(col("fullVisitorId") === kVis && col("visitId") === kId))
-        .select(before.columns.sorted.map(col): _*)
-        .collect().map(_.toString).sorted.toSeq
-    // contrast, measured BEFORE the swap invalidates the lazy readers:
-    // the suppress-only anti-join (idempotentHistory's mechanism) would
-    // drop the restated row as a duplicate key and keep the stale value
-    val antiJoinKept = restated.join(
-      before.select("fullVisitorId", "visitId").distinct(),
-      Seq("fullVisitorId", "visitId"), "left_anti").count()
-    assert(antiJoinKept == 0,
-      "anti-join suppresses ALL re-run rows — it cannot deliver an update")
-    val beforeRows = rows(before)
-    DailyJob.mergeHistory(spark, paths.historyPath, restated)
-    val after = spark.read.parquet(paths.historyPath)
-    // no duplicate keys, no growth — and the mutation LANDED
-    assert(after.count() == n, "merge must not change cardinality")
-    assert(after.groupBy("fullVisitorId", "visitId").count()
-      .filter(col("count") > 1).count() == 0)
-    assert(after.filter(col("fullVisitorId") === kVis &&
-      col("visitId") === kId &&
-      col("totals_transactionRevenue") === "999990000").count() == 1,
-      "upsert must replace the matched row with the restated version")
-    // untouched rows carry over byte-identical
-    assert(rows(after) == beforeRows)
-    // crash-safety scaffolding is gone after a clean swap
-    assert(!new java.io.File(paths.historyPath + "__staging").exists())
-    assert(!new java.io.File(paths.historyPath + "__old").exists())
-  }
-
   test("mergeHistoryPartitioned rewrites only the batch's date partition; " +
     "other days' files untouched on disk") {
     val tmp = Files.createTempDirectory("gamergep").toString
@@ -415,9 +369,10 @@ class GaPipelineSpec extends SparkTestBase {
     assert(state2.head.getAs[String]("uploaded_at") == "2019-09-24T06:00:00")
   }
 
-  test("dynamic-partition daily write: re-running one day replaces only " +
-    "that day's partitions (backfill-safe, order-free)") {
+  test("group-atomic daily write: a re-run replaces only that day's " +
+    "partitions") {
     import org.apache.spark.sql.functions.{expr, lit => flit}
+    import graft.sources.{Manifest, ManifestGroup}
     val tmp = Files.createTempDirectory("gadyn").toString
     // two-day synthetic table (the GA fixture's sessions all date to one
     // Berlin day, so the boundary is built here): v=1 marks the batch
@@ -427,30 +382,36 @@ class GaPipelineSpec extends SparkTestBase {
         .select(expr("cast(ts_s as timestamp)").as("timestamp"), col("k"),
           flit(v).as("v"))
     }
+    // the same frame as every one of the six export tables
+    def outputs(df: org.apache.spark.sql.DataFrame) =
+      GaPipeline.Outputs(df, df, df, df, df, df)
+    val sessDir = s"$tmp/daily/type=sessions"
+    def day22Files(members: Map[String, Long]): Set[String] =
+      Manifest.filesAt(spark, sessDir, members(ManifestGroup.normKey(sessDir)))
+        .filter(_.contains("/day=22/")).toSet
     val both = batch(Seq(("2019-09-22 10:00:00", 1), ("2019-09-22 11:00:00", 2),
       ("2019-09-23 09:00:00", 3)), v = 1)
-    DailyJob.writeTablesPartitioned(spark, Seq("sessions" -> both), tmp,
+    val (_, m1) = DailyJob.writeDailyGroupAtomic(spark, outputs(both), tmp,
       Seq("2019-09-22", "2019-09-23"), catalogDb = None)
-    val sessDir = s"$tmp/daily/type=sessions"
-    val first = spark.read.parquet(sessDir)
+    val first = Manifest.read(spark, sessDir)
     assert(first.filter(col("day") === 22).count() == 2)
     assert(first.filter(col("day") === 23).count() == 1)
-    // re-run ONLY 09-23 with a CHANGED batch (v=2, two rows): 09-22 must
-    // survive byte-identical — under the STATIC default this same write
-    // wipes the sibling day's directory
+    val siblingBefore = day22Files(m1)
+    assert(siblingBefore.nonEmpty)
+    // re-run ONLY 09-23 with a CHANGED batch (v=2, two rows): 09-22's
+    // live files must carry forward unchanged
     val redo = batch(Seq(("2019-09-23 09:00:00", 3), ("2019-09-23 10:00:00", 4)),
       v = 2)
-    DailyJob.writeTablesPartitioned(spark, Seq("sessions" -> redo), tmp,
+    val (_, m2) = DailyJob.writeDailyGroupAtomic(spark, outputs(redo), tmp,
       Seq("2019-09-23"), catalogDb = None)
-    val second = spark.read.parquet(sessDir)
+    assert(day22Files(m2) == siblingBefore,
+      "the sibling day's live files must not change")
+    val second = Manifest.read(spark, sessDir)
     assert(second.filter(col("day") === 22 && col("v") === 1).count() == 2,
-      "sibling day clobbered — dynamic partition overwrite lost")
+      "sibling day clobbered")
     assert(second.filter(col("day") === 23).count() == 2)
     assert(second.filter(col("day") === 23 && col("v") === 2).count() == 2,
       "re-run day must be fully replaced, not appended")
-    // mode restored so later suites keep the session default
-    assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-      .equalsIgnoreCase("static"))
   }
 
   test("catalog statistics: ANALYZE persists row counts + column NDV " +

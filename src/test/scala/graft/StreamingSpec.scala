@@ -492,8 +492,9 @@ class StreamingSpec extends SparkTestBase {
         "partition without batch rows must never be rewritten")
       // redelivery (the at-least-once case): merging the same rows again
       // replaces them with identical versions — cardinality stable
-      graft.operators.Upsert.upsertPartitionScoped(spark, root, "day",
-        Seq((1L, "2024-01-01", 99L)).toDF("id", "day", "v"), Seq("id"))
+      graft.operators.Upsert.upsertPartitionScopedAtomic(spark, root,
+        Seq("day"), Seq((1L, "2024-01-01", 99L)).toDF("id", "day", "v"),
+        Seq("id"))
       assert(spark.read.parquet(root).count() == 3)
     } finally q.stop()
   }
@@ -505,8 +506,7 @@ class StreamingSpec extends SparkTestBase {
     val ckpt = java.nio.file.Files.createTempDirectory("suack").toString
     val input = MemoryStream[(Long, String, Long)](spark)
     val q = graft.streaming.StreamingUpsert.run(
-      input.toDF().toDF("id", "day", "v"), root, ckpt, "day", Seq("id"),
-      atomic = true)
+      input.toDF().toDF("id", "day", "v"), root, ckpt, "day", Seq("id"))
     try {
       input.addData((1L, "2024-01-01", 10L), (2L, "2024-01-02", 20L))
       q.processAllAvailable()

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.Upsert
 
 /** Keyed MERGE/upsert: table-level semantics and the partition-scoped
-  * scale path (only touched partitions read/rewritten). */
+  * manifest path (only touched partitions read/rewritten). */
 class UpsertSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -60,7 +60,8 @@ class UpsertSpec extends SparkTestBase {
     // source touches day 02 (update id=3) and day 04 (insert id=6)
     val source = Seq((3L, "2024-01-02", 333L), (6L, "2024-01-04", 60L))
       .toDF("id", "day", "v")
-    Upsert.upsertPartitionScoped(spark, path, "day", source, Seq("id"))
+    Upsert.upsertPartitionScopedAtomic(spark, path, Seq("day"), source,
+      Seq("id"))
     // untouched partitions: same files, same mtimes — never rewritten
     assert(partFiles("2024-01-01") == before01)
     assert(partFiles("2024-01-03") == before03)
@@ -82,10 +83,11 @@ class UpsertSpec extends SparkTestBase {
   test("partition-scoped merge bootstraps an absent target from the source") {
     val path = Files.createTempDirectory("upsert_boot").toString + "/t"
     val source = Seq((1L, "2024-01-01", 1L)).toDF("id", "day", "v")
-    Upsert.upsertPartitionScoped(spark, path, "day", source, Seq("id"))
+    Upsert.upsertPartitionScopedAtomic(spark, path, Seq("day"), source,
+      Seq("id"))
     assert(spark.read.parquet(path).count() == 1)
     // second batch merges normally
-    Upsert.upsertPartitionScoped(spark, path, "day",
+    Upsert.upsertPartitionScopedAtomic(spark, path, Seq("day"),
       Seq((1L, "2024-01-01", 2L)).toDF("id", "day", "v"), Seq("id"))
     val out = spark.read.parquet(path).select("id", "v")
       .as[(Long, Long)].collect().toSeq
@@ -97,8 +99,9 @@ class UpsertSpec extends SparkTestBase {
     val path = Files.createTempDirectory("upsert_empty").toString + "/t"
     val none = Seq.empty[(Long, String, Long)].toDF("id", "day", "v")
     // empty FIRST batch must not create a schemaless zero-file tree
-    Upsert.upsertPartitionScoped(spark, path, "day", none, Seq("id"))
-    Upsert.upsertPartitionScoped(spark, path, "day",
+    Upsert.upsertPartitionScopedAtomic(spark, path, Seq("day"), none,
+      Seq("id"))
+    Upsert.upsertPartitionScopedAtomic(spark, path, Seq("day"),
       Seq((1L, "2024-01-01", 1L)).toDF("id", "day", "v"), Seq("id"))
     assert(spark.read.parquet(path).count() == 1)
     // empty LATER batch: nothing touched
@@ -106,21 +109,12 @@ class UpsertSpec extends SparkTestBase {
       .listFiles().filter(_.getName.endsWith(".parquet"))
       .map(x => x.getName -> x.lastModified()).toMap
     Thread.sleep(1100)
-    Upsert.upsertPartitionScoped(spark, path, "day", none, Seq("id"))
+    Upsert.upsertPartitionScopedAtomic(spark, path, Seq("day"), none,
+      Seq("id"))
     val after = new java.io.File(s"$path/day=2024-01-01")
       .listFiles().filter(_.getName.endsWith(".parquet"))
       .map(x => x.getName -> x.lastModified()).toMap
     assert(after == f, "empty merge must not rewrite anything")
     assert(spark.read.parquet(path).count() == 1)
-  }
-
-  test("caller-session confs survive a partition-scoped merge untouched") {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(key, "STATIC")
-    val path = Files.createTempDirectory("upsert_conf").toString + "/t"
-    Upsert.upsertPartitionScoped(spark, path, "day",
-      Seq((1L, "2024-01-01", 1L)).toDF("id", "day", "v"), Seq("id"))
-    assert(spark.conf.get(key, "STATIC") == prev,
-      "merge must not leak conf changes into the caller's session")
   }
 }

@@ -88,18 +88,28 @@ class WriterSessionSpec extends SparkTestBase {
   }
 
   test("no writer package clones a session") {
-    val dirs = Seq("sources", "jobs", "operators", "plans")
+    val dirs = Seq("sources", "jobs", "operators", "plans", "streaming")
       .map(d => new java.io.File(s"src/main/scala/graft/$d"))
     assert(dirs.forall(_.isDirectory), s"run from the project root: $dirs")
     def sources(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val hits = dirs.flatMap(sources).flatMap { f =>
-      Files.readAllLines(f.toPath).asScala.zipWithIndex.collect {
-        case (l, i) if l.contains("newSession()") => s"${f.getPath}:${i + 1}"
+    val files = dirs.flatMap(sources)
+    val forbidden = Seq(
+      "newSession()" -> ("writers run in the caller's session; partition " +
+        "values are declared strings"),
+      "partitionOverwriteMode\", \"dynamic\"" -> ("writers publish through " +
+        "the manifest commit log; on a crash, dynamic partition overwrite " +
+        "can leave a mix of old and new partitions"))
+    val failures = forbidden.flatMap { case (pattern, reason) =>
+      val hits = files.flatMap { f =>
+        Files.readAllLines(f.toPath).asScala.zipWithIndex.collect {
+          case (l, i) if l.contains(pattern) => s"${f.getPath}:${i + 1}"
+        }
       }
+      if (hits.isEmpty) None
+      else Some(s"$reason — $pattern at: ${hits.mkString(", ")}")
     }
-    assert(hits.isEmpty, "writers run in the caller's session; partition " +
-      s"values are declared strings — newSession() at: ${hits.mkString(", ")}")
+    assert(failures.isEmpty, failures.mkString("; "))
   }
 }
